@@ -481,7 +481,18 @@ def _recv_exact(sock: socket.socket, n: int) -> Optional[bytes]:
     return buf
 
 
+def _nodelay(sock: socket.socket) -> socket.socket:
+    # Each frame is one sendall; with Nagle on, a frame that follows
+    # another (a stream's next batch, its end frame) would wait for the
+    # peer's delayed ACK of the first.
+    sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, True)
+    return sock
+
+
 class _Handler(socketserver.BaseRequestHandler):
+    def setup(self) -> None:
+        _nodelay(self.request)
+
     def handle(self) -> None:
         svc: FactStoreRpcService = self.server.rpc_service  # type: ignore[attr-defined]
         try:
@@ -544,8 +555,11 @@ class RpcChannel:
     def __init__(self, host: str, port: int):
         self.host, self.port = host, port
 
+    def _connect(self) -> socket.socket:
+        return _nodelay(socket.create_connection((self.host, self.port)))
+
     def unary(self, service: str, method: str, request: dict) -> dict:
-        with socket.create_connection((self.host, self.port)) as s:
+        with self._connect() as s:
             _send_frame(s, {"service": service, "method": method, "request": request})
             frame = _recv_frame(s)
         if frame is None:
@@ -555,7 +569,7 @@ class RpcChannel:
         return frame["response"]
 
     def stream(self, service: str, method: str, request: dict) -> Iterator[dict]:
-        s = socket.create_connection((self.host, self.port))
+        s = self._connect()
         try:
             _send_frame(s, {"service": service, "method": method, "request": request})
             while True:

@@ -468,3 +468,31 @@ def test_rpc_naive_timestamp_and_zero_limit(fs):
     with pytest.raises(RpcError):
         svc.call("FactService", "FindFactsBySubject",
                  {"storeName": "tz-store", "subject": "a", "limit": -1})
+
+
+def test_wire_sockets_set_tcp_nodelay(monkeypatch):
+    """Both ends of a wire call turn Nagle off, so a stream's next frame
+    never waits for the peer's delayed ACK. No engine call is made."""
+    import socket
+
+    from factstore_spark import rpc
+
+    seen = []
+    handle = rpc._Handler.handle
+
+    def recording_handle(self):
+        seen.append(self.request.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+        handle(self)
+
+    monkeypatch.setattr(rpc._Handler, "handle", recording_handle)
+    server = RpcServer(None).start()
+    try:
+        ch = RpcChannel(server.host, server.port)
+        with ch._connect() as s:
+            assert s.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY) != 0
+        with pytest.raises(RpcError) as e:
+            ch.unary("NoService", "Nothing", {})
+        assert e.value.code == "UNIMPLEMENTED"
+    finally:
+        server.stop()
+    assert seen and all(v != 0 for v in seen)
