@@ -1,14 +1,17 @@
 """Optimistic (lock-free) commit backend — the cluster-grade protocol.
 
-The default backend serializes appends with a per-store flock
-(layout.py), which is single-node by construction. This backend proves
-the documented Delta/Iceberg mapping (layout.py module docstring): a
-commit CLAIMS its sequence number by atomically creating
-``commit_log/<seq>.json``; losers detect the conflict, re-read the log,
-re-evaluate their append conditions against the new state, and retry —
-exactly the optimistic-transaction shape of the reference's FDB backend
-(FdbFactAppender.kt:33-65, conflict ranges -> retry) and of a Delta
-``_delta_log`` commit.
+Both backends run ONE append protocol (layout.py module docstring): an
+attempt snapshots the log, checks the idempotency key, evaluates the
+condition and calls ``StoreLayout.append_commit``, which hands the
+finished record to the backend's publish primitive. The flock backend's
+primitive appends a log line under a per-store lock, which is
+single-node by construction. This backend's primitive CLAIMS the seq by
+atomically creating ``commit_log/<seq>.json``; a loser's
+``append_commit`` returns None, and its ``run_append`` loop
+re-reads the log, re-evaluates the append conditions against the new
+state and retries — exactly the optimistic-transaction shape of the
+reference's FDB backend (FdbFactAppender.kt:33-65, conflict ranges ->
+retry) and of a Delta ``_delta_log`` commit.
 
 The atomic primitive — create a named immutable slot, failing if the
 name is taken — is PLUGGABLE (storage/cas.py): hardlink-as-O_EXCL on a
@@ -34,14 +37,16 @@ Bulk ingest uses reserve-then-publish: positions are baked into the
 parquet data, so the position RANGE is reserved first with a zero-row
 claim (its ``max_position`` raises the head, making the range
 unstealable — crash leaves a harmless hole in the sparse position
-space), the data is then written at leisure, and a second claim
-publishes the files. Subject heads are DERIVED from the commit log
+space), the data is then written at leisure, and ``publish_bulk`` — the
+same record code the flock backend runs — publishes the files with a
+second claim (``run_bulk``). Subject heads are DERIVED from the commit log
 (storage/heads.py): the append path writes no per-subject state at all,
 so lock-free writers cannot interleave on it — ``last_fact_of_subject``
 resolves through the log's subj_fps summaries plus the maintenance-
 folded snapshot, exact at any staleness.
 
-Maintenance (compaction, orphan sweep) still takes the flock: those are
+Maintenance (compaction, orphan sweep) still takes a lock — a TTL lease
+claimed through the same CAS primitive (``commit_lock``): those are
 rare, coarse operations where mutual exclusion is the simpler contract;
 appends never touch it.
 """
@@ -50,29 +55,30 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import time
 import uuid
 from typing import Optional
 
+from ..schema import POSITION_STRIDE
 from .layout import (
-    COMMITS_FILE,
     CommitRecord,
     StoreLayout,
     _resolve_checkpoints,
     commit_record_from_dict,
-    commit_subj_fps,
-    commit_tag_fps,
+    utcnow_us,
 )
 
 COMMIT_LOG_DIR = "commit_log"
 
 
 class OptimisticStoreLayout(StoreLayout):
-    """StoreLayout whose append path is optimistic claim-retry instead
-    of flock-serialized. Read paths are inherited unchanged (they
-    resolve data files through ``read_commits``, which here merges the
-    claim directory with any legacy ``commits.jsonl`` lines, e.g. those
-    written by compaction under the maintenance lock)."""
+    """StoreLayout whose publish primitive is a CAS slot claim, driven
+    by claim-retry instead of the flock. Read paths are inherited
+    unchanged (they resolve data files through ``read_commits``, which
+    here merges the claim directory with any legacy ``commits.jsonl``
+    lines, e.g. those written by compaction under the maintenance
+    lock)."""
 
     def __init__(self, store_dir: str, slot_spec: str = ""):
         super().__init__(store_dir)
@@ -372,76 +378,73 @@ class OptimisticStoreLayout(StoreLayout):
             if tmt is not None and time.time() - tmt > self.RECLAIM_TTL:
                 self.slots.delete(token)
 
-    # -- row-append protocol ------------------------------------------------
+    # -- the append protocol: claim-retry runners + the CAS publish ----------
 
-    def try_append_commit(
-        self,
-        rows: list[dict],
-        appended_at,
-        idempotency_key: Optional[str],
-        commits: list[CommitRecord],
-    ):
-        """One optimistic attempt against the ``commits`` snapshot:
-        write the data file, then claim the next seq. Returns
-        (seq, positions) on success, None on conflict (caller re-reads,
-        re-evaluates conditions, retries)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def log_snapshot(self) -> list[CommitRecord]:
+        """The explicit merged log (no derived view here). The attempt's
+        idempotency check and its commit's next_seq both read THIS
+        snapshot: a rival commit landing after it takes that seq first,
+        so the claim loses and the retry re-checks the key. Letting
+        next_seq re-read the log instead would claim past the rival and
+        apply an idempotent retry twice."""
+        return self.read_commits()
 
-        from ..schema import FACT_ARROW_SCHEMA, POSITION_STRIDE
+    def run_append(self, attempt):
+        """Drive one row append by claim-retry (the FDB-transaction
+        shape itself, FdbFactAppender.kt:33-65): a lost claim means
+        another commit serialized ahead of us, so the attempt re-reads
+        the log and RE-EVALUATES its condition against the new state.
+        Under SUSTAINED contention (the r12 soak: 8 writers hammering
+        one store) a bare loop keeps every loser re-colliding with the
+        same rivals each round — measured 5.7-6.0 conflicts/commit at 8
+        writers. Jittered exponential backoff desynchronizes the losers
+        (1.1-2.8 measured, sub-linear in writers) while adding nothing
+        to the uncontended path (first retry is sub-millisecond).
+        Numbers: docs/SCALE.md round-13 soak."""
+        for attempt_no in range(256):
+            out = attempt()
+            if out is not None:
+                return out[0]
+            time.sleep(
+                random.uniform(0.0, min(0.05, 0.0005 * (1 << min(attempt_no, 7))))
+            )
+        raise RuntimeError("append contention: 256 optimistic retries exhausted")
 
-        seq = self.next_seq(commits)
-        base = seq * POSITION_STRIDE
-        positions = [base + i for i in range(len(rows))]
-        for row, pos in zip(rows, positions):
-            row["position"] = pos
-
-        final = None
-        fname = None
-        if rows:
-            fname = f"commit-{seq:010d}-{uuid.uuid4().hex[:8]}.parquet"
-            final = os.path.join(self.data_dir, fname)
-            table = pa.Table.from_pylist(rows, schema=FACT_ARROW_SCHEMA)
-            tmp = os.path.join(self.store_dir, f".tmp-{uuid.uuid4().hex}.parquet")
-            pq.write_table(table, tmp)
-            os.rename(tmp, final)
-
-        record = {
-            "seq": seq,
-            "rows": len(rows),
-            "appended_at": appended_at.isoformat(),
-            "idempotency_key": idempotency_key,
-            # empty commits derive the head from the snapshot in hand —
-            # head_position() would trigger a whole extra read_commits
-            # (one RPC per slot on the objstore substrate), and the
-            # record should describe the snapshot its seq came from
-            "max_position": positions[-1]
-            if positions
-            else max((c.max_position for c in commits), default=-1),
-            "file": fname,
-            "tag_fps": commit_tag_fps(rows),
-            "subj_fps": commit_subj_fps(rows),
-        }
-        if not self._claim(f"{seq:020d}.json", record):
-            if final is not None:
-                try:
-                    os.unlink(final)
-                except OSError:
-                    pass
+    def run_bulk(self, key: str, span, write):
+        """Drive one bulk ingest by reserve-then-publish (module
+        docstring): ``span(appended_at)`` stages the frame and measures
+        its highest relative position (-1: no rows, nothing to reserve)
+        before the range is claimed by size, then ``write`` runs against
+        the reserved range with its ceiling (see StoreLayout.run_bulk)."""
+        if self.idempotency_key_seen(key, self.read_commits()):
             return None
-        if final is not None:
-            self._link_into_stream(final)
-        return seq, positions
+        appended_at = utcnow_us()
+        rel_hi = span(appended_at)
+        if rel_hi < 0:
+            return write(None, appended_at, None)
+        seq, base = self.reserve_position_range(rel_hi, appended_at)
+        return write(seq, appended_at, base + rel_hi)
 
-    # -- bulk reserve/publish ------------------------------------------------
+    def _data_file_name(self, seq: int) -> str:
+        """Row data files are written BEFORE the seq is claimed, so
+        racing writers of one seq need distinct names (uuid suffix; the
+        claim records it in ``file``)."""
+        return f"commit-{seq:010d}-{uuid.uuid4().hex[:8]}.parquet"
+
+    def _publish(
+        self, record: dict, data_name: Optional[str], defer_sync: bool = False
+    ) -> Optional[int]:
+        """CAS-claim the record's seq slot (``file`` names its data).
+        A claim is durable once made, so the sync ticket is 0; None
+        means the slot was taken — the caller's attempt lost."""
+        record["file"] = data_name
+        return 0 if self._claim(f"{record['seq']:020d}.json", record) else None
 
     def reserve_position_range(self, rel_hi: int, appended_at) -> tuple[int, int]:
         """Claim a zero-row commit whose ``max_position`` covers
         ``base + rel_hi``, reserving the position range for a bulk
         write. Returns (seq, base). Retries internally (reservation has
         no preconditions to re-evaluate)."""
-        from ..schema import POSITION_STRIDE
-
         while True:
             commits = self.read_commits()
             seq = self.next_seq(commits)
@@ -456,39 +459,6 @@ class OptimisticStoreLayout(StoreLayout):
             }
             if self._claim(f"{seq:020d}.json", record):
                 return seq, base
-
-    def publish_bulk(
-        self,
-        data_dir_name: str,
-        rows: int,
-        max_position: int,
-        appended_at,
-        idempotency_key: Optional[str],
-        subj_fps: Optional[list[int]] = None,
-    ) -> Optional[int]:
-        """Publish an already-written bulk directory as a commit.
-        Returns the publish seq, or None if the idempotency key
-        appeared meanwhile (caller treats as AlreadyApplied)."""
-        while True:
-            commits = self.read_commits()
-            if idempotency_key is not None and self.idempotency_key_seen(
-                idempotency_key, commits
-            ):
-                return None
-            seq = self.next_seq(commits)
-            record = {
-                "seq": seq,
-                "rows": rows,
-                "appended_at": appended_at.isoformat(),
-                "idempotency_key": idempotency_key,
-                "max_position": max_position,
-                "bulk": True,
-                "file": data_dir_name,
-            }
-            if subj_fps is not None:
-                record["subj_fps"] = subj_fps
-            if self._claim(f"{seq:020d}.json", record):
-                return seq
 
     # -- maintenance integration --------------------------------------------
 

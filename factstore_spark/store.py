@@ -11,12 +11,13 @@ Design (SURVEY.md §7):
   hand-wires secondary-index scans (FdbFactFinder.kt). Each finder has a
   ``*_df`` variant returning the lazy DataFrame (the 100 TB path) and a
   materializing variant returning the reference's sealed result types.
-- The append path is a commit protocol, not a DataFrame op: a per-store
-  critical section runs check-idempotency -> evaluate-condition ->
-  assign ids/instant/positions -> write parquet + commit line, mirroring
-  the single FDB transaction in FdbFactAppender.kt:33-65. On a cluster
-  the same protocol maps onto a Delta optimistic commit; the lock is the
-  local stand-in for transaction conflict ranges.
+- The append path is a commit protocol, not a DataFrame op: one
+  attempt runs snapshot -> check-idempotency -> evaluate-condition ->
+  assign ids/instant -> ``layout.append_commit`` (positions, parquet,
+  publish), mirroring the single FDB transaction in
+  FdbFactAppender.kt:33-65. The layout drives attempts: group commit
+  under a per-store lock (flock backend), or claim-retry over a
+  Delta-shaped optimistic log, where a lost claim re-runs the attempt.
 - Positions (commit_seq * 2^20 + row_idx) replace FDB versionstamps as
   the store-wide total order; all cursors and replay bounds are positions.
 """
@@ -24,6 +25,7 @@ Design (SURVEY.md §7):
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 from datetime import datetime, timezone
@@ -81,7 +83,7 @@ from .results import (
     StoreNotFound,
     StoreRemoved,
 )
-from .schema import FACT_SCHEMA, row_to_fact
+from .schema import FACT_COLUMNS, FACT_SCHEMA, POSITION_STRIDE, row_to_fact
 from .storage.catalog import Catalog
 from .storage.layout import StoreLayout, utcnow_us
 
@@ -136,27 +138,91 @@ def assign_contiguous_positions(df: DataFrame, base: int, with_count: bool = Fal
     return (out, acc) if with_count else out
 
 
-def _written_positions_agg(spark, files):
-    """One-pass (count, min, max, countDistinct) over a written bulk
-    commit's position column — the shared kernel of the post-write
-    total-order/unique-position validation in BOTH bulk append paths
-    (the invariant is checked on the WRITTEN data, never the plan that
-    produced it)."""
-    return (
-        spark.read.schema(FACT_SCHEMA)
-        .parquet(*files)
-        .agg(
-            F.count("*").alias("n"),
-            F.min("position").alias("lo"),
-            F.max("position").alias("hi"),
-            F.countDistinct("position").alias("nd"),
-            # Subject-cardinality estimate riding the same job (HLL —
-            # no distinct-agg Expand, no extra scan): gates whether the
-            # subj_fps skipping summary is worth computing at all.
-            F.approx_count_distinct("subject").alias("ns"),
+def _positions_agg(frame: DataFrame):
+    """One-pass (count, min, max, countDistinct) over a bulk frame's
+    position column — the shared kernel of the bulk total-order/
+    unique-position validation (run on the WRITTEN data, never the plan
+    that produced it; the optimistic backend also sizes its range
+    reservation with it)."""
+    return frame.agg(
+        F.count("*").alias("n"),
+        F.min("position").alias("lo"),
+        F.max("position").alias("hi"),
+        F.countDistinct("position").alias("nd"),
+        # Subject-cardinality estimate riding the same job (HLL —
+        # no distinct-agg Expand, no extra scan): gates whether the
+        # subj_fps skipping summary is worth computing at all.
+        F.approx_count_distinct("subject").alias("ns"),
+    ).collect()[0]
+
+
+class _Rejected(Exception):
+    """A bulk frame's positions would break the store's strict total
+    order; the message is the AppendConditionViolated reason."""
+
+
+_UNSTABLE = " — nondeterministic source plan; materialize the input or pre-assign positions"
+
+
+def _position_violation(agg, base: int, preassigned: bool, ceiling=None) -> Optional[str]:
+    """Why a bulk commit's positions (``agg`` = _positions_agg) break
+    the strict total order that cursors, replay bounds and heads depend
+    on, or None. Caller-supplied positions may be negative or
+    duplicated; engine-assigned ones are re-checked too, because the
+    write re-evaluates the source plan after the count job — a
+    nondeterministic source (sample/limit/rand) can shift rows across
+    partitions and silently duplicate positions, or (against a range
+    reserved by size) overrun its ``ceiling`` into a concurrent
+    commit's range. The commit is rejected, not silently corrupted."""
+    n, lo, hi, nd = (int(agg[k]) for k in ("n", "lo", "hi", "nd"))
+    if lo < base:
+        if preassigned:
+            return f"pre-assigned positions must be >= 0 (min was {lo - base})"
+        return f"written positions fell below the commit's base (min was {lo - base})" + _UNSTABLE
+    if ceiling is not None and hi > ceiling:
+        return (
+            "written positions overran the reserved range "
+            f"(max was {hi - base}, reserved {ceiling - base})" + _UNSTABLE
         )
-        .collect()[0]
-    )
+    if nd != n:
+        if preassigned:
+            return f"pre-assigned positions must be unique within the commit ({n - nd} duplicates)"
+        return f"written positions are not unique within the commit ({n - nd} duplicates)" + _UNSTABLE
+    return None
+
+
+def _stage_bulk(df: DataFrame, appended_at: datetime) -> DataFrame:
+    """Fill a bulk frame's defaulted FactInput columns: a uuid ``id``,
+    the commit instant as ``appended_at``, empty ``metadata``."""
+    cols = set(df.columns)
+    if "id" not in cols:
+        df = df.withColumn("id", F.expr("uuid()"))
+    if "appended_at" not in cols:
+        df = df.withColumn("appended_at", F.lit(appended_at))
+    if "metadata" not in cols:
+        df = df.withColumn("metadata", F.create_map().cast("map<string,string>"))
+    return df
+
+
+def _fact_rows(fact_ids, facts: Sequence[FactInput], appended_at: datetime) -> list[dict]:
+    """One row commit's arrow rows; the layout assigns ``position``."""
+    return [
+        {
+            "id": fid,
+            "type": f.type,
+            "subject": f.subject,
+            "appended_at": appended_at,
+            "position": 0,
+            "payload": {
+                "data": bytes(f.payload.data),
+                "format": f.payload.format,
+                "schema_ref": f.payload.schema_ref,
+            },
+            "metadata": dict(f.metadata),
+            "tags": dict(f.tags),
+        }
+        for fid, f in zip(fact_ids, facts)
+    ]
 
 
 def _written_subject_fps(spark, files, ns_approx: int, n_rows: int):
@@ -200,80 +266,6 @@ def _written_subject_fps(spark, files, ns_approx: int, n_rows: int):
     return sorted(int(r["fp"]) for r in rows)
 
 
-class _CommitGroup:
-    """Per-store group-commit queue for the flock append path (round
-    15, guide §2.6/§5 applied to the commit protocol).
-
-    Racing appends enqueue; whichever waiter finds the leader slot free
-    drains the queue and executes every queued append's check-and-append
-    sequentially under ONE flock acquisition — the per-append logic and
-    the state each evaluation sees are exactly those of the old
-    per-append locking (each ``work`` reads the commit log, which
-    already contains the batch's earlier lines) — then ONE fsync
-    (layout.sync_commit_log) makes the whole batch durable before any
-    caller is acked. Amortizes both the flock round trip and the fsync
-    (the durability floor, ~70% of an uncontended append) across the
-    queue depth; an uncontended append is a batch of one and costs what
-    it always did.
-
-    Exception containment: a ``work`` that raises (including the fault
-    suite's BaseException kill) fails only ITS caller; later batch
-    members proceed, exactly like a writer dying and the next lock
-    holder continuing (the orphan sweep covers its debris). If the
-    group fsync itself fails, every batch member that wrote a line gets
-    the failure — none of their commits is known durable."""
-
-    def __init__(self) -> None:
-        import threading
-
-        self._mu = threading.Lock()
-        self._cv = threading.Condition(self._mu)
-        self._pending: list[list] = []
-        self._leader_busy = False
-
-    def run(self, layout, work):
-        """Execute ``work`` (no args; returns (result, sync_ticket))
-        under the store's commit lock as part of a batch; returns
-        work's result after the batch's group fsync covers it."""
-        item = [work, None, None, False, 0]  # fn, result, exc, done, ticket
-        with self._mu:
-            self._pending.append(item)
-            while not item[3] and self._leader_busy:
-                self._cv.wait()
-            if item[3]:
-                if item[2] is not None:
-                    raise item[2]
-                return item[1]
-            self._leader_busy = True
-            batch = self._pending
-            self._pending = []
-        try:
-            max_ticket = 0
-            with layout.commit_lock(upkeep="cadence"):
-                for it in batch:
-                    try:
-                        it[1], it[4] = it[0]()
-                        max_ticket = max(max_ticket, it[4])
-                    except BaseException as exc:  # noqa: BLE001 — kill-fault analog
-                        it[2] = exc
-            if max_ticket > 0:
-                try:
-                    layout.sync_commit_log(max_ticket)
-                except BaseException as exc:  # noqa: BLE001
-                    for it in batch:
-                        if it[2] is None and it[4] > 0:
-                            it[2] = exc
-        finally:
-            with self._mu:
-                self._leader_busy = False
-                for it in batch:
-                    it[3] = True
-                self._cv.notify_all()
-        if item[2] is not None:
-            raise item[2]
-        return item[1]
-
-
 class FactStore:
     """Engine entry point. ``root`` is the storage directory; ``spark``
     is any SparkSession (the engine sets no global configs).
@@ -309,10 +301,6 @@ class FactStore:
         self.commit_backend = commit_backend
         self.catalog = Catalog(root)
         self._layouts: dict[str, StoreLayout] = {}
-        # Per-store group-commit queues (flock append path; see
-        # _CommitGroup). dict.setdefault is atomic under the GIL, so
-        # racing first appends share one queue.
-        self._commit_groups: dict[str, _CommitGroup] = {}
         # Optimistic-claim conflicts retried by this handle (soak
         # observability: retries/commit = this / commits appended).
         self.append_conflict_retries = 0
@@ -347,8 +335,6 @@ class FactStore:
         meta = self.catalog.remove(name)
         if meta is None:
             return StoreNotFound(name)
-        import shutil
-
         store_dir = self._store_dir(meta.id)
         if os.path.isdir(store_dir):
             from .storage.bloomindex import release_sidecar_cache
@@ -393,104 +379,33 @@ class FactStore:
             return StoreNotFound(store_name)
         layout = self._layout(meta.id)
 
-        def build_rows(fact_ids, appended_at):
-            return [
-                {
-                    "id": fid,
-                    "type": f.type,
-                    "subject": f.subject,
-                    "appended_at": appended_at,
-                    "position": 0,  # assigned by the layout at commit
-                    "payload": {
-                        "data": bytes(f.payload.data),
-                        "format": f.payload.format,
-                        "schema_ref": f.payload.schema_ref,
-                    },
-                    "metadata": dict(f.metadata),
-                    "tags": dict(f.tags),
-                }
-                for fid, f in zip(fact_ids, facts)
-            ]
-
-        from .storage.optimistic import OptimisticStoreLayout
-
-        if isinstance(layout, OptimisticStoreLayout):
-            # Optimistic protocol (the FDB-transaction shape itself):
-            # evaluate conditions against a snapshot, attempt to claim
-            # the next seq; a conflict means another commit serialized
-            # ahead of us — re-read, RE-EVALUATE the condition against
-            # the new state, retry (FdbFactAppender.kt:33-65). Under
-            # SUSTAINED contention (the r12 soak: 8 writers hammering
-            # one store) a bare loop keeps every loser re-colliding
-            # with the same rivals each round — measured 5.7-6.0
-            # conflicts/commit at 8 writers. Jittered exponential
-            # backoff desynchronizes the losers (1.1-2.8 measured,
-            # sub-linear in writers) while adding nothing to the
-            # uncontended path (first retry is sub-millisecond).
-            # Numbers: docs/SCALE.md round-13 soak.
-            import random as _random
-            import time as _time
-
-            for attempt in range(256):
-                commits = layout.read_commits()
-                if layout.idempotency_key_seen(key, commits):
-                    return AlreadyApplied(key)
-                violation = self._evaluate_condition(layout, condition)
-                if violation is not None:
-                    return AppendConditionViolated(violation)
-                appended_at = utcnow_us()
-                fact_ids = [new_fact_id() for _ in facts]
-                res = layout.try_append_commit(
-                    build_rows(fact_ids, appended_at), appended_at, key, commits
-                )
-                if res is not None:
-                    _, positions = res
-                    return Appended(tuple(fact_ids), appended_at, tuple(positions))
-                self.append_conflict_retries += 1
-                _time.sleep(
-                    _random.uniform(0.0, min(0.05, 0.0005 * (1 << min(attempt, 7))))
-                )
-            raise RuntimeError("append contention: 256 optimistic retries exhausted")
-
-        # The critical section = the FDB transaction (FdbFactAppender.kt:33-65).
-        # Hot path: reconciliation upkeep runs on a cadence, not per append.
-        # GROUP COMMIT (round 15, guide §2.6/§5 applied to the commit
-        # protocol): the commit-log fsync was ~70% of an uncontended
-        # append (11.6 of 16.9 ms), and every queued writer used to
-        # pay its own fsync INSIDE the flock — the k6 probe's p50 was
-        # pure fsync queueing at 10 VUs. Racing appends now drain in
-        # batches: whichever thread becomes leader executes every
-        # queued append's check-and-append sequentially under ONE
-        # flock acquisition (identical per-append logic and state —
-        # each evaluation sees all earlier queued commits through
-        # read_commits, exactly as the old per-append locking did),
-        # then ONE fsync makes the whole batch durable before anyone
-        # is acked. Durability contract unchanged (no ack before
-        # fsync); an uncontended append is a batch of one and costs
-        # exactly what it used to.
-
-        def work() -> tuple[object, int]:
-            # one incremental parse refreshes the derived log view;
-            # key/seq/head checks below are then O(1) lookups instead
-            # of per-append scans of every commit record (round 15)
-            layout.read_commits()
-            if layout.idempotency_key_seen(key):
+        # One attempt = the FDB transaction (FdbFactAppender.kt:33-65).
+        # The layout drives attempts: group commit under the flock, or
+        # claim-retry with backoff on the optimistic backend, where a
+        # lost claim returns None and the next attempt re-evaluates
+        # everything against a fresh snapshot.
+        def attempt():
+            # the key check and the commit's seq read ONE snapshot (see
+            # log_snapshot); the condition reads the same state or later
+            commits = layout.log_snapshot()
+            if layout.idempotency_key_seen(key, commits):
                 return AlreadyApplied(key), 0
-
             violation = self._evaluate_condition(layout, condition)
             if violation is not None:
                 return AppendConditionViolated(violation), 0
-
             appended_at = utcnow_us()  # one shared instant per batch (AppendResult.kt:23-29)
             fact_ids = [new_fact_id() for _ in facts]  # server-assigned (FactInput.kt:37-45)
-            _, positions, ticket = layout.append_commit(
-                build_rows(fact_ids, appended_at), appended_at, key,
-                defer_sync=True,
+            out = layout.append_commit(
+                _fact_rows(fact_ids, facts, appended_at), appended_at, key,
+                commits, defer_sync=True,
             )
+            if out is None:
+                self.append_conflict_retries += 1
+                return None
+            _, positions, ticket = out
             return Appended(tuple(fact_ids), appended_at, tuple(positions)), ticket
 
-        group = self._commit_groups.setdefault(meta.id, _CommitGroup())
-        return group.run(layout, work)
+        return layout.run_append(attempt)
 
     def _evaluate_condition(
         self, layout: StoreLayout, condition: AppendCondition
@@ -597,267 +512,93 @@ class FactStore:
         ``df`` must carry the FactInput columns (type, subject, payload
         struct, metadata, tags), plus optionally ``appended_at`` (event
         ingestion time) and ``position`` (pre-assigned order, e.g. from a
-        source log offset); missing ones are assigned here."""
+        source log offset); missing ones are assigned here.
+
+        The layout drives the ingest (``run_bulk``) with its backend's
+        concurrency: flock calls ``write`` under its commit lock; the
+        optimistic backend first measures ``span``, reserves a range of
+        that size, then calls ``write``, which publishes at the end.
+        Both validate the WRITTEN positions the same way."""
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return StoreNotFound(store_name)
         layout = self._layout(meta.id)
         key = _fresh_or_valid_key(idempotency_key)
+        preassigned = "position" in df.columns
+        rel = None  # the staged frame at commit-relative positions
 
-        from .storage.optimistic import OptimisticStoreLayout
+        def span(appended_at) -> int:
+            nonlocal rel
+            rel = _stage_bulk(df, appended_at)
+            if not preassigned:
+                # the per-partition count job the assignment runs anyway
+                # sizes the range — no separate df.count() evaluation
+                rel, n = assign_contiguous_positions(rel, 0, with_count=True)
+                return n - 1
+            agg = _positions_agg(df)  # caller positions: check before reserving
+            if int(agg["n"]) == 0:
+                return -1
+            violation = _position_violation(agg, 0, True)
+            if violation is not None:
+                raise _Rejected(violation)
+            return int(agg["hi"])
 
-        if isinstance(layout, OptimisticStoreLayout):
-            return self._append_dataframe_optimistic(layout, df, key)
-
-        with layout.commit_lock(upkeep="cadence"):
-            commits = layout.read_commits()
-            if layout.idempotency_key_seen(key, commits):
-                return AlreadyApplied(key)
-            seq = layout.next_seq(commits)
-            appended_at = utcnow_us()
-
-            from .schema import POSITION_STRIDE
-
-            base = seq * POSITION_STRIDE
-            cols = set(df.columns)
-            staged = df
-            if "id" not in cols:
-                staged = staged.withColumn("id", F.expr("uuid()"))
-            if "appended_at" not in cols:
-                staged = staged.withColumn("appended_at", F.lit(appended_at))
-            if "position" in cols:
-                # Caller pre-assigned intra-commit order (e.g. source log
-                # offset); rebase onto this commit's position range.
-                # Validity (non-negative, duplicate-free) is enforced
-                # after the write from the same one-pass aggregate.
-                staged = staged.withColumn("position", F.lit(base) + F.col("position"))
-            else:
-                staged = assign_contiguous_positions(staged, base)
-            if "metadata" not in cols:
-                staged = staged.withColumn(
-                    "metadata", F.create_map().cast("map<string,string>")
+        def write(seq, appended_at, ceiling) -> Optional[AppendResult]:
+            nonlocal rel
+            if rel is None:
+                rel = _stage_bulk(df, appended_at)
+                if not preassigned:
+                    rel = assign_contiguous_positions(rel, 0)
+            n = 0
+            if seq is not None:
+                base = seq * POSITION_STRIDE
+                dir_name = f"commit-{seq:010d}-bulk"
+                out_dir = os.path.join(layout.data_dir, dir_name)
+                rel.withColumn(
+                    "position", (F.lit(base) + F.col("position")).cast("long")
+                ).select(*FACT_COLUMNS).write.mode("overwrite").parquet(out_dir)
+                files = [
+                    os.path.join(out_dir, f)
+                    for f in os.listdir(out_dir)
+                    if f.endswith(".parquet")
+                ]
+                if files:
+                    agg = _positions_agg(self.spark.read.schema(FACT_SCHEMA).parquet(*files))
+                    n = int(agg["n"])
+                violation = (
+                    _position_violation(agg, base, preassigned, ceiling) if n else None
                 )
-            staged = staged.select(
-                "id", "type", "subject", "appended_at", "position",
-                "payload", "metadata", "tags",
-            )
-            out_dir = os.path.join(layout.data_dir, f"commit-{seq:010d}-bulk")
-            staged.write.mode("overwrite").parquet(out_dir)
-            bulk_files = [
-                os.path.join(out_dir, f)
-                for f in os.listdir(out_dir)
-                if f.endswith(".parquet")
-            ]
-            agg = None
-            if bulk_files:
-                agg = _written_positions_agg(self.spark, bulk_files)
-            if agg is not None and agg["n"] > 0:
-                # The strict total-order/unique-position invariant that
-                # cursors, replay bounds and heads depend on is checked
-                # on the WRITTEN data in every branch: caller-supplied
-                # positions may be negative or duplicated, and even the
-                # auto-assigned path re-evaluates the source plan between
-                # the count job and the write — a nondeterministic source
-                # (sample/limit/rand) can shift rows across partitions
-                # and silently duplicate positions. One cheap check off
-                # the same one-pass aggregate; the commit is rejected,
-                # not silently corrupted.
-                import shutil
-
-                preassigned = "position" in cols
-                if int(agg["lo"]) < base:
+                if violation is not None or n == 0:
                     shutil.rmtree(out_dir, ignore_errors=True)
-                    msg = (
-                        "pre-assigned positions must be >= 0 "
-                        f"(min was {int(agg['lo']) - base})"
-                        if preassigned
-                        else "position assignment produced out-of-range values "
-                        "(source plan repartitioned between jobs; "
-                        f"min was {int(agg['lo']) - base} below base)"
-                    )
-                    return AppendConditionViolated(msg)
-                if int(agg["nd"]) != int(agg["n"]):
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    msg = (
-                        "pre-assigned positions must be unique within the commit "
-                        f"({int(agg['n']) - int(agg['nd'])} duplicates)"
-                        if preassigned
-                        else "position assignment produced duplicates "
-                        "(nondeterministic source partitioning between jobs; "
-                        f"{int(agg['n']) - int(agg['nd'])} duplicates) — "
-                        "materialize the input or pre-assign positions"
-                    )
-                    return AppendConditionViolated(msg)
-            if agg is None or agg["n"] == 0:
-                # Empty input: record a zero-row commit so the
-                # idempotency key is still honored; nothing to read back.
-                import shutil
-
-                shutil.rmtree(out_dir, ignore_errors=True)
-                layout.append_bulk_commit_record(
-                    seq, 0, appended_at, key, layout.head_position()
+                if violation is not None:
+                    raise _Rejected(violation)
+            if n == 0:
+                # No rows (possibly only once the write re-evaluated a
+                # nondeterministic source): a zero-row commit still
+                # records the idempotency key.
+                pseq = layout.publish_bulk(
+                    None, 0, layout.head_position(), appended_at, key
                 )
-                return Appended((), appended_at, ())
-            layout.append_bulk_commit_record(
-                seq,
-                int(agg["n"]),
-                appended_at,
-                key,
-                int(agg["hi"]),
-                # Subject skipping summary for head lookups: a Spark
-                # job over the subject column, gated by the cardinality
-                # estimate the validation aggregate already computed —
-                # caps out to None (= "must scan until the snapshot
-                # folds this commit") on diverse commits.
-                subj_fps=_written_subject_fps(
-                    self.spark, bulk_files, int(agg["ns"]), int(agg["n"])
-                ),
-            )
-        return Appended((), appended_at, (int(agg["lo"]), int(agg["hi"])))
-
-    def _append_dataframe_optimistic(self, layout, df: DataFrame, key: str) -> AppendResult:
-        """Bulk ingest on the optimistic backend: RESERVE the position
-        range with a zero-row claim (positions are baked into the
-        parquet, so the range must be unstealable before the write),
-        write the data at leisure, then PUBLISH the directory with a
-        second claim (storage/optimistic.py module docstring). A crash
-        mid-way leaves a harmless hole in the sparse position space."""
-        commits = layout.read_commits()
-        if layout.idempotency_key_seen(key, commits):
-            return AlreadyApplied(key)
-        appended_at = utcnow_us()
-        cols = set(df.columns)
-        staged = df
-        if "id" not in cols:
-            staged = staged.withColumn("id", F.expr("uuid()"))
-        if "appended_at" not in cols:
-            staged = staged.withColumn("appended_at", F.lit(appended_at))
-        if "metadata" not in cols:
-            staged = staged.withColumn(
-                "metadata", F.create_map().cast("map<string,string>")
-            )
-        if "position" in cols:
-            # Measure + validate the RELATIVE positions before reserving.
-            agg = df.agg(
-                F.count("*").alias("n"),
-                F.min("position").alias("lo"),
-                F.max("position").alias("hi"),
-                F.countDistinct("position").alias("nd"),
-            ).collect()[0]
-            n = int(agg["n"] or 0)
-            if n > 0 and int(agg["lo"]) < 0:
-                return AppendConditionViolated(
-                    f"pre-assigned positions must be >= 0 (min was {int(agg['lo'])})"
-                )
-            if n > 0 and int(agg["nd"]) != n:
-                return AppendConditionViolated(
-                    "pre-assigned positions must be unique within the commit "
-                    f"({n - int(agg['nd'])} duplicates)"
-                )
-            rel_hi = int(agg["hi"]) if n else 0
-            rel = staged
-        else:
-            # reuse the per-partition count job the position assignment
-            # runs anyway — a separate df.count() is a whole extra
-            # evaluation of the source plan per bulk append
-            rel, n = assign_contiguous_positions(staged, base=0, with_count=True)
-            rel_hi = max(n - 1, 0)
-        if n == 0:
-            pseq = layout.publish_bulk(None, 0, layout.head_position(), appended_at, key)
-            if pseq is None:
-                return AlreadyApplied(key)
-            return Appended((), appended_at, ())
-
-        seq, base = layout.reserve_position_range(rel_hi, appended_at)
-        out = rel.withColumn(
-            "position", (F.lit(base) + F.col("position")).cast("long")
-        ).select(
-            "id", "type", "subject", "appended_at", "position",
-            "payload", "metadata", "tags",
-        )
-        dir_name = f"commit-{seq:010d}-bulk"
-        out_dir = os.path.join(layout.data_dir, dir_name)
-        out.write.mode("overwrite").parquet(out_dir)
-        files = [
-            os.path.join(out_dir, f)
-            for f in os.listdir(out_dir)
-            if f.endswith(".parquet")
-        ]
-        agg2 = _written_positions_agg(self.spark, files)
-        # Validate the invariant on the WRITTEN data, not the pre-write
-        # evaluation of ``df`` (the write re-evaluates the plan; a
-        # nondeterministic source can shift rows between partitions and
-        # duplicate positions even when the pre-write check above
-        # passed). Abort (leaving the reservation as a harmless hole —
-        # same shape as a crash mid-ingest) rather than publish a
-        # commit that breaks the strict total order.
-        n2 = int(agg2["n"] or 0)
-        if n2 == 0:
-            # The re-evaluation produced ZERO rows (nondeterministic
-            # source shrank between the pre-reserve count and the
-            # write): publish an empty commit so the idempotency key is
-            # still honored — mirror of the flock path's empty branch
-            # (agg2.hi is null here; int(None) would crash).
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
+                return None if pseq is None else Appended((), appended_at, ())
+            lo, hi = int(agg["lo"]), int(agg["hi"])
             pseq = layout.publish_bulk(
-                None, 0, layout.head_position(), appended_at, key
+                dir_name, n, hi, appended_at, key,
+                # Subject skipping summary for head lookups: gated by the
+                # validation aggregate's cardinality estimate, capped out
+                # to None (= "scan until the snapshot folds this commit")
+                # on diverse commits.
+                subj_fps=_written_subject_fps(self.spark, files, int(agg["ns"]), n),
             )
             if pseq is None:
-                return AlreadyApplied(key)
-            return Appended((), appended_at, ())
-        if (
-            int(agg2["lo"]) < base
-            or int(agg2["nd"]) != n2
-            or int(agg2["hi"]) > base + rel_hi
-        ):
-            import shutil
+                shutil.rmtree(out_dir, ignore_errors=True)
+                return None
+            return Appended((), appended_at, (lo, hi))
 
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if int(agg2["lo"]) < base:
-                return AppendConditionViolated(
-                    "written positions fell below the reserved base "
-                    f"(min was {int(agg2['lo']) - base}) — "
-                    "nondeterministic source plan; materialize the input"
-                )
-            if int(agg2["hi"]) > base + rel_hi:
-                # Past the ceiling the positions may collide with a
-                # CONCURRENTLY reserved commit's range — publishing
-                # would put two commits on overlapping positions.
-                return AppendConditionViolated(
-                    "written positions overran the reserved range "
-                    f"(max was {int(agg2['hi']) - base}, reserved {rel_hi}) — "
-                    "nondeterministic source plan; materialize the input"
-                )
-            return AppendConditionViolated(
-                "written positions are not unique within the commit "
-                f"({n2 - int(agg2['nd'])} duplicates) — "
-                "nondeterministic source plan; materialize the input"
-            )
-        pseq = layout.publish_bulk(
-            dir_name,
-            int(agg2["n"]),
-            int(agg2["hi"]),
-            appended_at,
-            key,
-            # Subject skipping summary for head lookups (heads are
-            # log-derived; the publish record is the only per-subject
-            # state this path ever writes, and it is capped) — Spark
-            # job gated by the validation aggregate's estimate, not a
-            # driver-side column stream.
-            subj_fps=_written_subject_fps(
-                self.spark, files, int(agg2["ns"]), int(agg2["n"])
-            ),
-        )
-        if pseq is None:
-            import shutil
-
-            shutil.rmtree(out_dir, ignore_errors=True)
-            return AlreadyApplied(key)
-        for f in files:
-            layout._link_into_stream(f)
-        return Appended((), appended_at, (int(agg2["lo"]), int(agg2["hi"])))
+        try:
+            res = layout.run_bulk(key, span, write)
+        except _Rejected as exc:
+            return AppendConditionViolated(str(exc))
+        return AlreadyApplied(key) if res is None else res
 
     # ------------------------------------------------------------------
     # Read path (FactFinder) — DataFrame plans + materializing wrappers
@@ -907,7 +648,7 @@ class FactStore:
         two can never drift semantically. ``comp_paths`` substitutes a
         pruned file subset for the snapshot directory (basePath keeps
         the hive partition column derivable either way)."""
-        from .schema import FACT_COLUMNS, FACT_SCHEMA_PARTITIONED
+        from .schema import FACT_SCHEMA_PARTITIONED
 
         frames = []
         if comp_dir is not None and (comp_paths is None or comp_paths):
@@ -1711,6 +1452,9 @@ class FactStore:
         # One layout instance per store: its commit-log memo (keyed on
         # the log file's mtime+size) then amortizes the 3 log reads a
         # locked append performs to a single parse.
+        # Racing first callers may each build one, but setdefault keeps
+        # exactly one: group commit and sync tickets are per instance,
+        # so two live instances of one store could strand a group fsync.
         layout = self._layouts.get(store_id)
         if layout is None:
             if self.commit_backend.startswith("optimistic"):
@@ -1721,5 +1465,5 @@ class FactStore:
                 )
             else:
                 layout = StoreLayout(self._store_dir(store_id))
-            self._layouts[store_id] = layout
+            layout = self._layouts.setdefault(store_id, layout)
         return layout

@@ -250,7 +250,9 @@ def test_optimistic_append_crash_schedule(
     fs, pre = _seed(root, backend)
     batch = [_fact("victim", 1), _fact("victim", 2)]
     key = f"idem-crash-{substrate}"
-    _arm(monkeypatch, opt_mod, opt_mod.OptimisticStoreLayout, kind)
+    # the row record is built once, in layout.append_commit, for both
+    # backends — so the tag_fps trap patches the layout module
+    _arm(monkeypatch, layout_mod, opt_mod.OptimisticStoreLayout, kind)
     with pytest.raises(Killed):
         fs.append("s", batch, idempotency_key=key)
     monkeypatch.undo()
