@@ -27,11 +27,17 @@ Design for 100 TB:
   same cluster that scanned the data.
 - **Probes never read pruned data pages.** A lookup hashes the probe
   keys with the identical Spark expressions (same engine, same seeds —
-  build/probe asymmetry is impossible by construction), broadcast-joins
-  them against the sidecar (one row per file), and keeps files where
-  ALL k bits of SOME key are set. Only those files are then scanned,
-  with the exact ``IN`` filter on top — Bloom false positives cost a
-  wasted file read, never a wrong row; false negatives cannot occur.
+  build/probe asymmetry is impossible by construction) and keeps files
+  where ALL k bits of SOME key are set. Only those files are then
+  scanned, with the exact ``IN`` filter on top — Bloom false positives
+  cost a wasted file read, never a wrong row; false negatives cannot
+  occur. A driver-held key LIST (``bloom_candidate_files``, its
+  ``_multi`` batch, ``pruned_lookup``) runs no Spark job: the driver
+  JVM evaluates the ``xxhash64`` projection of the key literals, and
+  Python tests the k bits against the sidecar's bitsets, read once
+  per sidecar version with pyarrow and cached on the driver. A key
+  FRAME (``pruned_semi_join``) is probed by a broadcast join against
+  the sidecar instead, on the executors.
 - **The index is derived state, never a correctness dependency** (the
   tag-index discipline, store.py find_by_tags_df): the manifest pins
   the exact data-file inventory (name + size) it was built from, and a
@@ -51,7 +57,9 @@ import os
 import uuid
 from dataclasses import dataclass
 from functools import reduce
+from itertools import compress
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -172,16 +180,11 @@ def _alias_names(key_cols: list[str]) -> list[str]:
     return [f"_k{i}" for i in range(len(key_cols))]
 
 
-def _key_frame(
-    spark: SparkSession, manifest: dict, keys: list
-) -> tuple[DataFrame, int]:
-    """Probe keys -> (typed DataFrame with the internal ``_k*`` key
-    aliases, usable-key count — known driver-side, no job). Scalars
-    for single-column keys, tuples for composite keys; any key
+def _usable_keys(manifest: dict, keys: list) -> list[tuple]:
+    """Probe keys -> distinct key tuples in the index's key order.
+    Scalars for single-column keys, tuples for composite keys; any key
     containing None is dropped (SQL equality would never match it)."""
     cols = manifest["key_cols"]
-    types = manifest["key_types"]
-    names = _alias_names(cols)
     rows = []
     for k in keys:
         if len(cols) == 1:
@@ -202,8 +205,27 @@ def _key_frame(
         if any(p is None for p in t):
             continue
         rows.append(t)
-    schema = ", ".join(f"`{n}` {t}" for n, t in zip(names, types))
-    return spark.createDataFrame(rows, schema), len(rows)
+    return list(dict.fromkeys(rows))
+
+
+def _driver_hashes(
+    spark: SparkSession, key_types: list[str], keys: list[tuple]
+) -> np.ndarray:
+    """(n, 2) int64 array: the (h1, h2) pair of each key tuple, from the
+    build's own ``_hashes`` expressions over the key literals cast to
+    the manifest's key types. The driver JVM evaluates the analyzed
+    one-row projection with the interpreter — no job, no codegen — so
+    probe hashes are Spark's hashes by construction (a Python XXH64
+    that drifted from Spark's would turn into false negatives)."""
+    hashes = [
+        h
+        for k in keys
+        for h in _hashes(*[F.lit(p).cast(t) for p, t in zip(k, key_types)])
+    ]
+    proj = spark.range(1).select(F.to_json(F.array(*hashes)))._jdf
+    value = proj.queryExecution().analyzed().projectList().apply(0)
+    flat = json.loads(value.child().eval(None).toString())
+    return np.array(flat, dtype=np.int64).reshape(-1, 2)
 
 
 def _position(h1: F.Column, h2: F.Column, i: F.Column, m: F.Column) -> F.Column:
@@ -213,6 +235,18 @@ def _position(h1: F.Column, h2: F.Column, i: F.Column, m: F.Column) -> F.Column:
     overflow. Build and probe share this exact expression; divergence
     between the two sides is structurally impossible."""
     return F.pmod(F.pmod(h1, m) + i * F.pmod(h2, m), m)
+
+
+def _bits_hit(bits: np.ndarray, m: int, h: np.ndarray, k: int) -> np.ndarray:
+    """Per key of the (n, 2) hash array ``h``: are all k bits of the key
+    set in one file's bitset (``bits``: m/64 uint64 words)? The bit
+    position is ``_position``'s ``((h1 % m) + i*(h2 % m)) % m`` — numpy's
+    integer ``%`` takes the divisor's sign like ``pmod``, and the sum
+    stays under k*m, far from int64 overflow."""
+    i = np.arange(k, dtype=np.int64)[:, None]
+    pos = (h[:, 0] % m + i * (h[:, 1] % m)) % m
+    words = bits[pos >> 6]
+    return ((words >> (pos & 63).astype(np.uint64)) & np.uint64(1)).all(axis=0)
 
 
 def _bit_cols() -> tuple[F.Column, F.Column]:
@@ -403,35 +437,45 @@ class BloomProbe:
     version: int
 
 
-# Session-scoped sidecar cache: one persisted frame per index dir,
+# Two session-scoped sidecar caches, one entry per index dir, both
 # keyed by the manifest's uuid-bearing data_dir token so a rebuild
-# invalidates it on the next probe (the superseded frame is
-# unpersisted eagerly). NOT keyed by version number: a deleted-and-
-# recreated index dir restarts versions at 1, and a version-keyed
-# cache would serve the old frame for a brand-new index. A sidecar is
-# one row per data file — KBs to a few MBs — so pinning it turns the
-# repeated-point-lookup pattern (a findById service) into a
-# broadcast-join against in-memory metadata instead of a parquet read
-# per call. Same discipline as the signature-index frame cache.
+# invalidates them on the next probe (a superseded frame is unpersisted
+# eagerly). NOT keyed by version number: a deleted-and-recreated index
+# dir restarts versions at 1, and a version-keyed cache would serve
+# the old sidecar for a brand-new index.
+#
+# - _SIDECAR_CACHE: the persisted sidecar frame that a key FRAME's
+#   broadcast-join probe (pruned_semi_join) reads, so the repeated
+#   semi-join pattern joins in-memory metadata instead of reading
+#   parquet per call. Same discipline as the signature-index cache.
+# - _BITSET_CACHE: the sidecar's bytes on the DRIVER, for key LISTS:
+#   [(file, m, bits)] with each file's bitset densified to m/64 uint64
+#   words — m/8 bytes per file, ~1.25 B per indexed row at 10
+#   bits/key. A point lookup then tests bits in Python with no job.
 _SIDECAR_CACHE: dict[str, tuple[str, DataFrame]] = {}
+_BITSET_CACHE: dict[str, tuple[str, list[tuple[str, int, np.ndarray]]]] = {}
 
 
 def release_sidecar_cache(index_dir: str | None = None) -> int:
-    """Unpersist cached sidecar frames — one index dir, or all. Callers
-    that create THROWAWAY indexes (battery entries, tests) release in
-    their finally block so the session never accumulates pinned frames
-    for deleted directories; long-lived indexes keep theirs."""
-    if index_dir is None:
-        n = len(_SIDECAR_CACHE)
-        for _v, df in _SIDECAR_CACHE.values():
-            df.unpersist()
-        _SIDECAR_CACHE.clear()
-        return n
-    hit = _SIDECAR_CACHE.pop(os.path.abspath(index_dir), None)
-    if hit is None:
-        return 0
-    hit[1].unpersist()
-    return 1
+    """Drop the cached sidecars — persisted frames and driver bitsets —
+    of every index dir at or under ``index_dir``, or of all indexes.
+    Callers that create THROWAWAY indexes (battery entries, tests)
+    release in their finally block, and removing a store releases its
+    whole directory, so the session never keeps sidecars of deleted
+    directories; long-lived indexes keep theirs. Returns how many
+    index dirs were released."""
+    root = None if index_dir is None else os.path.abspath(index_dir)
+    gone = {
+        p
+        for p in [*_SIDECAR_CACHE, *_BITSET_CACHE]
+        if root is None or p == root or p.startswith(root + os.sep)
+    }
+    for p in gone:
+        hit = _SIDECAR_CACHE.pop(p, None)
+        if hit is not None:
+            hit[1].unpersist()
+        _BITSET_CACHE.pop(p, None)
+    return len(gone)
 
 
 def _sidecar_df(
@@ -448,6 +492,36 @@ def _sidecar_df(
         hit[1].unpersist()
     _SIDECAR_CACHE[key] = (token, df)
     return df
+
+
+def _sidecar_bitsets(
+    index_dir: str, manifest: dict
+) -> list[tuple[str, int, np.ndarray]]:
+    """The sidecar as [(file, m, bits)], read with pyarrow (no Spark)."""
+    import pyarrow.parquet as pq
+
+    key = os.path.abspath(index_dir)
+    token = manifest["data_dir"]
+    hit = _BITSET_CACHE.get(key)
+    if hit is not None and hit[0] == token:
+        return hit[1]
+    table = pq.read_table(
+        os.path.join(index_dir, token), columns=["_file", "m", "words"]
+    )
+    out = []
+    for batch in table.to_batches():
+        words = batch.column("words")
+        # map offsets index the flattened key/item children directly
+        offs = words.offsets.to_numpy()
+        w_idx = words.keys.to_numpy()
+        w_val = words.items.to_numpy().view(np.uint64)
+        names = batch.column("_file").to_pylist()
+        for j, (name, m) in enumerate(zip(names, batch.column("m").to_pylist())):
+            bits = np.zeros(-(-m // 64), dtype=np.uint64)
+            bits[w_idx[offs[j]:offs[j + 1]]] = w_val[offs[j]:offs[j + 1]]
+            out.append((name, m, bits))
+    _BITSET_CACHE[key] = (token, out)
+    return out
 
 
 def _stale_reason(manifest: dict, inv_now: dict) -> str | None:
@@ -513,29 +587,10 @@ def bloom_candidate_files(
     mismatched index returns every file as a candidate with
     ``stale=True`` — callers degrade to the full scan, never to a
     wrong answer. Snapshot-pinned callers pass the same ``files`` map
-    they built with."""
-    key_cols = _norm_key_cols(key_cols)
-    manifest, version = read_versioned_manifest(index_dir, _read_pointer)
-    inv_now = files if files is not None else _inventory(data_dir)
-    if (
-        manifest is None
-        or manifest.get("key_cols") != key_cols
-        or manifest.get("files") != inv_now
-    ):
-        return BloomProbe(sorted(inv_now), len(inv_now), True, version)
-    kdf, n_keys = _key_frame(spark, manifest, keys)
-    if n_keys == 0:
-        return BloomProbe([], len(inv_now), False, version)
-    sidecar = _sidecar_df(spark, index_dir, manifest)
-    cands = _probe_candidates(
-        sidecar, kdf, _alias_names(manifest["key_cols"]),
-        int(manifest["num_hashes"]),
-    )
-    if any(c not in manifest["files"] for c in cands):
-        # corrupted sidecar (should be impossible past the build-time
-        # name validation): degrade, don't reconstruct garbage paths
-        return BloomProbe(sorted(inv_now), len(inv_now), True, version)
-    return BloomProbe(cands, len(inv_now), False, version)
+    they built with. Runs on the driver, with no Spark job."""
+    return bloom_candidate_files_multi(
+        spark, index_dir, data_dir, key_cols, {"_": keys}, files=files
+    )["_"]
 
 
 def bloom_candidate_files_multi(
@@ -546,15 +601,11 @@ def bloom_candidate_files_multi(
     keysets: dict[str, list],
     files: dict[str, int] | None = None,
 ) -> dict[str, BloomProbe]:
-    """Probe SEVERAL key sets against the same sidecar snapshot in ONE
-    Spark job. Each :func:`bloom_candidate_files` call pays a full
-    broadcast-join-aggregate job no matter how few keys it probes;
-    callers that consult the index for multiple key sets back-to-back
-    (e.g. a present/absent assertion pair) tag the union and split the
-    grouped result instead. Per-group results are identical to calling
+    """Probe SEVERAL key sets against the same sidecar snapshot with
+    ONE driver-side hash evaluation and one pass over the cached
+    bitsets. Per-group results are identical to calling
     ``bloom_candidate_files`` once per key set (a file qualifies when
-    SOME key of the group hits all its bits — groups never interact).
-    Group names must be strings (they ride a literal column)."""
+    SOME key of the group hits all its bits — groups never interact)."""
     key_cols = _norm_key_cols(key_cols)
     manifest, version = read_versioned_manifest(index_dir, _read_pointer)
     inv_now = files if files is not None else _inventory(data_dir)
@@ -565,32 +616,25 @@ def bloom_candidate_files_multi(
     ):
         stale = BloomProbe(sorted(inv_now), len(inv_now), True, version)
         return {g: stale for g in keysets}
+    groups = {g: _usable_keys(manifest, keys) for g, keys in keysets.items()}
+    flat = list(dict.fromkeys(k for ks in groups.values() for k in ks))
+    hits: dict[tuple, list[str]] = {k: [] for k in flat}
+    if flat:
+        h = _driver_hashes(spark, manifest["key_types"], flat)
+        k_hashes = int(manifest["num_hashes"])
+        for name, m, bits in _sidecar_bitsets(index_dir, manifest):
+            for key in compress(flat, _bits_hit(bits, m, h, k_hashes)):
+                hits[key].append(name)
     out: dict[str, BloomProbe] = {}
-    tagged = []
-    for g, keys in keysets.items():
-        kdf, n_keys = _key_frame(spark, manifest, keys)
-        if n_keys == 0:
-            out[g] = BloomProbe([], len(inv_now), False, version)
+    for g, keys in groups.items():
+        cands = sorted({f for k in keys for f in hits[k]})
+        if any(c not in manifest["files"] for c in cands):
+            # corrupted sidecar (should be impossible past the build-
+            # time name validation): degrade, don't reconstruct garbage
+            # paths
+            out[g] = BloomProbe(sorted(inv_now), len(inv_now), True, version)
         else:
-            tagged.append(kdf.withColumn("_grp", F.lit(g)))
-    if tagged:
-        sidecar = _sidecar_df(spark, index_dir, manifest)
-        by_grp = _probe_candidates_grouped(
-            sidecar,
-            reduce(DataFrame.unionByName, tagged),
-            _alias_names(manifest["key_cols"]),
-            int(manifest["num_hashes"]),
-        )
-        for g in keysets:
-            if g in out:
-                continue
-            cands = by_grp.get(g, [])
-            if any(c not in manifest["files"] for c in cands):
-                # corrupted sidecar: degrade this group like the
-                # single-set path does
-                out[g] = BloomProbe(sorted(inv_now), len(inv_now), True, version)
-            else:
-                out[g] = BloomProbe(cands, len(inv_now), False, version)
+            out[g] = BloomProbe(cands, len(inv_now), False, version)
     return out
 
 
@@ -613,34 +657,19 @@ def merge_probes(*probes: BloomProbe) -> BloomProbe:
 def _probe_candidates(
     sidecar: DataFrame, kdf: DataFrame, key_cols: list[str], k_hashes: int
 ) -> list[str]:
-    """Candidate files for a probe-key frame (columns = the internal
+    """Candidate files for a probe-key FRAME (columns = the internal
     ``_k*`` aliases — value-based hashing makes the original spec
-    irrelevant here):
-    a file qualifies when SOME key hits ALL its k bits. One shared
-    pipeline for point lookups and semi-joins — build/probe hashing
-    can never diverge between the two read paths. The (h1, h2) hash
-    pair identifies the key, so distinct keys never need an id column.
+    irrelevant here): a file qualifies when SOME key hits ALL its k
+    bits. The (h1, h2) hash pair identifies the key, so distinct keys
+    never need an id column.
 
     Broadcast direction matters at scale: the PROBE KEYS broadcast
-    (small by design — a point-lookup list or a selective distinct key
-    set), while the sidecar with its per-file bitsets (bytes
-    proportional to data rows / bits_per_key) streams through
-    executors, never through the driver."""
-    got = _probe_candidates_grouped(
-        sidecar, kdf.withColumn("_grp", F.lit("_")), key_cols, k_hashes
-    )
-    return got.get("_", [])
-
-
-def _probe_candidates_grouped(
-    sidecar: DataFrame, kdf: DataFrame, key_cols: list[str], k_hashes: int
-) -> dict[str, list[str]]:
-    """Grouped core of :func:`_probe_candidates`: the probe frame
-    carries a ``_grp`` tag column and the candidate sets come back per
-    tag — ONE pipeline for single and batched probes, so build/probe
-    hashing (and single/multi probing) can never diverge."""
+    (small by design — a selective distinct key set), while the
+    sidecar with its per-file bitsets (bytes proportional to data
+    rows / bits_per_key) streams through executors, never through the
+    driver."""
     h1, h2 = _hashes(*[F.col(c) for c in key_cols])
-    probe = kdf.distinct().select("_grp", h1.alias("h1"), h2.alias("h2"))
+    probe = kdf.distinct().select(h1.alias("h1"), h2.alias("h2"))
     w_idx, w_bit = _bit_cols()
     hit = (
         F.coalesce(F.element_at(F.col("words"), w_idx), F.lit(0))
@@ -651,7 +680,6 @@ def _probe_candidates_grouped(
         sidecar.select("_file", "m", "words")
         .join(F.broadcast(probe))
         .select(
-            "_grp",
             "_file",
             "m",
             "words",
@@ -660,7 +688,6 @@ def _probe_candidates_grouped(
             F.explode(F.sequence(F.lit(0), F.lit(k_hashes - 1))).alias("i"),
         )
         .select(
-            "_grp",
             "_file",
             "words",
             "h1",
@@ -669,18 +696,15 @@ def _probe_candidates_grouped(
                 F.col("h1"), F.col("h2"), F.col("i"), F.col("m")
             ).alias("pos"),
         )
-        .select("_grp", "_file", "h1", "h2", hit.alias("hit"))
-        .groupBy("_grp", "_file", "h1", "h2")
+        .select("_file", "h1", "h2", hit.alias("hit"))
+        .groupBy("_file", "h1", "h2")
         .agg(F.min("hit").alias("all_hit"))
         .filter(F.col("all_hit") == 1)
-        .select("_grp", "_file")
+        .select("_file")
         .distinct()
         .collect()
     )
-    out: dict[str, list[str]] = {}
-    for r in rows:
-        out.setdefault(r._grp, []).append(r._file)
-    return {g: sorted(fs) for g, fs in out.items()}
+    return sorted(r._file for r in rows)
 
 
 def pruned_semi_join(
@@ -805,7 +829,7 @@ def _read_pinned(
 
 def _norm_probe_keys(keys: list) -> list:
     """Normalize list-shaped keys to tuples so every downstream path
-    (_key_frame accepts both, but _exact_key_filter's scalar unwrap
+    (_usable_keys accepts both, but _exact_key_filter's scalar unwrap
     and the None-drop checks key on tuple) sees one shape."""
     return [tuple(k) if isinstance(k, list) else k for k in keys]
 
@@ -849,7 +873,7 @@ def pruned_lookup(
     ``probe``: a BloomProbe the caller already holds for these keys
     against the same snapshot (e.g. from a batched
     ``bloom_candidate_files_multi`` consultation) — skips the sidecar
-    job; candidates for a key union are exactly the union of the
+    consultation; candidates for a key union are exactly the union of the
     per-set candidates, so passing a merged probe is lossless."""
     key_cols = _norm_key_cols(key_cols)
     keys = [

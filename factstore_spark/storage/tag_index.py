@@ -8,10 +8,18 @@ reads every fact's tags map; a derived index table
     (tag_key, tag_value, type, position)    one row per fact-tag pair
 
 partitioned by ``tag_key`` lets a tag query touch only the keys it
-mentions, resolve matching positions there (tiny fraction of the data),
-then semi-join the fact table on position — mirroring how the FDB
-backend resolves positions from its tag subspaces and point-loads facts
-(FdbFactFinder.kt:169-203), but set-at-a-time.
+mentions and resolve matching positions there (tiny fraction of the
+data) — mirroring how the FDB backend resolves positions from its tag
+subspaces and point-loads facts (FdbFactFinder.kt:108-203).
+
+Two readers resolve positions. The driver reader (pyarrow, no Spark
+job) opens only the queried keys' partitions: ``exists_after`` answers
+the DCB append condition, and ``resolve_positions`` gives
+``find_by_tags`` a bounded position list that it point-loads with one
+``position IN (...)`` fact read. The Spark reader
+(``positions_for_query``) returns a position DataFrame that is
+semi-joined to the fact table, for tag queries and for position sets
+too large to hold on the driver.
 
 The index is DERIVED state: rebuilt from committed data (idempotent,
 crash-safe — if it is missing or stale, readers fall back to the scan
@@ -23,8 +31,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 from typing import Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -70,8 +80,8 @@ class TagIndex:
         (b) a compaction superseded commits newer than ``built_through``
         (their per-commit files may be gone). A crash between the
         parquet append and the meta write can leave duplicate index
-        rows on retry — harmless by construction (``positions_for_query``
-        is set-semantics: intersect/union/distinct); a periodic full
+        rows on retry — harmless by construction (both position readers
+        are set-semantics: intersect/union/distinct); a periodic full
         ``build`` compacts them away."""
         last = self.layout.last_commit()
         if last is None:
@@ -167,6 +177,62 @@ class TagIndex:
 
         return self.positions_for_query(spark, TagQuery([TagOnlyQueryItem(dict(tags))]))
 
+    def _dataset(self):
+        """The index tree as a pyarrow dataset over its hive layout
+        (``tag_key`` read as a string, whatever the key looks like), or
+        None when the tree is absent — including the rebuild's
+        two-rename swap window (caller falls back to the scan path)."""
+        import pyarrow as pa
+        import pyarrow.dataset as pa_ds
+
+        if not os.path.isdir(self.index_dir):
+            return None
+        try:
+            return pa_ds.dataset(
+                self.index_dir,
+                partitioning=pa_ds.partitioning(
+                    pa.schema([("tag_key", pa.string())]), flavor="hive"
+                ),
+            )
+        except (OSError, pa.ArrowInvalid):
+            return None
+
+    @staticmethod
+    def _item_positions(dataset, item, bound, max_rows=None) -> Optional[np.ndarray]:
+        """Sorted distinct positions of one query item within the
+        ``bound`` position predicate: AND across the item's tags
+        intersects per-tag sets, and a ``TagTypeItem``'s types filter
+        each scan. Only the mentioned keys' partitions are opened.
+        Distinct because a crash-retried refresh may legally repeat
+        index rows. None when one tag matches more than ``max_rows``
+        index rows: the read stops there, so the driver never holds
+        more."""
+        import pyarrow.dataset as pa_ds
+
+        from ..model import TagOnlyQueryItem
+
+        acc = np.empty(0, dtype=np.int64)
+        for n, (k, v) in enumerate(item.tags.items()):
+            flt = (
+                (pa_ds.field("tag_key") == k)
+                & (pa_ds.field("tag_value") == v)
+                & bound
+            )
+            if not isinstance(item, TagOnlyQueryItem):
+                flt = flt & pa_ds.field("type").isin(sorted(item.types))
+            scan = dataset.scanner(columns=["position"], filter=flt)
+            if max_rows is None:
+                col = scan.to_table()["position"]
+            else:
+                col = scan.head(max_rows + 1)["position"]
+                if len(col) > max_rows:
+                    return None
+            s = np.unique(col.to_numpy())
+            acc = s if n == 0 else np.intersect1d(acc, s, assume_unique=True)
+            if acc.size == 0:
+                break  # this AND-item cannot match
+        return acc
+
     def exists_after(self, query, after_pos: int) -> Optional[bool]:
         """Spark-free EXISTS check for the DCB append condition: does
         any fact with ``position > after_pos`` match the tag query?
@@ -178,45 +244,44 @@ class TagIndex:
 
         Returns None when the index layout is absent (caller falls
         back to the scan path). Freshness is the CALLER's check."""
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.dataset as pa_ds
 
-        from ..model import TagOnlyQueryItem
+        dataset = self._dataset()
+        if dataset is None:
+            return None
+        bound = pa_ds.field("position") > after_pos
+        return any(
+            self._item_positions(dataset, item, bound).size
+            for item in query.items
+        )
 
-        if not os.path.isdir(self.index_dir):
+    def resolve_positions(
+        self, query, max_position: int, max_rows: int
+    ) -> Optional[np.ndarray]:
+        """The tag query's position set on the driver, Spark-free: the
+        sorted distinct positions ``<= max_position`` (the head of the
+        commit snapshot that decided freshness) — OR across items
+        unions the per-item sets. The index is exact, so these are
+        exactly the matching facts' positions. None when the tree is
+        absent or swapped away mid-read, or when one tag matches more
+        than ``max_rows`` index rows (the caller resolves in Spark or
+        scans). Freshness is the CALLER's check."""
+        import pyarrow.dataset as pa_ds
+
+        dataset = self._dataset()
+        if dataset is None:
             return None
+        bound = pa_ds.field("position") <= max_position
         try:
-            dataset = pa_ds.dataset(self.index_dir, partitioning="hive")
-        except (OSError, pa.ArrowInvalid):
+            sets = [
+                self._item_positions(dataset, item, bound, max_rows)
+                for item in query.items
+            ]
+        except OSError:
             return None
-        for item in query.items:
-            sets = []
-            short_circuit = False
-            for k, v in item.tags.items():
-                flt = (
-                    (pa_ds.field("tag_key") == k)
-                    & (pa_ds.field("tag_value") == v)
-                    & (pa_ds.field("position") > after_pos)
-                )
-                if not isinstance(item, TagOnlyQueryItem):
-                    flt = flt & pa_ds.field("type").isin(sorted(item.types))
-                tbl = dataset.to_table(columns=["position"], filter=flt)
-                arr = tbl["position"].combine_chunks().to_numpy(zero_copy_only=False)
-                if arr.size == 0:
-                    short_circuit = True  # this AND-item cannot match
-                    break
-                sets.append(np.unique(arr))
-            if short_circuit or not sets:
-                continue
-            acc = sets[0]
-            for s in sets[1:]:
-                acc = np.intersect1d(acc, s, assume_unique=True)
-                if acc.size == 0:
-                    break
-            if acc.size:
-                return True
-        return False
+        if any(s is None for s in sets):
+            return None
+        return reduce(np.union1d, sets)
 
     def positions_for_query(self, spark: SparkSession, query) -> DataFrame:
         """Resolve the tag-query algebra to a position set using ONLY the

@@ -46,6 +46,7 @@ from .model import (
     ReplayStart,
     StartPosition,
     StoreMetadata,
+    TagOnlyQueryItem,
     TagQuery,
     TagQueryBased,
     TimeRange,
@@ -339,8 +340,9 @@ class FactStore:
         if os.path.isdir(store_dir):
             from .storage.bloomindex import release_sidecar_cache
 
-            # unpin a cached id-index sidecar before its dir vanishes
-            release_sidecar_cache(os.path.join(store_dir, "ididx"))
+            # drop every cached sidecar of the store (id index and
+            # tag-value indexes) before its dir vanishes
+            release_sidecar_cache(store_dir)
             shutil.rmtree(store_dir)
         return StoreRemoved(name)
 
@@ -718,9 +720,17 @@ class FactStore:
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return None
+        df = self._id_lookup_df(meta, fact_id)
+        return df if df is not None else self._assemble_fact_frames(None, [])
+
+    def _id_lookup_df(self, meta, fact_id: str) -> Optional[DataFrame]:
+        """find_by_id_df's frame; None when the fresh id index admits no
+        snapshot file and there is no tail, so the id is absent without
+        a Spark job."""
         layout = self._layout(meta.id)
         idx_dir = self._id_index_dir(layout)
         comp_dir, tail_files = layout.data_layout()
+        comp_paths = None
         if comp_dir is not None and os.path.isdir(idx_dir):
             from .storage.bloomindex import bloom_candidate_files
 
@@ -728,31 +738,29 @@ class FactStore:
                 self.spark, idx_dir, comp_dir, "id", [fact_id]
             )
             if not probe.stale:
-                df = self._assemble_fact_frames(
-                    comp_dir,
-                    tail_files,
-                    comp_paths=[
-                        os.path.join(comp_dir, f)
-                        for f in probe.candidate_files
-                    ],
-                )
-                return df.filter(F.col("id") == fact_id)
-        df = self.facts_df(store_name)
-        return None if df is None else df.filter(F.col("id") == fact_id)
+                if not probe.candidate_files and not tail_files:
+                    return None
+                comp_paths = [
+                    os.path.join(comp_dir, f) for f in probe.candidate_files
+                ]
+        df = self._assemble_fact_frames(comp_dir, tail_files, comp_paths=comp_paths)
+        return df.filter(F.col("id") == fact_id)
 
     def find_by_id(self, store_name: str, fact_id: str) -> FindByIdResult:
-        df = self.find_by_id_df(store_name, fact_id)
-        if df is None:
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
             return StoreNotFound(store_name)
-        rows = df.limit(1).collect()
+        df = self._id_lookup_df(meta, fact_id)
+        rows = [] if df is None else df.limit(1).collect()
         return FactFound(row_to_fact(rows[0])) if rows else FactNotFound(fact_id)
 
     def exists_by_id(self, store_name: str, fact_id: str) -> ExistsByIdResult:
         """FdbFactFinder.kt:34-47."""
-        df = self.find_by_id_df(store_name, fact_id)
-        if df is None:
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
             return StoreNotFound(store_name)
-        return Exists() if df.limit(1).count() > 0 else DoesNotExist()
+        df = self._id_lookup_df(meta, fact_id)
+        return Exists() if df is not None and df.limit(1).count() > 0 else DoesNotExist()
 
     # -- find_in_time_range (FdbFactFinder.kt:49-79) --------------------
 
@@ -796,16 +804,18 @@ class FactStore:
 
     # -- find_by_tags: AND semantics (FdbFactFinder.kt:108-167) ---------
 
-    # Above this many resolved positions the indexed find_by_tags
-    # switches from a collected pushdown (point-load analog) to a
-    # distributed semi join — the same bounded-driver-probe rule the
-    # dedup operators use.
+    # The driver reads at most this many index rows per queried tag;
+    # past it the indexed find_by_tags switches from a driver-held
+    # position list (point-load analog) to a distributed semi join
+    # against the index — the same bounded-driver-probe rule the dedup
+    # operators use.
     TAG_INDEX_PUSHDOWN_CAP = 10_000
     # Literal-list bound for the compiled ``isin`` predicate. Between
     # this and PUSHDOWN_CAP the scan still gets a position min/max
     # RANGE filter (pushed to parquet row-group stats — the part of
     # isin pruning that actually skips IO) while exactness comes from
-    # a semi join, so no 10k-literal expression is ever compiled.
+    # a semi join against the resolved list, so no 10k-literal
+    # expression is ever compiled.
     TAG_INDEX_ISIN_CAP = 1_000
 
     def find_by_tags_df(
@@ -816,14 +826,15 @@ class FactStore:
         direction: ReadDirection = ReadDirection.FORWARD,
     ) -> Optional[DataFrame]:
         """AND-of-tags finder. When the derived tag index covers the
-        current head it resolves positions from the per-key index
-        partitions (touching only the queried keys) and point-loads
-        the facts — positions are pushed into the fact scan as an
-        ``isin`` filter when few (parquet row-group min/max skips the
-        rest of the table), else semi-joined. Stale/absent index falls
-        back to the full scan: the index is derived state, never a
-        correctness dependency (reference tag subspaces:
-        FdbFactStoreContext.kt:25-57, FdbFactFinder.kt:108-167)."""
+        current head it resolves positions on the driver from the
+        per-key index partitions (touching only the queried keys, no
+        Spark job) and point-loads the facts — positions are pushed
+        into the fact scan as an ``isin`` filter when few (parquet
+        row-group min/max skips the rest of the table), else
+        semi-joined. Stale/absent index falls back to the full scan:
+        the index is derived state, never a correctness dependency
+        (reference tag subspaces: FdbFactStoreContext.kt:25-57,
+        FdbFactFinder.kt:108-167)."""
         if not tags:
             raise ValueError("find_by_tags requires at least one tag")
         validate_limit(limit)
@@ -834,43 +845,56 @@ class FactStore:
 
         layout = self._layout(meta.id)
         tidx = TagIndex(layout)
-        # One commit snapshot decides freshness AND caps the fact side
-        # (same pattern as find_by_tag_query_indexed_df).
+        # One commit snapshot decides freshness AND bounds the positions
+        # and the fact side (same pattern as find_by_tag_query_indexed_df).
         commits = layout.read_commits()
         # logically-latest, not commits[-1]: the flock log is
         # file-ordered and a compaction record appended last carries
         # the OLD snapshot seq/max_position — commits[-1] would pass a
         # stale index as fresh and cap the scan below the true head
         last_seq = max((c.seq for c in commits), default=-1)
-        positions = (
-            tidx.positions_for_tags(self.spark, tags)
-            if last_seq >= 0 and tidx.built_through() >= last_seq
+        head_pos = max((c.max_position for c in commits), default=-1)
+        fresh = last_seq >= 0 and tidx.built_through() >= last_seq
+        pos = (
+            tidx.resolve_positions(
+                TagQuery([TagOnlyQueryItem(dict(tags))]),
+                head_pos,
+                max_rows=self.TAG_INDEX_PUSHDOWN_CAP,
+            )
+            if fresh
             else None  # stale index: scan path below
         )
-        if positions is not None:  # None also covers the rebuild-swap window
-            head_pos = max(c.max_position for c in commits)
+        if pos is not None:
+            if limit is not None:
+                # the index is exact, so the first/last ``limit``
+                # positions are exactly the answer's
+                pos = pos[:limit] if direction == ReadDirection.FORWARD else pos[-limit:]
             facts = self.facts_df(store_name, max_position=head_pos)
-            probe = positions.limit(self.TAG_INDEX_PUSHDOWN_CAP + 1).collect()
-            if len(probe) <= self.TAG_INDEX_PUSHDOWN_CAP:
-                if not probe:
-                    matched = facts.filter(F.lit(False))
-                else:
-                    pos = [r.position for r in probe]
-                    rng = (F.col("position") >= min(pos)) & (
-                        F.col("position") <= max(pos)
-                    )
-                    if len(pos) <= self.TAG_INDEX_ISIN_CAP:
-                        matched = facts.filter(rng & F.col("position").isin(pos))
-                    else:
-                        # range prunes row groups at the scan; the semi
-                        # join supplies exactness without compiling a
-                        # thousands-literal predicate (Spark's runtime
-                        # bloom/DPP can further prune inside the join).
-                        matched = facts.filter(rng).join(
-                            positions, "position", "left_semi"
-                        )
+            pos = pos.tolist()
+            if not pos:
+                matched = facts.filter(F.lit(False))
             else:
-                matched = facts.join(positions, "position", "left_semi")
+                rng = (F.col("position") >= pos[0]) & (F.col("position") <= pos[-1])
+                if len(pos) <= self.TAG_INDEX_ISIN_CAP:
+                    matched = facts.filter(rng & F.col("position").isin(pos))
+                else:
+                    # range prunes row groups at the scan; the semi
+                    # join supplies exactness without compiling a
+                    # thousands-literal predicate
+                    listed = self.spark.createDataFrame(
+                        [(p,) for p in pos], "position long"
+                    )
+                    matched = facts.filter(rng).join(
+                        F.broadcast(listed), "position", "left_semi"
+                    )
+            return ordered_limited(matched, limit, direction)
+        # A fresh index whose tag matches more than PUSHDOWN_CAP rows:
+        # semi join against the index in Spark (None = the rebuild-swap
+        # window, scan path below).
+        indexed = tidx.positions_for_tags(self.spark, tags) if fresh else None
+        if indexed is not None:
+            facts = self.facts_df(store_name, max_position=head_pos)
+            matched = facts.join(indexed, "position", "left_semi")
             return ordered_limited(matched, limit, direction)
         # No (fresh) tag index: before the full scan, consult any
         # tag-value Bloom sidecar built for one of the queried keys —

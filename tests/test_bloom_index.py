@@ -968,3 +968,198 @@ def test_pruned_lookup_with_merged_probe_identical(spark, bloom_table):
         spark, data_dir, "k", present + absent, index_dir, on_stale="error"
     )
     assert rows_of(got) == rows_of(want)
+
+
+# --- driver-side probes: hash parity, job counts, cache release ---
+
+
+def test_driver_hashes_match_executed_xxhash64(spark, store_root):
+    """The driver-evaluated (h1, h2) pair must equal what the executed
+    ``_hashes`` projection yields for the same typed values: a probe
+    hash that drifts from the build's is a silent false negative."""
+    from factstore_spark.storage.bloomindex import (
+        _driver_hashes,
+        _hashes,
+        _usable_keys,
+    )
+
+    strings = ["", "\x00", "a\x00b", "é", "é", "中文键", "😀", "x" * 1024]
+    cases = [
+        (["string"], [(s,) for s in strings]),
+        (["bigint"], [(v,) for v in (0, -1, 2**63 - 1, -(2**63), 2**31, -(2**31) - 1)]),
+        (["int"], [(v,) for v in (0, 1, -1, 2**31 - 1, -(2**31))]),
+        (["string", "bigint"], [("a", 2**63 - 1), ("", -(2**63)), ("😀", 0)]),
+    ]
+    for types, keys in cases:
+        names = [f"_k{i}" for i in range(len(types))]
+        schema = ", ".join(f"{n} {t}" for n, t in zip(names, types))
+        executed = [
+            tuple(r)
+            for r in spark.createDataFrame(keys, schema)
+            .select(*_hashes(*[F.col(n) for n in names]))
+            .collect()
+        ]
+        driver = [tuple(r) for r in _driver_hashes(spark, types, keys).tolist()]
+        assert driver == executed, types
+
+    # a derived tags['k'] index: the build hashed the map lookup
+    data_dir = os.path.join(store_root, "hdata")
+    idx = os.path.join(store_root, "hidx")
+    spark.createDataFrame(
+        [({"k": s, "o": "x"},) for s in strings], "tags map<string,string>"
+    ).write.parquet(data_dir)
+    spec = "tags['k']"
+    st = build_bloom_index(spark, data_dir, spec, idx)
+    executed = [
+        tuple(r)
+        for r in spark.read.parquet(data_dir)
+        .select(F.expr(spec).alias("v"), *_hashes(F.expr(spec)))
+        .orderBy("v")
+        .drop("v")
+        .collect()
+    ]
+    driver = _driver_hashes(spark, st["key_types"], [(s,) for s in sorted(strings)])
+    assert [tuple(r) for r in driver.tolist()] == executed
+    # no false negative for any of them through the whole probe
+    for s in strings:
+        assert bloom_candidate_files(spark, idx, data_dir, spec, [s]).candidate_files
+
+    # a key with a None part is dropped before hashing
+    manifest = {"key_cols": ["a", "b"]}
+    assert _usable_keys(manifest, [("x", None), (None, 1), ("y", 1), ["y", 1]]) == [
+        ("y", 1)
+    ]
+    assert bloom_candidate_files(spark, idx, data_dir, spec, [None]).candidate_files == []
+
+
+def test_driver_bit_test_matches_pure_python():
+    """The numpy bit test must read the bits plain Python integer math
+    sets, for adversarial hashes (min/max longs, negatives) and tiny
+    and large m: a key hits exactly when all its k bits are set."""
+    import numpy as np
+
+    from factstore_spark.storage.bloomindex import _bits_hit
+
+    k = 7
+    hashes = [
+        (-(2**63), 2**63 - 1),
+        (2**63 - 1, -(2**63)),
+        (-1, -1),
+        (123456789123456789, -987654321987654321),
+        (-5, 3),
+        (0, 0),
+        (7, -(2**62)),
+    ]
+    for m in (64, 640, 2**20):
+        h = np.array(hashes, dtype=np.int64)
+        for member in range(len(hashes)):
+            # bitset holding exactly one key, set bit by bit in Python
+            words = [0] * (m // 64)
+            h1, h2 = hashes[member]
+            for i in range(k):
+                pos = ((h1 % m) + i * (h2 % m)) % m
+                words[pos // 64] |= 1 << (pos % 64)
+            bits = np.array(words, dtype=np.uint64)
+            want = [
+                all(
+                    words[p // 64] >> (p % 64) & 1
+                    for p in (((a % m) + i * (b % m)) % m for i in range(k))
+                )
+                for a, b in hashes
+            ]
+            got = _bits_hit(bits, m, h, k).tolist()
+            assert got == want, (m, member)
+            assert got[member]
+
+
+def _spark_jobs(spark, fn):
+    """(result of fn(), number of Spark jobs it ran), counted with the
+    status tracker over a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_indexed_point_reads_run_one_job(fs, spark):
+    """A fresh id index answers find_by_id with one Spark job (the fact
+    read over the pruned files) and an absent id with none; a fresh tag
+    index answers a limited find_by_tags with one job. Both equal the
+    scan path."""
+    from factstore_spark.model import ReadDirection
+
+    ids = _seed(fs, 40)
+    scan_tags = fs.find_by_tags(STORE, {"p": "1"}, limit=3, direction=ReadDirection.BACKWARD)
+    scan_fact = fs.find_by_id(STORE, ids[7])
+    fs.maintain(STORE)  # compacts and refreshes the tag index
+    assert fs.build_id_index(STORE)["built"]
+
+    got, jobs = _spark_jobs(spark, lambda: fs.find_by_id(STORE, ids[7]))
+    assert isinstance(got, FactFound) and got.fact == scan_fact.fact
+    assert jobs == 1
+    # an absent id the probe admits no file for (a Bloom false positive
+    # would legitimately cost the one fact-read job)
+    layout = fs._layout(fs.catalog.find_by_name(STORE).id)
+    comp_dir, tail = layout.data_layout()
+    assert tail == []
+    absent = next(
+        f"absent-{i}"
+        for i in range(100)
+        if not bloom_candidate_files(
+            spark, fs._id_index_dir(layout), comp_dir, "id", [f"absent-{i}"]
+        ).candidate_files
+    )
+    got, jobs = _spark_jobs(spark, lambda: fs.find_by_id(STORE, absent))
+    assert isinstance(got, FactNotFound) and jobs == 0
+    got, jobs = _spark_jobs(spark, lambda: fs.exists_by_id(STORE, absent))
+    assert isinstance(got, DoesNotExist) and jobs == 0
+
+    got, jobs = _spark_jobs(
+        spark,
+        lambda: fs.find_by_tags(STORE, {"p": "1"}, limit=3, direction=ReadDirection.BACKWARD),
+    )
+    assert [f.id for f in got.facts] == [f.id for f in scan_tags.facts] == ids[39:34:-2]
+    assert jobs == 1
+
+
+def test_remove_releases_every_cached_sidecar_of_the_store(fs, spark):
+    """Removing a store drops the cached sidecars of all its indexes —
+    the id index and the tag-value indexes, frames and driver bitsets."""
+    from factstore_spark.storage import bloomindex
+
+    ids = _seed(fs, 20)
+    fs.compact(STORE)
+    fs.build_id_index(STORE)
+    assert fs.build_tag_bloom_index(STORE, "p")["built"]
+    meta = fs.catalog.find_by_name(STORE)
+    layout = fs._layout(meta.id)
+    comp_dir, _ = layout.data_layout()
+    tag_idx = fs._tag_bloom_dir(layout, "p")
+    # no tag index: find_by_tags probes the tag-value sidecar
+    assert len(fs.find_by_tags(STORE, {"p": "1"}).facts) == 10
+    assert isinstance(fs.find_by_id(STORE, ids[3]), FactFound)
+    keys = spark.createDataFrame([("1",)], "v string")
+    assert bloomindex.pruned_semi_join(
+        spark, comp_dir, "tags['p']", keys, tag_idx, keys_cols="v"
+    ).count() == 10
+    store_dir = os.path.abspath(layout.store_dir)
+
+    def cached():
+        return [
+            p
+            for p in [*bloomindex._SIDECAR_CACHE, *bloomindex._BITSET_CACHE]
+            if p.startswith(store_dir + os.sep)
+        ]
+
+    assert os.path.abspath(tag_idx) in bloomindex._SIDECAR_CACHE
+    assert os.path.abspath(tag_idx) in bloomindex._BITSET_CACHE
+    assert os.path.abspath(fs._id_index_dir(layout)) in bloomindex._BITSET_CACHE
+    fs.remove(STORE)
+    assert cached() == []

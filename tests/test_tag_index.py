@@ -274,3 +274,57 @@ def test_find_by_tags_mid_band_uses_range_plus_semi_join(fs):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "LeftSemi" not in plan_small
+
+
+def test_numeric_looking_tag_keys_resolve_on_the_driver(fs):
+    """A tag key that looks like an integer is still a string in the
+    index's hive layout (``tag_key=42``): the driver reader must not
+    infer an int partition type, or the DCB check and the indexed
+    find_by_tags would compare an int column with a string."""
+    from factstore_spark import TagQueryBased
+    from factstore_spark.results import AppendConditionViolated
+
+    fs.create(STORE)
+    fs.append(
+        STORE,
+        [
+            FactInput(type="T", subject=f"s{i}", tags={"42": "v" if i % 2 else "w"})
+            for i in range(6)
+        ],
+    )
+    scan = [f.id for f in fs.find_by_tags(STORE, {"42": "v"}).facts]
+    assert fs.build_tag_index(STORE)["built"]
+    got = [f.id for f in fs.find_by_tags(STORE, {"42": "v"}).facts]
+    assert got == scan and len(got) == 3
+    res = fs.append(
+        STORE,
+        FactInput(type="X", subject="x"),
+        condition=TagQueryBased(TagQuery([TagOnlyQueryItem({"42": "v"})])),
+    )
+    assert isinstance(res, AppendConditionViolated)
+
+
+def test_find_by_tags_past_the_driver_cap_semi_joins_in_spark(fs):
+    """A tag matching more index rows than TAG_INDEX_PUSHDOWN_CAP is
+    not read onto the driver past the cap: the finder semi-joins the
+    index's Spark position set instead, and still equals the scan path
+    with a limit and a direction."""
+    from factstore_spark.model import ReadDirection
+
+    fs.create(STORE)
+    fs.append(
+        STORE,
+        [
+            FactInput(type="T", subject=f"S{i}", tags={"hot": "y", "odd": str(i % 2)})
+            for i in range(30)
+        ],
+    )
+    tags = {"hot": "y", "odd": "1"}
+    back = ReadDirection.BACKWARD
+    want = [f.id for f in fs.find_by_tags(STORE, tags, limit=4, direction=back).facts]
+    assert len(want) == 4
+    assert fs.build_tag_index(STORE)["built"]
+    fs.TAG_INDEX_PUSHDOWN_CAP = 10  # 30 "hot" and 15 "odd" rows: both past it
+    df = fs.find_by_tags_df(STORE, tags, limit=4, direction=back)
+    assert "LeftSemi" in df._jdf.queryExecution().executedPlan().toString()
+    assert [f.id for f in fs.find_by_tags(STORE, tags, limit=4, direction=back).facts] == want
