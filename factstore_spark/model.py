@@ -23,7 +23,7 @@ from __future__ import annotations
 import re
 import uuid
 from dataclasses import dataclass, field
-from datetime import datetime
+from datetime import datetime, timezone
 from enum import Enum
 from typing import Optional, Sequence, Union
 
@@ -126,6 +126,19 @@ class TimeRange:
         # [t, t) range raises there, so it raises here too.
         if self.start is not None and self.end is not None and self.end <= self.start:
             raise ValueError("time range end must be after start")
+
+
+def parse_instant(raw: Optional[str]) -> Optional[datetime]:
+    """A wire instant, as both transports read it: a ``Z`` suffix is
+    accepted and a bare (naive) stamp is read as UTC, so time-range
+    bounds never mix aware and naive datetimes (the TypeError class of
+    server errors). Empty or None -> None (unbounded)."""
+    if not raw:
+        return None
+    ts = datetime.fromisoformat(raw.replace("Z", "+00:00"))
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=timezone.utc)
+    return ts
 
 
 def validate_limit(limit: Optional[int]) -> Optional[int]:

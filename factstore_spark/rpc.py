@@ -39,7 +39,7 @@ import socket
 import socketserver
 import struct
 import threading
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Iterator, Optional
 
 from .model import (
@@ -54,6 +54,7 @@ from .model import (
     TagQueryBased,
     TagTypeItem,
     TimeRange,
+    parse_instant,
 )
 from .results import (
     AlreadyApplied,
@@ -110,17 +111,6 @@ def _fact_msg(f) -> dict:
 
 def _store_info(m) -> dict:
     return {"id": m.id, "name": m.name, "createdAt": _ts(m.created_at)}
-
-
-def _parse_instant(raw: str) -> datetime:
-    # Same normalization as server.py's HTTP layer: bare (naive)
-    # stamps are interpreted as UTC, so time-range bounds never mix
-    # aware and naive datetimes (session-TZ-dependent results or a
-    # TypeError-class INTERNAL deep in the engine).
-    ts = datetime.fromisoformat(raw.replace("Z", "+00:00"))
-    if ts.tzinfo is None:
-        ts = ts.replace(tzinfo=timezone.utc)
-    return ts
 
 
 def _parse_payload(d: Optional[dict]):
@@ -383,8 +373,8 @@ class FactStoreRpcService:
     def _FindFactsInTimeRange(self, req: dict) -> dict:
         try:
             rng = TimeRange(
-                start=_parse_instant(req["from"]) if req.get("from") else None,
-                end=_parse_instant(req["to"]) if req.get("to") else None,
+                start=parse_instant(req.get("from")),
+                end=parse_instant(req.get("to")),
             )
         except (ValueError, TypeError) as e:
             # TypeError: mixed aware/naive from/to bounds — a malformed

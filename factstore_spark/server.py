@@ -42,7 +42,6 @@ import base64
 import json
 import threading
 import traceback
-from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
@@ -60,6 +59,7 @@ from .model import (
     TagQueryBased,
     TagTypeItem,
     TimeRange,
+    parse_instant,
 )
 from .results import (
     AlreadyApplied,
@@ -500,8 +500,8 @@ class FactStoreHandler(BaseHTTPRequestHandler):
                 )
             else:
                 tr = TimeRange(
-                    start=_parse_instant(qs.get("from", [None])[0]),
-                    end=_parse_instant(qs.get("to", [None])[0]),
+                    start=parse_instant(qs.get("from", [None])[0]),
+                    end=parse_instant(qs.get("to", [None])[0]),
                 )
                 res = self.fs.find_in_time_range(
                     parts[2], tr, limit=_parse_limit(qs), direction=_parse_direction(qs)
@@ -587,7 +587,7 @@ class FactStoreHandler(BaseHTTPRequestHandler):
             self._json(404, {"error": "store not found"})
             return
         if isinstance(gen, FactIdNotFound):
-            self._json(404, {"error": "fact id not found"})
+            self._json(404, {"error": "fact id not found", "factId": gen.fact_id})
             return
         self.send_response(200)
         self.send_header("Content-Type", "text/event-stream")
@@ -608,18 +608,6 @@ class FactStoreHandler(BaseHTTPRequestHandler):
         except Exception as exc:  # noqa: BLE001
             self.log_error("subscribe stream aborted mid-body: %r", exc)
             self.close_connection = True
-
-
-def _parse_instant(raw):
-    """Same normalization as rpc.py: accept Z suffix, interpret bare
-    (naive) stamps as UTC so from/to bounds never mix aware and naive
-    (the TypeError class of 500s)."""
-    if not raw:
-        return None
-    ts = datetime.fromisoformat(raw.replace("Z", "+00:00"))
-    if ts.tzinfo is None:
-        ts = ts.replace(tzinfo=timezone.utc)
-    return ts
 
 
 class FactStoreServer:

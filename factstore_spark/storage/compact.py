@@ -36,7 +36,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import FACT_SCHEMA
-from .layout import StoreLayout, utcnow_us
+from .layout import StoreLayout, fold_log, utcnow_us
 
 
 def compact_store(
@@ -71,8 +71,9 @@ def compact_store(
     # Snapshot the pre-compaction commit state (we only supersede what
     # we read; appends landing during the rewrite survive the swap).
     commits_before = layout.read_commits()
-    max_seq = max(c.seq for c in commits_before)
-    if any(c.compacted_through == max_seq for c in commits_before):
+    before = fold_log(commits_before)
+    max_seq = before.last_seq
+    if before.compacted_through == max_seq:
         # Nothing new since the last compaction — rerunning would
         # collide with the existing compacted-<max_seq> dir.
         return {"files_before": len(files), "compacted": False, "reason": "up to date"}
@@ -95,7 +96,7 @@ def compact_store(
             .parquet(tmp_dir)
         )
 
-    prev_comp_dir, tail_files = layout.data_layout(max_seq)
+    prev_comp_dir, tail_files = layout.data_layout(before)
     if prev_comp_dir is not None and os.path.isdir(prev_comp_dir):
         # INCREMENTAL path — the 100 TB behavior: rewrite ONLY the date
         # partitions the tail commits touch (server-time appends land
@@ -151,10 +152,9 @@ def compact_store(
         # Re-check the guard INSIDE the lock: two concurrent compactions
         # over the same snapshot both pass the unlocked guard above; the
         # loser must back out cleanly (its os.rename would otherwise
-        # throw on the winner's existing out_dir).
-        if any(
-            c.compacted_through == max_seq for c in layout.read_commits()
-        ):
+        # throw on the winner's existing out_dir). A compaction past our
+        # snapshot also wins: ours would move the horizon backwards.
+        if layout.log_view().compacted_through >= max_seq:
             shutil.rmtree(tmp_dir, ignore_errors=True)
             return {
                 "files_before": len(files),
@@ -190,7 +190,7 @@ def compact_store(
             "rows": rows,
             "appended_at": utcnow_us().isoformat(),
             "idempotency_key": None,
-            "max_position": max(c.max_position for c in commits_before),
+            "max_position": before.head,
             "compacted_through": max_seq,
         }
         if not layout.write_compaction_record(record):
@@ -206,15 +206,8 @@ def compact_store(
         # resolved its file list pre-swap keeps working. What we purge
         # now is the PREVIOUS generation: anything a prior compaction
         # already superseded has had a full generation of grace.
-        prev_ct = max(
-            (
-                c.compacted_through
-                for c in commits_before
-                if c.compacted_through is not None
-            ),
-            default=None,
-        )
-        if prev_ct is not None:
+        prev_ct = before.compacted_through
+        if prev_ct >= 0:
             # A name-embedded seq <= prev_ct does NOT prove the data is
             # superseded on the optimistic backend: bulk dirs are named
             # by their RESERVE seq, and the publish can land under a

@@ -63,7 +63,7 @@ import pyarrow.parquet as pq
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
 
-    from .layout import StoreLayout
+    from .layout import LogView, StoreLayout
 
 SNAP_ROOT = "heads_snap"
 POINTER_FILE = "_snap.json"
@@ -199,15 +199,8 @@ class HeadsIndex:
         Exact at any snapshot staleness — see module docstring."""
         from .layout import subject_fingerprint
 
-        commits = self.layout.read_commits()
-        ct = max(
-            (
-                c.compacted_through
-                for c in commits
-                if c.compacted_through is not None
-            ),
-            default=-1,
-        )
+        view = self.layout.log_view()
+        ct = view.compacted_through
         snap = self.snap_meta()
         through = snap["through_seq"]
         fp = subject_fingerprint(subject)
@@ -218,16 +211,7 @@ class HeadsIndex:
         # and position order can differ) — ordering by max_position
         # makes the first commit containing the subject hold its head
         # row, so the scan early-exits there.
-        tail = [
-            c
-            for c in commits
-            if c.rows > 0
-            and c.compacted_through is None
-            and not c.checkpoint
-            and not c.reserved
-            and c.seq > ct
-            and c.seq > through
-        ]
+        tail = view.live_after(after_seq=through)
         # Highest position the BELOW-TAIL source (snapshot or compacted
         # layout) can hold. A tail hit above it is final; a tail hit
         # BELOW it can be superseded — reachable only on the optimistic
@@ -237,14 +221,9 @@ class HeadsIndex:
         # consulted and the higher position returned. (The r12
         # heads.json design silently returned the stale bulk row here.)
         if ct > through:
-            below_max = max(
-                (
-                    c.max_position
-                    for c in commits
-                    if c.compacted_through is not None
-                ),
-                default=-1,
-            )
+            # a compaction record carries the head of the log it
+            # compacted, so the latest one's is the highest
+            below_max = view.compaction.max_position
         elif snap["dir"] is not None:
             mp = snap.get("max_position")
             below_max = float("inf") if mp is None else mp
@@ -258,17 +237,9 @@ class HeadsIndex:
                 # compacted layout holds all data <= ct (subject-
                 # sorted, so the pushdown filter prunes row groups).
                 # Supersedes the snapshot too.
-                comp_dir = os.path.join(
-                    self.layout.data_dir, f"compacted-{ct:010d}"
+                return self._max_position_row(
+                    self.layout._compacted_files(ct), subject
                 )
-                files = []
-                for root, _dirs, names in os.walk(comp_dir):
-                    files.extend(
-                        os.path.join(root, n)
-                        for n in sorted(names)
-                        if n.endswith(".parquet")
-                    )
-                return self._max_position_row(files, subject)
             return self._shard_lookup(snap, subject)
 
         for c in sorted(tail, key=lambda c: -c.max_position):
@@ -358,25 +329,19 @@ class HeadsIndex:
         distributed via Spark when a session is given, streamed pyarrow
         (memory O(heads), not O(rows)) when not. Never required for
         correctness; run from ``maintain()``."""
-        last = self.layout.last_commit()
-        if last is None:
-            return {"built": False, "reason": "empty store"}
+        from .layout import fold_log
+
+        # the gap fold needs the records; horizons come from their view
         commits = self.layout.read_commits()
-        ct = max(
-            (c.compacted_through for c in commits if c.compacted_through is not None),
-            default=-1,
-        )
+        view = fold_log(commits)
+        if view.last is None:
+            return {"built": False, "reason": "empty store"}
+        ct = view.compacted_through
         # Fold horizon: the newest live data commit, or the compaction
         # horizon when everything has been folded into the compacted
         # snapshot (a freshly-maintained store has no live tail).
-        target = max(
-            (
-                c.seq
-                for c in commits
-                if c.rows > 0 and c.compacted_through is None and c.seq > ct
-            ),
-            default=ct,
-        )
+        live = view.live
+        target = live[-1].seq if live else ct
         if target < 0:
             return {"built": False, "reason": "no data commits"}
         snap = self.snap_meta()
@@ -409,8 +374,7 @@ class HeadsIndex:
         elif spark is not None and gap_rows > self.GAP_REBUILD_ROWS:
             rebuild_reason = "large gap"
         else:
-            ckpt = max((c.seq for c in commits if c.checkpoint), default=-1)
-            if ckpt > through:
+            if view.ckpt_seq > through:
                 # per-commit records in (through, ckpt] were folded into
                 # the checkpoint summary — the gap is not enumerable
                 rebuild_reason = "checkpoint folded the gap"
@@ -432,9 +396,9 @@ class HeadsIndex:
             except OSError:
                 # a concurrent purge won the race after the existence
                 # check — the rebuild reads the compacted layout instead
-                out = self._rebuild(target, spark, covered_max)
+                out = self._rebuild(view, target, spark, covered_max)
         else:
-            out = self._rebuild(target, spark, covered_max)
+            out = self._rebuild(view, target, spark, covered_max)
             out.setdefault("reason", rebuild_reason)
         self._sweep_old()
         return out
@@ -543,9 +507,15 @@ class HeadsIndex:
         pq.write_table(t, os.path.join(d, "data.parquet"), row_group_size=4096)
 
     def _rebuild(
-        self, target: int, spark: Optional["SparkSession"], covered_max: int
+        self,
+        view: "LogView",
+        target: int,
+        spark: Optional["SparkSession"],
+        covered_max: int,
     ) -> dict:
-        files = self.layout.data_files(max_seq=target)
+        """Rebuild from every data file of ``view``, whose commits all
+        lie at or below ``target``."""
+        files = self.layout.data_files(view)
         if not files:
             return {"built": False, "reason": "no data files"}
         new_name = f"snap-{uuid.uuid4().hex[:12]}"

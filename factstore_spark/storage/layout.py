@@ -40,6 +40,16 @@ race tests (tests/test_multiprocess_race.py). Bulk ingests publish
 through the same primitive (``publish_bulk``); only their concurrency
 differs (``run_bulk``).
 
+Every reader of log STATE — the latest seq, the head, the compaction
+and checkpoint horizons, the idempotency keys, the live data files —
+asks one ``LogView``, built by ``fold_log`` over raw commit records;
+the log's supersession rules live there and nowhere else. This flock
+backend folds each newly parsed jsonl suffix into a successor view
+(``_refresh``), so a lookup costs O(new commits), never O(log). The
+optimistic backend folds its merged claim + jsonl snapshot into a
+fresh view. Code that needs the records themselves (checkpoint folds,
+orphan sweeps) reads ``read_commits``.
+
 Crash safety: data files are written to a temp name and atomically
 renamed into ``data/`` BEFORE the commit line is appended; readers only
 trust files whose seq appears in ``commits.jsonl``, and stale orphan
@@ -48,6 +58,8 @@ files are swept on the next lock acquisition.
 
 from __future__ import annotations
 
+import bisect
+import copy
 import fcntl
 import json
 import os
@@ -55,7 +67,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 import pyarrow as pa
 import pyarrow.dataset as pa_ds
@@ -253,6 +265,240 @@ def _resolve_checkpoints(records: list[CommitRecord]) -> list[CommitRecord]:
     return [c for c in records if c.seq > ckpt.seq or c is ckpt]
 
 
+def _seq(c: CommitRecord) -> int:
+    return c.seq
+
+
+def _max_position(c: CommitRecord) -> int:
+    return c.max_position
+
+
+# A pending bulk reservation older than this stops holding subscription
+# cursors back (a crashed ingest; the orphan sweep reaps its dir then).
+RESERVATION_GRACE_S = 3600
+
+
+class LogView:
+    """One state of the commit log: the answer to every question about
+    log state (latest seq, head, horizons, idempotency keys, live
+    files), built by :func:`fold_log` over raw commit records. The
+    log's supersession rules live here and nowhere else:
+
+    - the logically-latest record is the one with the highest seq (a
+      compaction line reuses its snapshot's old seq, so the
+      physically-last line is not necessarily the latest commit);
+    - a checkpoint record replaces every record with seq <= its seq
+      (``_resolve_checkpoints``). It carries the keys and maxima of
+      what it folds, so keys and maxima are never lowered;
+    - the compaction with the highest ``compacted_through`` supersedes
+      every data commit at or below it: ``live`` holds the data commits
+      (rows > 0) past that horizon, in seq order;
+    - an optimistic bulk reservation is pending until some record
+      publishes its ``commit-<seq>-bulk`` directory.
+
+    Scalars and the live list never change once a view is handed out,
+    so a lock-free reader takes one view and reads everything from it.
+    Successive flock views share the grow-only indexes (``keys``,
+    ``fp_seqs``, ``nofps_seqs``, ``seq_rec``) and the live list's
+    storage, each view reading only its own prefix of the list. The
+    indexes may already hold later records; they are read only under
+    the commit lock, where the view in hand is the newest."""
+
+    def __init__(self) -> None:
+        self.last: Optional[CommitRecord] = None
+        self.last_seq = -1
+        self.head = -1
+        self.compaction: Optional[CommitRecord] = None
+        self.compacted_through = -1
+        self.ckpt: Optional[CommitRecord] = None
+        self.ckpt_seq = -1
+        self.n_records = 0  # records left after checkpoint supersession
+        self.pending: dict[str, CommitRecord] = {}  # bulk dir -> reservation
+        self._live: list[CommitRecord] = []
+        self._n_live = 0
+        self._pos_sorted = True  # live max_positions ascend with seq
+        self.keys: set[str] = set()
+        self.fp_seqs: dict[int, set[int]] = {}  # tag fp -> data commit seqs
+        self.nofps_seqs: set[int] = set()  # data commits with no tag summary
+        self.seq_rec: dict[int, CommitRecord] = {}  # seq -> latest record
+        self._seq_n: dict[int, int] = {}  # seq -> records folded at it
+        self._published: set[str] = set()  # bulk dirs some record names
+
+    @property
+    def live(self) -> list[CommitRecord]:
+        return self._live[: self._n_live]
+
+    def _successor(self) -> "LogView":
+        nxt = copy.copy(self)
+        nxt.pending = dict(self.pending)
+        return nxt
+
+    def _set_live(self, live: list[CommitRecord]) -> None:
+        self._live, self._n_live = live, len(live)
+        self._pos_sorted = all(
+            a.max_position <= b.max_position for a, b in zip(live, live[1:])
+        )
+
+    def _set_compaction(self, c: Optional[CommitRecord]) -> None:
+        self.compaction = c
+        self.compacted_through = -1 if c is None else c.compacted_through
+
+    def _fold(self, records: Iterable[CommitRecord]) -> None:
+        """Fold ``records`` into this view, in log order."""
+        keys, seq_rec, seq_n, fp_seqs = self.keys, self.seq_rec, self._seq_n, self.fp_seqs
+        last, last_seq, head, n_records = self.last, self.last_seq, self.head, self.n_records
+        for c in records:
+            seq = c.seq
+            if seq <= self.ckpt_seq:
+                continue  # superseded by the checkpoint
+            if c.checkpoint:
+                n_records = sum(n for s, n in seq_n.items() if s > seq)
+                self.pending = {k: r for k, r in self.pending.items() if r.seq > seq}
+                if self.compaction is not None and self.compaction.seq <= seq:
+                    self._set_compaction(None)  # the checkpoint takes its place
+                self.ckpt, self.ckpt_seq = c, seq
+            n_records += 1
+            seq_n[seq] = seq_n.get(seq, 0) + 1
+            if c.idempotency_key is not None:
+                keys.add(c.idempotency_key)
+            if c.keys is not None:
+                keys.update(c.keys)
+            if seq >= last_seq:
+                last, last_seq = c, seq
+            if c.max_position > head:
+                head = c.max_position
+            seq_rec[seq] = c
+            if c.compacted_through is not None:
+                if c.compacted_through > self.compacted_through:
+                    self._set_compaction(c)
+                    self._set_live(
+                        [x for x in self.live if x.seq > c.compacted_through]
+                    )
+            elif c.rows > 0:
+                if c.tag_fps is None:
+                    self.nofps_seqs.add(seq)
+                else:
+                    for fp in c.tag_fps:
+                        if fp in fp_seqs:
+                            fp_seqs[fp].add(seq)
+                        else:
+                            fp_seqs[fp] = {seq}
+                if seq > self.compacted_through:
+                    self._add_live(c)
+            elif c.reserved:
+                name = f"commit-{seq:010d}-bulk"
+                if name not in self._published:
+                    self.pending[name] = c
+            if c.file is not None and c.file.endswith("-bulk"):
+                self._published.add(c.file)
+                self.pending.pop(c.file, None)
+        self.last, self.last_seq, self.head, self.n_records = last, last_seq, head, n_records
+
+    def _add_live(self, c: CommitRecord) -> None:
+        live, n = self._live, self._n_live
+        if n and c.seq < live[n - 1].seq:
+            self._set_live(sorted(self.live + [c], key=_seq))
+            return
+        if len(live) != n:
+            live = self._live = live[:n]  # never write past another view's prefix
+        if n and c.max_position < live[n - 1].max_position:
+            self._pos_sorted = False
+        live.append(c)
+        self._n_live = n + 1
+
+    # -- lookups ------------------------------------------------------------
+
+    def key_seen(self, key: str) -> bool:
+        return key in self.keys
+
+    def next_seq(self) -> int:
+        """Next commit seq: past both the last seq AND the head position
+        — a bulk commit may carry caller-assigned positions larger than
+        one stride (e.g. source offsets), and the next commit's position
+        range must still start above the head or total order breaks."""
+        if self.last_seq < 0:
+            return 0
+        return max(self.last_seq + 1, self.head // POSITION_STRIDE + 1)
+
+    def published_head(self) -> int:
+        """The head, bounded below every pending reservation younger
+        than RESERVATION_GRACE_S (see
+        StoreLayout.published_head_position)."""
+        import time as _time
+
+        head = self.head
+        for c in self.pending.values():
+            try:
+                ts = datetime.fromisoformat(c.appended_at)
+                if ts.tzinfo is None:
+                    ts = ts.replace(tzinfo=timezone.utc)
+                if _time.time() - ts.timestamp() > RESERVATION_GRACE_S:
+                    continue  # crashed ingest: a permanent hole
+            except ValueError:
+                pass
+            head = min(head, c.seq * POSITION_STRIDE - 1)
+        return head
+
+    def compaction_after(
+        self, after_pos: int, after_seq: int = -1
+    ) -> Optional[CommitRecord]:
+        """The compaction record when its data can hold positions past
+        ``after_pos`` and it is not covered through ``after_seq``."""
+        c = self.compaction
+        if c is None or c.max_position <= after_pos or c.compacted_through <= after_seq:
+            return None
+        return c
+
+    def live_after(self, after_pos: int = -1, after_seq: int = -1) -> list[CommitRecord]:
+        """Live data commits with max_position > ``after_pos`` and seq >
+        ``after_seq``, in seq order. Bisects to the first match, so the
+        cost is the size of the answer while positions ascend with seq
+        (always on flock)."""
+        live, n = self._live, self._n_live
+        lo = bisect.bisect_right(live, after_seq, 0, n, key=_seq)
+        if self._pos_sorted:
+            lo = max(lo, bisect.bisect_right(live, after_pos, 0, n, key=_max_position))
+        return [c for c in live[lo:n] if c.max_position > after_pos]
+
+    def dcb_candidates(
+        self, item_fps: list[list[int]], after_pos: int, after_seq: int = -1
+    ) -> list[CommitRecord]:
+        """Live data commits that could hold a fact matching ANY item
+        (see StoreLayout.dcb_candidate_files), from the fp -> seqs index
+        in O(matching commits)."""
+        if not item_fps or any(not fps for fps in item_fps):
+            return self.live_after(after_pos, after_seq)
+        cand = set(self.nofps_seqs)
+        for fps in item_fps:
+            sets = [self.fp_seqs.get(fp) for fp in fps]
+            if any(s is None for s in sets):
+                continue  # some required pair never committed
+            cand |= set.intersection(*sets)
+        floor = max(after_seq, self.compacted_through)
+        out = []
+        for seq in sorted(cand):
+            c = self.seq_rec[seq]
+            if (
+                floor < seq <= self.last_seq
+                and c.rows > 0
+                and c.compacted_through is None
+                and c.max_position > after_pos
+            ):
+                out.append(c)
+        return out
+
+
+def fold_log(
+    records: Iterable[CommitRecord], base: Optional[LogView] = None
+) -> LogView:
+    """The one fold over raw commit records: a fresh view of
+    ``records``, or ``base``'s successor with ``records`` folded on top
+    (``base`` itself is left unchanged)."""
+    view = LogView() if base is None else base._successor()
+    view._fold(records)
+    return view
+
+
 class _CommitGroup:
     """Group-commit queue of one flock-backend store (round 15, guide
     §2.6/§5 applied to the commit protocol).
@@ -335,18 +581,22 @@ class StoreLayout:
     """Filesystem handle for one store's data + commit log."""
 
     def __init__(self, store_dir: str):
+        import threading as _threading
+
         self.store_dir = store_dir
         self.data_dir = os.path.join(store_dir, DATA_DIR)
         self.stream_dir = os.path.join(store_dir, STREAM_DIR)
-        # read_commits memo: (inode, bytes parsed through, records).
+        # Parsed log: (inode, bytes parsed through, records, n, view).
         # The log is append-only between checkpoints, so growth since
-        # the cached offset is parsed incrementally (see read_commits).
-        # Correct across processes because any append grows the file;
-        # a checkpoint REPLACES the file (tmp + rename = new inode), so
-        # the inode in the memo detects the swap and forces a full
+        # the parsed offset is parsed and folded incrementally (see
+        # _refresh). Correct across processes because any append grows
+        # the file; a checkpoint REPLACES the file (tmp + rename = new
+        # inode), so the inode detects the swap and forces a full
         # reparse — an offset into the old file would be garbage in the
-        # new one.
-        self._commits_cache: Optional[tuple[int, int, list[CommitRecord]]] = None
+        # new one. ``records`` is a grow-only list shared by successive
+        # states; each state reads its first ``n``.
+        self._log: Optional[tuple] = None
+        self._log_mu = _threading.Lock()
         # Group-commit state (round 15, guide §2.6 applied to the
         # commit protocol): the commit-log fsync is ~70% of an
         # uncontended append (measured 11.6 ms of a 16.9 ms p50) and
@@ -366,39 +616,11 @@ class StoreLayout:
         # before it is durable, which the pre-group-commit code
         # already allowed (readers never took the flock and lines were
         # readable between write() and the in-lock fsync).
-        import threading as _threading
-
         self._gc_cv = _threading.Condition()
         self._gc_ticket = 0  # last ticket handed out (line written)
         self._gc_synced = 0  # last ticket covered by a completed fsync
         self._gc_sync_in_flight = False
         self._group = _CommitGroup()
-        # Derived log view (round 15): the append hot path used to
-        # re-scan EVERY commit record per append for idempotency keys,
-        # next_seq/head, and DCB tag-fp candidates — O(all commits) per
-        # append, i.e. quadratic in store lifetime, the exact cost the
-        # incremental read_commits parse exists to avoid (profiled: the
-        # dcb_candidate_files record scan was the #2 per-append term
-        # after fsync at ~1.2k commits and growing linearly). This memo
-        # is maintained INSIDE read_commits from exactly the newly
-        # parsed lines, so each append pays O(its own commit) to keep
-        # it fresh. Contents (all over the RAW record stream; queries
-        # filter supersession at lookup time):
-        #   keys: every idempotency key ever recorded (records + folded
-        #     checkpoint key sets) — a superset is safe: keys are never
-        #     un-seen, and folding preserves them by construction.
-        #   max_seq / head_pos: running maxima (next_seq inputs).
-        #   fp_seqs: tag fingerprint -> set of commit seqs whose
-        #     summary contains it; nofps_seqs: rows>0 commits with no
-        #     tag summary (always DCB-eligible); seq_rec: seq -> latest
-        #     raw record (a compaction line reuses its snapshot's seq
-        #     and must shadow the data record it supersedes).
-        #   compaction_ct / ckpt_seq: supersession horizons.
-        # The optimistic backend merges claim-dir records into its
-        # read_commits output, which this jsonl-side memo cannot see —
-        # it overrides _log_derived() to return None and keeps the
-        # explicit-snapshot scans.
-        self._derived: Optional[dict] = None
 
     def initialize(self) -> None:
         os.makedirs(self.data_dir, exist_ok=True)
@@ -431,151 +653,97 @@ class StoreLayout:
 
     # -- commit log ---------------------------------------------------------
 
-    def read_commits(self) -> list[CommitRecord]:
-        """Parse the commit log, incrementally: the log is append-only
-        (every writer appends whole fsynced lines under a lock or via
-        O_APPEND), so when the file has only GROWN since the cached
-        parse, just the new suffix is read — per-append log cost stays
-        O(new commits), not O(all commits) (which would make a
-        long-lived store's appends quadratic in lifetime)."""
+    def _refresh(self) -> tuple:
+        """Parse and fold the commit log's growth since the last call:
+        the log is append-only (every writer appends whole fsynced
+        lines under a lock or via O_APPEND), so when the file has only
+        GROWN, just the new suffix is read and folded into a successor
+        of the last view — per-call cost is O(new commits), never
+        O(all commits). Serialized per instance: reader threads
+        (subscription polls) share this layout with the appender."""
         path = os.path.join(self.store_dir, COMMITS_FILE)
+        log = self._log
         try:
-            f = open(path, "rb")
+            st = os.stat(path)
         except FileNotFoundError:
-            return []
-        with f:
-            # fstat the OPEN fd so inode and size describe the same
-            # file even if a checkpoint swaps the log concurrently.
-            st = os.fstat(f.fileno())
-            size = st.st_size
-            out: list[CommitRecord] = []
-            start = 0
-            if self._commits_cache is not None:
-                cached_ino, cached_size, cached = self._commits_cache
-                if cached_ino == st.st_ino:
-                    if cached_size == size:
-                        return _resolve_checkpoints(list(cached))
-                    if cached_size < size:
-                        out = list(cached)
-                        start = cached_size
-                # different inode (checkpoint swap) or shrunk: full reparse
-            if start:
-                f.seek(start)
-            data = f.read(size - start)
-        # Only complete lines are ever durable, but guard anyway: stop
-        # at the last newline and leave the remainder for the next read.
-        end = data.rfind(b"\n")
-        if end < 0:
-            parsed_through = start
-            lines = []
-        else:
-            parsed_through = start + end + 1
-            lines = data[: end + 1].splitlines()
-        n_before = len(out)
-        for raw in lines:
-            raw = raw.strip()
-            if not raw:
-                continue
+            return (None, 0, [], 0, LogView())
+        if log is not None and (log[0], log[1]) == (st.st_ino, st.st_size):
+            return log  # unchanged since the last parse
+        with self._log_mu:
             try:
-                d = json.loads(raw)
-            except json.JSONDecodeError:
-                # torn-write artifact: a writer died mid-line and a
-                # later append isolated the fragment with a healing
-                # newline (append_commit). Only fsynced COMPLETE lines
-                # are commits, so the fragment is a non-commit by
-                # construction — same stance as the optimistic
-                # backend's unparseable-slot skip (_read_claim).
-                continue
-            out.append(commit_record_from_dict(d))
-        self._commits_cache = (st.st_ino, parsed_through, list(out))
-        self._derived_update(out, full=(start == 0), n_before=n_before)
-        return _resolve_checkpoints(out)
+                f = open(path, "rb")
+            except FileNotFoundError:
+                return (None, 0, [], 0, LogView())
+            with f:
+                # fstat the OPEN fd so inode and size describe the same
+                # file even if a checkpoint swaps the log concurrently.
+                st = os.fstat(f.fileno())
+                log = self._log
+                if log is not None and log[0] == st.st_ino and log[1] <= st.st_size:
+                    if log[1] == st.st_size:
+                        return log
+                    _ino, start, records, _n, base = log
+                    f.seek(start)
+                else:  # first read, checkpoint swap or shrink: full reparse
+                    start, records, base = 0, [], None
+                data = f.read(st.st_size - start)
+            # Only complete lines are ever durable, but guard anyway: stop
+            # at the last newline and leave the remainder for the next read.
+            end = data.rfind(b"\n")
+            new: list[CommitRecord] = []
+            for raw in data[: end + 1].splitlines():
+                raw = raw.strip()
+                if not raw:
+                    continue
+                try:
+                    d = json.loads(raw)
+                except json.JSONDecodeError:
+                    # torn-write artifact: a writer died mid-line and a
+                    # later append isolated the fragment with a healing
+                    # newline (append_commit). Only fsynced COMPLETE lines
+                    # are commits, so the fragment is a non-commit by
+                    # construction — same stance as the optimistic
+                    # backend's unparseable-slot skip (_read_claim).
+                    continue
+                new.append(commit_record_from_dict(d))
+            records.extend(new)
+            view = fold_log(new, base) if new or base is None else base
+            self._log = (st.st_ino, start + end + 1, records, len(records), view)
+            return self._log
 
-    def _derived_update(
-        self, records: list[CommitRecord], full: bool, n_before: int
-    ) -> None:
-        """Fold newly parsed records into the derived log view (see the
-        __init__ note). ``full`` = the whole log was reparsed
-        (checkpoint swap / first read) — rebuild from scratch."""
-        d = self._derived
-        publish = False
-        if full or d is None:
-            # Build the fresh view COMPLETELY before publishing it:
-            # reader threads (subscription polls) share this layout
-            # with the appender, and a half-filled rebuild visible
-            # through self._derived could hand the appender's
-            # idempotency check an incomplete key set. Incremental
-            # updates below are safe to apply in place — every one is
-            # idempotent and monotone (set adds, dict puts, maxima),
-            # so concurrent re-application converges.
-            d = {
-                "keys": set(),
-                "max_seq": -1,
-                "head_pos": -1,
-                "fp_seqs": {},
-                "nofps_seqs": set(),
-                "seq_rec": {},
-                "compaction_ct": -1,
-                "compaction_rec": None,
-                "ckpt_seq": -1,
-            }
-            publish = True
-            new = records
-        else:
-            new = records[n_before:]
-        for c in new:
-            if c.idempotency_key is not None:
-                d["keys"].add(c.idempotency_key)
-            if c.keys is not None:
-                d["keys"].update(c.keys)
-            if c.seq > d["max_seq"]:
-                d["max_seq"] = c.seq
-            if c.max_position > d["head_pos"]:
-                d["head_pos"] = c.max_position
-            d["seq_rec"][c.seq] = c
-            if c.compacted_through is not None and c.compacted_through > d["compaction_ct"]:
-                d["compaction_ct"] = c.compacted_through
-                d["compaction_rec"] = c
-            if c.checkpoint:
-                d["ckpt_seq"] = max(d["ckpt_seq"], c.seq)
-            if c.rows > 0 and c.compacted_through is None:
-                if c.tag_fps is None:
-                    d["nofps_seqs"].add(c.seq)
-                else:
-                    for fp in c.tag_fps:
-                        d["fp_seqs"].setdefault(fp, set()).add(c.seq)
-        if publish:
-            self._derived = d
+    def read_commits(self) -> list[CommitRecord]:
+        """The commit records, checkpoint supersession applied. For code
+        that needs the records themselves (checkpoint folds, orphan
+        sweeps, maintenance gap folds); log STATE comes from
+        :meth:`log_view`."""
+        _ino, _through, records, n, _view = self._refresh()
+        return _resolve_checkpoints(records[:n])
 
-    def _log_derived(self) -> Optional[dict]:
-        """The derived log view, refreshed through the incremental
-        parse; None when the backend cannot maintain one (the
-        optimistic backend's claim-dir merge bypasses the jsonl memo)."""
-        self.read_commits()
-        return self._derived
+    def log_view(self) -> LogView:
+        """The current log state (see LogView), refreshed through the
+        incremental parse."""
+        return self._refresh()[4]
+
+    def _view(self, snapshot=None) -> LogView:
+        """Lookups take an optional snapshot: a LogView, or an explicit
+        record list (folded into a fresh view); None reads the current
+        state."""
+        if snapshot is None:
+            return self.log_view()
+        if isinstance(snapshot, LogView):
+            return snapshot
+        return fold_log(snapshot)
 
     def last_commit(self) -> Optional[CommitRecord]:
-        """The record with the highest seq. (A compaction line is
-        appended with its snapshot's old seq, so the physically-last
-        line is not necessarily the logically-latest commit.)
-        O(1) via the derived view when available (round 15)."""
-        d = self._log_derived()
-        if d is not None:
-            if d["max_seq"] < 0:
-                return None
-            return d["seq_rec"][d["max_seq"]]
-        commits = self.read_commits()
-        if not commits:
-            return None
-        return max(commits, key=lambda c: c.seq)
+        """The logically-latest record (highest seq; see LogView)."""
+        return self.log_view().last
 
     def head_position(self) -> int:
         """Current max position, or -1 for an empty store. The replay
         head pin (FdbFactStreamer.kt:60-84) reads this once, up front."""
-        commits = self.read_commits()
-        return max((c.max_position for c in commits), default=-1)
+        return self.log_view().head
 
-    def published_head_position(self) -> int:
+    def published_head_position(self, snapshot=None) -> int:
         """Highest position SAFE for a forward-moving subscription
         cursor: the head, bounded below any PENDING bulk reservation
         (range claimed, data not yet published). A cursor advanced past
@@ -586,54 +754,11 @@ class StoreLayout:
         the orphan sweep's gate — after which a crashed ingest's data
         dir is reaped anyway) stop holding the cursor back. Equals
         head_position() on the flock backend (no reservations)."""
-        import time as _time
-        from datetime import datetime as _dt
-        from datetime import timezone as _tz
+        return self._view(snapshot).published_head()
 
-        commits = self.read_commits()
-        head = max((c.max_position for c in commits), default=-1)
-        published = {c.file for c in commits if c.file}
-        for c in commits:
-            if not c.reserved:
-                continue
-            if f"commit-{c.seq:010d}-bulk" in published:
-                continue  # its data landed
-            try:
-                ts = _dt.fromisoformat(c.appended_at)
-                if ts.tzinfo is None:
-                    ts = ts.replace(tzinfo=_tz.utc)
-                if _time.time() - ts.timestamp() > 3600:
-                    continue  # crashed ingest: a permanent hole
-            except ValueError:
-                pass
-            head = min(head, c.seq * POSITION_STRIDE - 1)
-        return head
-
-    def next_seq(self, commits: Optional[list[CommitRecord]] = None) -> int:
-        """Next commit seq: past both the last seq AND the head position
-        — a bulk commit may carry caller-assigned positions larger than
-        one stride (e.g. source offsets), and the next commit's position
-        range must still start above the head or total order breaks.
-
-        Pass a pre-read ``commits`` snapshot in the append path so one
-        commit-log parse serves seq, head AND idempotency (the log is
-        O(commits) long). Without a snapshot, the derived log view
-        answers in O(1) (round 15 — running maxima survive checkpoint
-        folding, which preserves max seq/position by construction)."""
-        if commits is None:
-            d = self._log_derived()
-            if d is not None:
-                if d["max_seq"] < 0:
-                    return 0
-                return max(
-                    d["max_seq"] + 1, d["head_pos"] // POSITION_STRIDE + 1
-                )
-            commits = self.read_commits()
-        if not commits:
-            return 0
-        max_seq = max(c.seq for c in commits)
-        head = max(c.max_position for c in commits)
-        return max(max_seq + 1, head // POSITION_STRIDE + 1)
+    def next_seq(self, snapshot=None) -> int:
+        """Next commit seq of ``snapshot`` (see LogView.next_seq)."""
+        return self._view(snapshot).next_seq()
 
     # -- stream mirror ------------------------------------------------------
 
@@ -658,28 +783,13 @@ class StoreLayout:
             except FileExistsError:
                 pass
 
-    def idempotency_key_seen(
-        self, key: str, commits: Optional[list[CommitRecord]] = None
-    ) -> bool:
+    def idempotency_key_seen(self, key: str, snapshot=None) -> bool:
         """Idempotency keys live in the commit log itself, so the check
         and the record are part of the same append protocol
         (FdbFactAppender.kt:52-64, FdbFactStoreContext.kt:377-393).
         Checkpoint records carry the merged keys of every commit they
-        folded, so the guarantee survives log checkpointing.
-
-        Without an explicit snapshot this is an O(1) set lookup in the
-        derived log view (round 15 — the full-log scan made every
-        append O(lifetime commits)); folding preserves keys by
-        construction, so the derived set equals the scan's answer."""
-        if commits is None:
-            d = self._log_derived()
-            if d is not None:
-                return key in d["keys"]
-            commits = self.read_commits()
-        return any(
-            c.idempotency_key == key or (c.keys is not None and key in c.keys)
-            for c in commits
-        )
+        folded, so the guarantee survives log checkpointing."""
+        return self._view(snapshot).key_seen(key)
 
     # -- locking ------------------------------------------------------------
 
@@ -836,14 +946,15 @@ class StoreLayout:
 
     # -- the append protocol (attempt runners + the one row commit) ---------
 
-    def log_snapshot(self) -> Optional[list[CommitRecord]]:
-        """The snapshot one append attempt evaluates against. Here None:
-        one incremental parse refreshes the derived log view, whose O(1)
-        idempotency, next-seq and head lookups then answer for it — the
-        held commit lock keeps that view current for the whole attempt
-        (the optimistic backend returns its explicit merged log)."""
-        self.read_commits()
-        return None
+    def log_snapshot(self) -> LogView:
+        """The one view an append attempt evaluates against: its
+        idempotency check and its commit's next_seq both read THIS
+        view. On flock the held commit lock keeps it current for the
+        whole attempt. On optimistic a rival commit landing after it
+        takes that seq first, so the claim loses and the retry re-checks
+        the key; letting next_seq re-read the log instead would claim
+        past the rival and apply an idempotent retry twice."""
+        return self.log_view()
 
     def run_append(self, attempt):
         """Drive one row append to its result. ``attempt()`` evaluates
@@ -864,10 +975,10 @@ class StoreLayout:
         lock across the Spark write: the lock alone owns the next range,
         whatever its size, so ``span`` is never measured."""
         with self.commit_lock(upkeep="cadence"):
-            commits = self.read_commits()
-            if self.idempotency_key_seen(key, commits):
+            view = self.log_view()
+            if view.key_seen(key):
                 return None
-            return write(self.next_seq(commits), utcnow_us(), None)
+            return write(view.next_seq(), utcnow_us(), None)
 
     def _data_file_name(self, seq: int) -> str:
         """Name of a row commit's data file — seq-derived here: under
@@ -890,7 +1001,7 @@ class StoreLayout:
         rows: list[dict],
         appended_at: datetime,
         idempotency_key: Optional[str],
-        commits: Optional[list[CommitRecord]] = None,
+        snapshot=None,
         defer_sync: bool = False,
     ) -> Optional[tuple[int, list[int]] | tuple[int, list[int], int]]:
         """Write one row commit: parquet file, then its record through
@@ -901,15 +1012,14 @@ class StoreLayout:
         ``__init__``) — or None when the publish lost the seq (the data
         file is removed; re-evaluate against a fresh snapshot).
 
-        ``commits`` pins an explicit snapshot: seq and head come from
-        it, so any commit landing after it takes that seq first and
-        this publish loses. With ``commits=None`` they come from the
-        derived log view in O(1) (round 15 — the flock hot path).
+        Seq and head come from ``snapshot`` (see :meth:`_view`; the
+        attempt passes its :meth:`log_snapshot`), so any commit landing
+        after it takes that seq first and this publish loses.
         Subject-head state is DERIVED from the log (storage/heads.py) —
         the append path writes nothing per-subject, so per-append cost
         is flat in lifetime subject cardinality."""
-        d = self._log_derived() if commits is None else None
-        seq = self.next_seq(commits)
+        view = self._view(snapshot)
+        seq = view.next_seq()
         base = seq * POSITION_STRIDE
         positions = [base + i for i in range(len(rows))]
         for row, pos in zip(rows, positions):
@@ -926,19 +1036,12 @@ class StoreLayout:
 
         # empty commits derive the head from the snapshot in hand — the
         # record should describe the snapshot its seq came from
-        if positions:
-            head = positions[-1]
-        elif d is not None:
-            head = d["head_pos"]
-        else:
-            snap = commits if commits is not None else self.read_commits()
-            head = max((c.max_position for c in snap), default=-1)
         record = {
             "seq": seq,
             "rows": len(rows),
             "appended_at": appended_at.isoformat(),
             "idempotency_key": idempotency_key,
-            "max_position": head,
+            "max_position": positions[-1] if positions else view.head,
             "tag_fps": commit_tag_fps(rows),
             "subj_fps": commit_subj_fps(rows),
         }
@@ -984,50 +1087,42 @@ class StoreLayout:
 
     # -- local reads (engine-internal; queries go through Spark) ------------
 
-    def data_layout(
-        self, max_seq: Optional[int] = None
-    ) -> tuple[Optional[str], list[str]]:
+    def data_layout(self, snapshot=None) -> tuple[Optional[str], list[str]]:
         """(compacted_dir, tail_files): the latest compacted snapshot
         directory (a hive layout partitioned by ``fact_date`` — read it
         as a DIRECTORY so Spark discovers the partition column and can
-        prune dates) plus the per-commit parquet files appended since
-        that snapshot."""
-        committed = [c for c in self.read_commits() if c.rows > 0]
-        if max_seq is not None:
-            committed = [c for c in committed if c.seq <= max_seq]
-        # A compaction record supersedes every commit with
-        # seq <= compacted_through — resolve the latest one first.
-        compaction = None
-        for c in committed:
-            if c.compacted_through is not None:
-                if compaction is None or c.compacted_through > compaction.compacted_through:
-                    compaction = c
-        comp_dir = None
-        if compaction is not None:
-            comp_dir = os.path.join(
-                self.data_dir, f"compacted-{compaction.compacted_through:010d}"
-            )
-            committed = [
-                c
-                for c in committed
-                if c.compacted_through is None and c.seq > compaction.compacted_through
-            ]
-        files: list[str] = []
-        for c in committed:
-            if c.compacted_through is not None:
-                continue
-            files.extend(self._files_of(c))
-        return comp_dir, files
+        prune dates) plus the per-commit parquet files of the live
+        commits past it."""
+        view = self._view(snapshot)
+        ct = view.compacted_through
+        comp_dir = self._compacted_dir(ct) if ct >= 0 else None
+        return comp_dir, self._resolve_files(None, view.live)
 
-    def data_files(self, max_seq: Optional[int] = None) -> list[str]:
-        comp_dir, tail = self.data_layout(max_seq)
+    def data_files(self, snapshot=None) -> list[str]:
+        view = self._view(snapshot)
+        return self._resolve_files(view.compaction, view.live)
+
+    def _compacted_dir(self, ct: int) -> str:
+        return os.path.join(self.data_dir, f"compacted-{ct:010d}")
+
+    def _compacted_files(self, ct: int) -> list[str]:
+        """Parquet files of the compacted snapshot through ``ct``."""
         files: list[str] = []
-        if comp_dir is not None:
-            for root, _dirs, names in os.walk(comp_dir):
-                files.extend(
-                    os.path.join(root, n) for n in sorted(names) if n.endswith(".parquet")
-                )
-        files.extend(tail)
+        for root, _dirs, names in os.walk(self._compacted_dir(ct)):
+            files.extend(
+                os.path.join(root, n) for n in sorted(names) if n.endswith(".parquet")
+            )
+        return files
+
+    def _resolve_files(
+        self, compaction: Optional[CommitRecord], commits: list[CommitRecord]
+    ) -> list[str]:
+        """Physical files of a compaction (None: none) plus commits."""
+        files = [] if compaction is None else self._compacted_files(
+            compaction.compacted_through
+        )
+        for c in commits:
+            files.extend(self._files_of(c))
         return files
 
     def _files_of(self, c: CommitRecord) -> list[str]:
@@ -1090,16 +1185,10 @@ class StoreLayout:
         under the cap (DCB commit skipping)."""
         with self.commit_lock():
             commits = self.read_commits()
-            ct = None
-            comp_rows = 0
-            for c in commits:
-                if c.compacted_through is not None and (
-                    ct is None or c.compacted_through > ct
-                ):
-                    ct = c.compacted_through
-                    comp_rows = c.rows
-            if ct is None:
+            comp = fold_log(commits).compaction
+            if comp is None:
                 return {"checkpointed": False, "reason": "no compaction"}
+            ct = comp.compacted_through
             folded = [c for c in commits if c.seq <= ct]
             if len(folded) <= 1 and all(c.checkpoint for c in folded):
                 return {"checkpointed": False, "reason": "up to date"}
@@ -1121,7 +1210,7 @@ class StoreLayout:
                             fps = None
             summary = CommitRecord(
                 seq=ct,
-                rows=comp_rows,
+                rows=comp.rows,
                 appended_at=utcnow_us().isoformat(),
                 idempotency_key=None,
                 max_position=max_pos,
@@ -1163,7 +1252,7 @@ class StoreLayout:
             os.fsync(dfd)
         finally:
             os.close(dfd)
-        self._commits_cache = None
+        self._log = None
 
     def publish_bulk(
         self,
@@ -1183,12 +1272,10 @@ class StoreLayout:
         seq the directory is named for; the optimistic backend re-reads
         and re-claims until a slot is its own."""
         while True:
-            commits = self.read_commits()
-            if idempotency_key is not None and self.idempotency_key_seen(
-                idempotency_key, commits
-            ):
+            view = self.log_snapshot()
+            if idempotency_key is not None and view.key_seen(idempotency_key):
                 return None
-            seq = self.next_seq(commits)
+            seq = view.next_seq()
             record = {
                 "seq": seq,
                 "rows": rows,
@@ -1265,114 +1352,15 @@ class StoreLayout:
         eligible — including skipping the compacted prefix when the
         compaction horizon is itself indexed.
 
-        Round 15: with the derived log view, candidates come from the
-        inverted fp->seqs index in O(matching commits) instead of a
-        scan of every commit record per call — the per-append DCB
-        check was O(lifetime commits) even when the answer was "no
-        candidates" (fresh tags), the #2 profiled append cost and
-        growing. Supersession (compaction/checkpoint) and the position
-        bound are applied at lookup time, so the answer is identical
-        to the scan's."""
-        unprunable_item = any(not fps for fps in item_fps) or not item_fps
-        d = None if unprunable_item else self._log_derived()
-        if d is not None:
-            cand: set[int] = set(d["nofps_seqs"])
-            fp_seqs = d["fp_seqs"]
-            for fps in item_fps:
-                sets = [fp_seqs.get(fp) for fp in fps]
-                if any(s is None for s in sets):
-                    continue  # some required pair never committed
-                cand |= set.intersection(*sets) if len(sets) > 1 else set(sets[0])
-            files = self._compacted_prefix_files(after_pos, after_seq, d)
-            ct, ckpt = d["compaction_ct"], d["ckpt_seq"]
-            for seq in sorted(cand):
-                c = d["seq_rec"].get(seq)
-                if (
-                    c is not None
-                    and c.rows > 0
-                    and c.compacted_through is None
-                    and c.max_position > after_pos
-                    and c.seq > after_seq
-                    and c.seq > ct
-                    and c.seq > ckpt
-                ):
-                    files.extend(self._files_of(c))
-            return files
-        files, live = self._eligible_after_position(after_pos, after_seq=after_seq)
-        for c in live:
-            if not unprunable_item and c.tag_fps is not None:
-                fpset = set(c.tag_fps)
-                if not any(all(fp in fpset for fp in fps) for fps in item_fps):
-                    continue  # no item's full tag set appears in this commit
-            files.extend(self._files_of(c))
-        return files
+        Candidates come from the view's fp -> seqs index in
+        O(matching commits) (LogView.dcb_candidates)."""
+        view = self.log_view()
+        return self._resolve_files(
+            view.compaction_after(after_pos, after_seq),
+            view.dcb_candidates(item_fps, after_pos, after_seq),
+        )
 
-    def _compacted_prefix_files(
-        self, after_pos: int, after_seq: int, d: dict
-    ) -> list[str]:
-        """Compacted-prefix leg of the DCB prune (derived-view fast
-        path): same eligibility rule as _eligible_after_position —
-        compacted data has no per-commit summary, so it is eligible
-        whenever its positions pass the cursor and the derived tag
-        index does not already cover it."""
-        files: list[str] = []
-        ct, comp = d["compaction_ct"], d["compaction_rec"]
-        if comp is None or comp.max_position <= after_pos or ct <= after_seq:
-            return files
-        comp_dir = os.path.join(self.data_dir, f"compacted-{ct:010d}")
-        for root, _dirs, names in os.walk(comp_dir):
-            files.extend(
-                os.path.join(root, n)
-                for n in sorted(names)
-                if n.endswith(".parquet")
-            )
-        return files
-
-    def _eligible_after_position(
-        self, after_pos: int, after_seq: int = -1
-    ) -> tuple[list[str], list[CommitRecord]]:
-        """Shared position prune: (compacted-prefix files — only when
-        the compaction's max_position passes the cursor — and the
-        post-compaction commit records whose max_position passes it).
-        Both the DCB condition check and the tail-follow subscription
-        start from this; the commit log's max_position bounds every
-        commit's file, so nothing below the cursor is ever opened.
-        ``after_seq`` additionally drops commits (and the compacted
-        prefix) fully covered by a derived index — see
-        dcb_candidate_files."""
-        committed = [c for c in self.read_commits() if c.rows > 0]
-        compaction = None
-        for c in committed:
-            if c.compacted_through is not None:
-                if compaction is None or c.compacted_through > compaction.compacted_through:
-                    compaction = c
-        files: list[str] = []
-        if compaction is not None:
-            if compaction.max_position > after_pos and compaction.compacted_through > after_seq:
-                comp_dir = os.path.join(
-                    self.data_dir, f"compacted-{compaction.compacted_through:010d}"
-                )
-                for root, _dirs, names in os.walk(comp_dir):
-                    files.extend(
-                        os.path.join(root, n)
-                        for n in sorted(names)
-                        if n.endswith(".parquet")
-                    )
-            committed = [
-                c
-                for c in committed
-                if c.compacted_through is None and c.seq > compaction.compacted_through
-            ]
-        live = [
-            c
-            for c in committed
-            if c.compacted_through is None
-            and c.max_position > after_pos
-            and c.seq > after_seq
-        ]
-        return files, live
-
-    def data_files_after_position(self, after_pos: int) -> list[str]:
+    def data_files_after_position(self, after_pos: int, snapshot=None) -> list[str]:
         """Parquet files that can contain positions > ``after_pos`` —
         the tail-follower's per-poll prune. A live subscription's poll
         previously opened EVERY store file through a dataset filter
@@ -1380,10 +1368,10 @@ class StoreLayout:
         term of delivery lag under write load, where each append adds a
         file); with the commit-log prune a tail poll opens only the
         commits that actually landed past the cursor."""
-        files, live = self._eligible_after_position(after_pos)
-        for c in live:
-            files.extend(self._files_of(c))
-        return files
+        view = self._view(snapshot)
+        return self._resolve_files(
+            view.compaction_after(after_pos), view.live_after(after_pos)
+        )
 
     def position_of_fact(self, fact_id: str) -> Optional[int]:
         """id -> position (FdbFactStore.kt:108-133's id index equivalent)."""

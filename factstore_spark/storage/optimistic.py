@@ -13,6 +13,11 @@ state and retries — exactly the optimistic-transaction shape of the
 reference's FDB backend (FdbFactAppender.kt:33-65, conflict ranges ->
 retry) and of a Delta ``_delta_log`` commit.
 
+Log state comes from the same ``LogView`` as on flock (layout.py): here
+each ``log_view`` call folds the merged claim + jsonl snapshot into a
+fresh view, and ``log_snapshot`` returns it, so an attempt's key check
+and its claim's seq read one snapshot.
+
 The atomic primitive — create a named immutable slot, failing if the
 name is taken — is PLUGGABLE (storage/cas.py): hardlink-as-O_EXCL on a
 shared POSIX FS (default), O_CREAT|O_EXCL create-no-overwrite (the
@@ -63,9 +68,11 @@ from typing import Optional
 from ..schema import POSITION_STRIDE
 from .layout import (
     CommitRecord,
+    LogView,
     StoreLayout,
     _resolve_checkpoints,
     commit_record_from_dict,
+    fold_log,
     utcnow_us,
 )
 
@@ -75,10 +82,9 @@ COMMIT_LOG_DIR = "commit_log"
 class OptimisticStoreLayout(StoreLayout):
     """StoreLayout whose publish primitive is a CAS slot claim, driven
     by claim-retry instead of the flock. Read paths are inherited
-    unchanged (they resolve data files through ``read_commits``, which
-    here merges the claim directory with any legacy ``commits.jsonl``
-    lines, e.g. those written by compaction under the maintenance
-    lock)."""
+    unchanged: they ask ``log_view``, which here folds ``read_commits``
+    — the claim directory merged with any ``commits.jsonl`` lines, e.g.
+    those written by checkpoints under the maintenance lease."""
 
     def __init__(self, store_dir: str, slot_spec: str = ""):
         super().__init__(store_dir)
@@ -101,6 +107,7 @@ class OptimisticStoreLayout(StoreLayout):
         # writer) still surfaces through LISTINGS, which memoization
         # never suppresses.
         self._vacant_memo: set[int] = set()
+        self._view_memo: Optional[tuple[list[CommitRecord], LogView]] = None
 
     def initialize(self) -> None:
         super().initialize()
@@ -139,13 +146,6 @@ class OptimisticStoreLayout(StoreLayout):
         rec = commit_record_from_dict(d)
         self._claim_memo[name] = rec
         return rec
-
-    def _log_derived(self):
-        """The jsonl-side derived view cannot see claim-dir records
-        (this backend's live commits), so the O(1) fast paths are
-        disabled — every consumer falls back to the explicit-snapshot
-        scan over the merged read_commits output."""
-        return None
 
     def read_commits(self) -> list[CommitRecord]:
         jsonl = list(super().read_commits())  # maintenance-written lines
@@ -223,6 +223,20 @@ class OptimisticStoreLayout(StoreLayout):
         # the jsonl checkpoint and the claim slots it folded exist.
         out.sort(key=lambda c: (c.seq, c.compacted_through is not None))
         return _resolve_checkpoints(out)
+
+    def log_view(self) -> LogView:
+        """A fresh view of the merged log (claims are not folded
+        incrementally: every call lists the claim dir anyway). Views
+        share nothing, so one view is one merged snapshot; an unchanged
+        snapshot (list equality, by identity first) returns its view
+        again instead of re-folding."""
+        records = self.read_commits()
+        memo = self._view_memo
+        if memo is not None and memo[0] == records:
+            return memo[1]
+        view = fold_log(records)
+        self._view_memo = (records, view)
+        return view
 
     SEAL_TTL = 3600.0  # see the vacancy-sealing comment in read_commits
 
@@ -380,15 +394,6 @@ class OptimisticStoreLayout(StoreLayout):
 
     # -- the append protocol: claim-retry runners + the CAS publish ----------
 
-    def log_snapshot(self) -> list[CommitRecord]:
-        """The explicit merged log (no derived view here). The attempt's
-        idempotency check and its commit's next_seq both read THIS
-        snapshot: a rival commit landing after it takes that seq first,
-        so the claim loses and the retry re-checks the key. Letting
-        next_seq re-read the log instead would claim past the rival and
-        apply an idempotent retry twice."""
-        return self.read_commits()
-
     def run_append(self, attempt):
         """Drive one row append by claim-retry (the FDB-transaction
         shape itself, FdbFactAppender.kt:33-65): a lost claim means
@@ -416,7 +421,7 @@ class OptimisticStoreLayout(StoreLayout):
         its highest relative position (-1: no rows, nothing to reserve)
         before the range is claimed by size, then ``write`` runs against
         the reserved range with its ceiling (see StoreLayout.run_bulk)."""
-        if self.idempotency_key_seen(key, self.read_commits()):
+        if self.log_view().key_seen(key):
             return None
         appended_at = utcnow_us()
         rel_hi = span(appended_at)
@@ -446,8 +451,7 @@ class OptimisticStoreLayout(StoreLayout):
         write. Returns (seq, base). Retries internally (reservation has
         no preconditions to re-evaluate)."""
         while True:
-            commits = self.read_commits()
-            seq = self.next_seq(commits)
+            seq = self.log_view().next_seq()
             base = seq * POSITION_STRIDE
             record = {
                 "seq": seq,
@@ -574,10 +578,7 @@ class OptimisticStoreLayout(StoreLayout):
         O(lifetime)."""
         from datetime import datetime
 
-        ckpt = None
-        for c in StoreLayout.read_commits(self):
-            if c.checkpoint and (ckpt is None or c.seq > ckpt.seq):
-                ckpt = c
+        ckpt = StoreLayout.log_view(self).ckpt  # checkpoints live in the jsonl
         if ckpt is None:
             return
         try:

@@ -83,21 +83,14 @@ class TagIndex:
         rows on retry — harmless by construction (both position readers
         are set-semantics: intersect/union/distinct); a periodic full
         ``build`` compacts them away."""
-        last = self.layout.last_commit()
+        view = self.layout.log_view()
+        last = view.last
         if last is None:
             return {"built": False, "rows": 0}
         bt = self.built_through()
         if bt >= last.seq:
             return {"built": False, "reason": "fresh", "through_seq": bt}
-        compacted_through = max(
-            (
-                c.compacted_through
-                for c in self.layout.read_commits()
-                if c.compacted_through is not None
-            ),
-            default=-1,
-        )
-        if bt < 0 or not os.path.isdir(self.index_dir) or compacted_through > bt:
+        if bt < 0 or not os.path.isdir(self.index_dir) or view.compacted_through > bt:
             return self.build(spark)
         new_files = self.layout.data_files_between(bt, last.seq)
         if new_files:
@@ -126,8 +119,9 @@ class TagIndex:
         # Snapshot the covered commit FIRST: a commit landing between
         # these two reads must leave the index stale (fallback to scan),
         # never fresh-but-incomplete.
-        last = self.layout.last_commit()
-        files = self.layout.data_files(max_seq=last.seq if last else None)
+        view = self.layout.log_view()
+        last = view.last
+        files = self.layout.data_files(view)
         if not files or last is None:
             return {"built": False, "rows": 0}
         df = spark.read.schema(FACT_SCHEMA).parquet(*files)

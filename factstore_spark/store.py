@@ -389,8 +389,8 @@ class FactStore:
         def attempt():
             # the key check and the commit's seq read ONE snapshot (see
             # log_snapshot); the condition reads the same state or later
-            commits = layout.log_snapshot()
-            if layout.idempotency_key_seen(key, commits):
+            view = layout.log_snapshot()
+            if view.key_seen(key):
                 return AlreadyApplied(key), 0
             violation = self._evaluate_condition(layout, condition)
             if violation is not None:
@@ -399,7 +399,7 @@ class FactStore:
             fact_ids = [new_fact_id() for _ in facts]  # server-assigned (FactInput.kt:37-45)
             out = layout.append_commit(
                 _fact_rows(fact_ids, facts, appended_at), appended_at, key,
-                commits, defer_sync=True,
+                view, defer_sync=True,
             )
             if out is None:
                 self.append_conflict_retries += 1
@@ -845,16 +845,11 @@ class FactStore:
 
         layout = self._layout(meta.id)
         tidx = TagIndex(layout)
-        # One commit snapshot decides freshness AND bounds the positions
-        # and the fact side (same pattern as find_by_tag_query_indexed_df).
-        commits = layout.read_commits()
-        # logically-latest, not commits[-1]: the flock log is
-        # file-ordered and a compaction record appended last carries
-        # the OLD snapshot seq/max_position — commits[-1] would pass a
-        # stale index as fresh and cap the scan below the true head
-        last_seq = max((c.seq for c in commits), default=-1)
-        head_pos = max((c.max_position for c in commits), default=-1)
-        fresh = last_seq >= 0 and tidx.built_through() >= last_seq
+        # One log view decides freshness AND bounds the positions and
+        # the fact side (same pattern as find_by_tag_query_indexed_df).
+        view = layout.log_view()
+        head_pos = view.head
+        fresh = view.last is not None and tidx.built_through() >= view.last_seq
         pos = (
             tidx.resolve_positions(
                 TagQuery([TagOnlyQueryItem(dict(tags))]),
@@ -1062,17 +1057,15 @@ class FactStore:
 
         layout = self._layout(meta.id)
         tidx = TagIndex(layout)
-        # Resolve freshness against ONE commit snapshot (not a separate
+        # Resolve freshness against ONE log view (not a separate
         # is_fresh() probe — a commit landing between the probe and the
         # join would return fresh-but-incomplete results). The fact side
         # is then capped at that snapshot's head position so index and
         # fact table agree even if more commits land mid-query.
-        commits = layout.read_commits()
-        # logically-latest, not commits[-1] (see find_by_tags_df)
-        last_seq = max((c.seq for c in commits), default=-1)
-        if last_seq < 0 or tidx.built_through() < last_seq:
+        view = layout.log_view()
+        if view.last is None or tidx.built_through() < view.last_seq:
             return self.find_by_tag_query_df(store_name, query)
-        head_pos = max(c.max_position for c in commits)
+        head_pos = view.head
         positions = tidx.positions_for_query(self.spark, query)
         if positions is None:  # rebuild-swap window: scan-path fallback
             return self.find_by_tag_query_df(store_name, query)
@@ -1258,7 +1251,8 @@ class FactStore:
                 # cursor past a pending bulk reservation would exclude
                 # its facts FOREVER once they publish (and emit later
                 # positions first, breaking ordered delivery)
-                head = layout.published_head_position()
+                view = layout.log_view()
+                head = layout.published_head_position(view)
                 if head > cursor:
                     # commit-log prune: a tail poll opens only the
                     # files of commits past the cursor — without it
@@ -1269,7 +1263,7 @@ class FactStore:
                     table = layout.read_arrow(
                         filter=(pa_ds.field("position") > cursor)
                         & (pa_ds.field("position") <= head),
-                        files=layout.data_files_after_position(cursor),
+                        files=layout.data_files_after_position(cursor, view),
                     ).sort_by("position")
                     rows = table.to_pylist()
                     for i in range(0, len(rows), batch_size):
@@ -1352,54 +1346,35 @@ class FactStore:
         if meta is None:
             return StoreNotFound(store_name)
         layout = self._layout(meta.id)
-        commits = layout.read_commits()
-        files = layout.data_files()
+        view = layout.log_view()
+        files = layout.data_files(view)
         n_bytes = 0
         for f in files:
             try:
                 n_bytes += os.path.getsize(f)
             except OSError:
                 pass
-        ckpt_seq = max(
-            (c.seq for c in commits if c.checkpoint), default=None
+        comp = view.compaction
+        # Row count: the latest compaction's total plus the live
+        # commits past its horizon (the superseded append records a
+        # log keeps until its checkpoint would double-count).
+        n_rows = (comp.rows if comp is not None else 0) + sum(
+            c.rows for c in view.live
         )
-        compacted_through = max(
-            (c.compacted_through for c in commits if c.compacted_through is not None),
-            default=None,
-        )
-        # Row count: between a compact and its checkpoint the log holds
-        # BOTH the superseded append records and the compaction record
-        # whose ``rows`` already equals their total, so a plain
-        # sum(c.rows) double-counts. Count the latest compaction
-        # record's total plus only the appends past its fold horizon.
-        if compacted_through is None:
-            n_rows = sum(c.rows for c in commits)
-        else:
-            comp_rows = max(
-                c.rows for c in commits if c.compacted_through == compacted_through
-            )
-            n_rows = comp_rows + sum(
-                c.rows
-                for c in commits
-                if c.compacted_through is None and c.seq > compacted_through
-            )
         from .storage.heads import HeadsIndex
         from .storage.tag_index import TagIndex
 
         return {
             "store": store_name,
             "store_id": meta.id,
-            "n_commits": len(commits),
-            "head_position": layout.head_position(),
+            "n_commits": view.n_records,
+            "head_position": view.head,
             "n_rows": n_rows,
             "n_data_files": len(files),
             "data_bytes": n_bytes,
-            "compacted_through": compacted_through,
-            "commits_since_checkpoint": (
-                len([c for c in commits if c.seq > ckpt_seq])
-                if ckpt_seq is not None
-                else len(commits)
-            ),
+            "compacted_through": None if comp is None else comp.compacted_through,
+            # the checkpoint record is the one record at or below its seq
+            "commits_since_checkpoint": view.n_records - (view.ckpt is not None),
             "tag_index_fresh": TagIndex(layout).is_fresh(),
             "heads_snapshot_through": HeadsIndex(layout).snap_meta()["through_seq"],
         }

@@ -197,6 +197,21 @@ def test_tag_and_time_filters_cannot_combine(server):
     assert code == 400 and "combined" in err["error"]
 
 
+def test_naive_from_to_read_as_utc(server):
+    """A bare from/to stamp is UTC: the same facts as its Z form (the
+    RPC transport parses instants with the same helper)."""
+    req("POST", f"{server}/v1/stores", {"name": "tz"})
+    req(
+        "POST",
+        f"{server}/v1/stores/tz/facts",
+        {"facts": [{"type": "T", "subject": "S", "payload": {"data": b64("p")}}]},
+    )
+    url = f"{server}/v1/stores/tz/facts?from=2020-01-01T00:00:00{{z}}&to=2099-01-01T00:00:00{{z}}"
+    code, naive = req("GET", url.format(z=""))
+    assert code == 200 and len(naive) == 1
+    assert req("GET", url.format(z="Z")) == (200, naive)
+
+
 def test_info_endpoint(server):
     code, info = req("GET", f"{server}/v1/info")
     assert code == 200 and info["name"] == "factstore-spark" and info["version"]

@@ -18,6 +18,7 @@ from factstore_spark.results import (
     Appended,
     AppendConditionViolated,
     FactFound,
+    FactIdNotFound,
     StoreCreated,
     StoreNameAlreadyExists,
     StoreNotFound,
@@ -228,6 +229,22 @@ def test_sse_delivers_a_batch_in_order_in_one_write(server, stub, writes):
     assert len(sent) == 1 + 3
     assert sent[0].startswith(b"HTTP/1.1 200") and sent[0].endswith(b"\r\n\r\n")
     assert sent[1].count(b"data: ") == 3
+
+
+def test_unknown_cursor_404_names_the_fact_on_replay_and_sse(server, stub, monkeypatch):
+    """Replay and subscribe answer an unknown ``after`` cursor with one
+    body: the error and the factId it names."""
+    stub.create("c")
+    monkeypatch.setattr(stub, "replay", lambda store, start: FactIdNotFound(start.fact_id))
+    monkeypatch.setattr(
+        stub, "subscribe", lambda store, start, **_kw: FactIdNotFound(start.fact_id)
+    )
+    conn = _conn(server)
+    replay = _call(conn, "GET", "/v1/stores/c/facts/replay?after=nope")
+    sse = _call(conn, "GET", "/v1/stores/c/facts/subscribe?after=nope")
+    assert replay == sse
+    assert replay[0] == 404
+    assert json.loads(replay[1]) == {"error": "fact id not found", "factId": "nope"}
 
 
 def test_sse_client_hang_up_ends_the_handler_quietly(server, stub, capsys):
