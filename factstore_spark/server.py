@@ -261,9 +261,20 @@ def _parse_tag_query(d) -> TagQuery:
     return TagQuery(items)
 
 
+def _parse_choice(qs, name: str, choices: tuple[str, ...]) -> str:
+    """A query parameter that must be one of ``choices`` (matched
+    case-insensitively; absent = the first). Anything else is a 400,
+    never a silent default."""
+    raw = qs.get(name, [choices[0]])[0]
+    if raw.lower() not in choices:
+        raise ValueError(f"{name} must be one of {', '.join(choices)}, got {raw!r}")
+    return raw.lower()
+
+
 def _parse_direction(qs) -> ReadDirection:
-    v = (qs.get("direction", ["forward"])[0] or "forward").lower()
-    return ReadDirection.BACKWARD if v == "backward" else ReadDirection.FORWARD
+    if _parse_choice(qs, "direction", ("forward", "backward")) == "backward":
+        return ReadDirection.BACKWARD
+    return ReadDirection.FORWARD
 
 
 def _parse_limit(qs):
@@ -563,7 +574,7 @@ class FactStoreHandler(BaseHTTPRequestHandler):
 
     def _subscribe(self, store: str, qs) -> None:
         after = qs.get("after", [None])[0]
-        start_kind = qs.get("start", ["beginning"])[0]
+        start_kind = _parse_choice(qs, "start", ("beginning", "end"))
         if after:
             start = StartPosition.After(after)
         elif start_kind == "end":

@@ -460,6 +460,34 @@ class LogView:
             lo = max(lo, bisect.bisect_right(live, after_pos, 0, n, key=_max_position))
         return [c for c in live[lo:n] if c.max_position > after_pos]
 
+    def row_runs(
+        self, after_pos: int, head: int, max_rows: int
+    ) -> Optional[list[list[CommitRecord]]]:
+        """The live row commits holding positions in (``after_pos``,
+        ``head``], in position order, cut into runs of consecutive
+        commits of at most ``max_rows`` rows (a bigger commit is a run
+        of its own) — or None when the range reaches into the compacted
+        snapshot or a bulk commit, whose data is not laid out in
+        position order. A row commit owns ``[seq * stride,
+        max_position]``, so the ranges are disjoint and max_position
+        order is position order, also on optimistic, where seq order
+        is not."""
+        if self.compaction_after(after_pos) is not None:
+            return None
+        runs: list[list[CommitRecord]] = []
+        n = 0
+        for c in sorted(self.live_after(after_pos), key=_max_position):
+            if c.bulk:
+                return None
+            if c.seq * POSITION_STRIDE > head:
+                break  # this commit and every later one lie past the head
+            if not runs or n + c.rows > max_rows:
+                runs.append([])
+                n = 0
+            runs[-1].append(c)
+            n += c.rows
+        return runs
+
     def dcb_candidates(
         self, item_fps: list[list[int]], after_pos: int, after_seq: int = -1
     ) -> list[CommitRecord]:
@@ -739,8 +767,7 @@ class StoreLayout:
         return self.log_view().last
 
     def head_position(self) -> int:
-        """Current max position, or -1 for an empty store. The replay
-        head pin (FdbFactStreamer.kt:60-84) reads this once, up front."""
+        """Current max position, or -1 for an empty store."""
         return self.log_view().head
 
     def published_head_position(self, snapshot=None) -> int:
@@ -1145,6 +1172,10 @@ class StoreLayout:
             ]
         return [os.path.join(self.data_dir, f"commit-{c.seq:010d}.parquet")]
 
+    def commit_files(self, commits: list[CommitRecord]) -> list[str]:
+        """Physical parquet paths of ``commits``, in their order."""
+        return self._resolve_files(None, commits)
+
     def data_files_between(self, lo_seq: int, hi_seq: int) -> list[str]:
         """Per-commit data files for commits with ``lo_seq < seq <=
         hi_seq`` — the incremental-maintenance window (tag-index
@@ -1301,11 +1332,11 @@ class StoreLayout:
         filter: Optional[pa_ds.Expression] = None,
         files: Optional[list[str]] = None,
     ) -> pa.Table:
-        """Engine-internal point reads (condition evaluation, cursor
-        resolution) — small, latency-sensitive lookups that would waste a
-        Spark job. All user-facing queries go through DataFrames.
-        ``files`` restricts the read to a pre-pruned subset (e.g.
-        ``data_files_after_position`` for tail-follow polls)."""
+        """Engine-internal reads (condition evaluation, cursor
+        resolution, the ordered reader's runs of row commits) — small,
+        latency-sensitive reads that would waste a Spark job. The
+        finders go through DataFrames. ``files`` restricts the read to
+        a pre-pruned subset (e.g. the ``commit_files`` of one run)."""
         files = self.data_files() if files is None else files
         if not files:
             return FACT_ARROW_SCHEMA.empty_table().select(columns) if columns else FACT_ARROW_SCHEMA.empty_table()
@@ -1361,13 +1392,12 @@ class StoreLayout:
         )
 
     def data_files_after_position(self, after_pos: int, snapshot=None) -> list[str]:
-        """Parquet files that can contain positions > ``after_pos`` —
-        the tail-follower's per-poll prune. A live subscription's poll
-        previously opened EVERY store file through a dataset filter
-        (O(store lifetime) footers per poll — measured as the dominant
-        term of delivery lag under write load, where each append adds a
-        file); with the commit-log prune a tail poll opens only the
-        commits that actually landed past the cursor."""
+        """Parquet files that can contain positions > ``after_pos``:
+        the compacted snapshot when it reaches past it, plus the live
+        commits past it — the commit-log prune. A subscriber's tail
+        poll reads exactly these files when they are row commits (the
+        ordered reader cuts them into runs, LogView.row_runs), never
+        every store file's footer."""
         view = self._view(snapshot)
         return self._resolve_files(
             view.compaction_after(after_pos), view.live_after(after_pos)

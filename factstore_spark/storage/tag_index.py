@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from functools import reduce
 from typing import Optional
 
@@ -63,6 +64,23 @@ class TagIndex:
                 return json.load(f)["built_through"]
         except (OSError, json.JSONDecodeError, KeyError):
             return -1
+
+    def _write_meta(self, built_through: int) -> None:
+        """Replace the meta file atomically (tmp file, fsync, rename, as
+        the heads pointer does): a reader racing the rewrite sees the
+        old value or the new one, never an empty file — which would
+        read as "no index" and send the DCB condition to a scan of the
+        whole compacted snapshot under the commit lock."""
+        tmp = self.meta_path + f".{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump({"built_through": built_through}, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, self.meta_path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
     def is_fresh(self) -> bool:
         last = self.layout.last_commit()
@@ -103,8 +121,7 @@ class TagIndex:
             idx.repartition("tag_key").sortWithinPartitions(
                 "tag_value", "position"
             ).write.partitionBy("tag_key").mode("append").parquet(self.index_dir)
-        with open(self.meta_path, "w") as f:
-            json.dump({"built_through": last.seq}, f)
+        self._write_meta(last.seq)
         return {
             "built": True,
             "mode": "incremental",
@@ -148,8 +165,7 @@ class TagIndex:
             os.rename(self.index_dir, old)
         os.rename(tmp, self.index_dir)
         shutil.rmtree(old, ignore_errors=True)
-        with open(self.meta_path, "w") as f:
-            json.dump({"built_through": last.seq}, f)
+        self._write_meta(last.seq)
         return {"built": True, "through_seq": last.seq}
 
     def read(self, spark: SparkSession) -> Optional[DataFrame]:

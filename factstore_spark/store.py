@@ -86,7 +86,7 @@ from .results import (
 )
 from .schema import FACT_COLUMNS, FACT_SCHEMA, POSITION_STRIDE, row_to_fact
 from .storage.catalog import Catalog
-from .storage.layout import StoreLayout, utcnow_us
+from .storage.layout import LogView, StoreLayout, utcnow_us
 
 DEFAULT_BATCH_SIZE = 10_000  # FdbFactStreamer.kt:22
 
@@ -614,7 +614,7 @@ class FactStore:
         time_range: Optional[TimeRange] = None,
     ) -> Optional[DataFrame]:
         """The store's fact table as a DataFrame; None if the store does
-        not exist. ``max_position`` pins a snapshot (replay head).
+        not exist. ``max_position`` pins a snapshot's head.
 
         ``time_range`` is a PRUNING hint, not a filter: the compacted
         snapshot is a hive layout partitioned by ``fact_date`` =
@@ -1085,8 +1085,76 @@ class FactStore:
         return FactsFound(tuple(row_to_fact(r) for r in df.collect()))
 
     # ------------------------------------------------------------------
-    # Replay (FactReplayer) — bounded, pinned-head batch read
+    # Replay (FactReplayer) and subscribe (FactSubscriber): one streamer
     # ------------------------------------------------------------------
+
+    def _open_cursor(self, store_name: str, start):
+        """The one start resolution of replay, subscribe and
+        subscribe_stream: ``(layout, cursor)``, where ``cursor`` is the
+        exclusive position the read starts after, or StoreNotFound /
+        FactIdNotFound. Beginning (or None) is -1; After(id) is the
+        id's position; End is the PUBLISHED head — an in-flight bulk
+        (range reserved, data unpublished) commits after open, so its
+        facts are post-open, and pinning the raw head would exclude
+        them forever."""
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return StoreNotFound(store_name)
+        layout = self._layout(meta.id)
+        if isinstance(start, StartPosition.End):
+            return layout, layout.published_head_position()
+        if isinstance(start, (StartPosition.After, ReplayStart.After)):
+            pos = layout.position_of_fact(start.fact_id)
+            return FactIdNotFound(start.fact_id) if pos is None else (layout, pos)
+        return layout, -1
+
+    def _read_ordered(
+        self, layout: StoreLayout, view: LogView, cursor: int, head: int, batch_size: int
+    ) -> Iterator[list[Fact]]:
+        """The one position-ordered reader (FdbFactStreamer analog): the
+        facts of log view ``view`` with ``cursor < position <= head``,
+        in position order, as batches of at most ``batch_size``. The
+        branch depends only on what the view shows (LogView.row_runs):
+
+        - Live row commits only: runs of consecutive commits of at most
+          ``batch_size`` rows (a bigger commit is a run of its own),
+          each read with one ``layout.read_arrow`` and sorted — no
+          Spark job.
+        - The range reaches into the compacted snapshot (sorted by
+          subject, not position) or a bulk commit (any size): one Spark
+          ``orderBy`` over the view's data layout, streamed by
+          ``toLocalIterator``.
+
+        Driver memory is one batch plus one run (or one Spark
+        partition), however long the range."""
+        if head <= cursor:
+            return
+        runs = view.row_runs(cursor, head, batch_size)
+        if runs is not None:
+            in_range = (pa_ds.field("position") > cursor) & (pa_ds.field("position") <= head)
+            rows = (
+                row
+                for run in runs
+                for row in layout.read_arrow(filter=in_range, files=layout.commit_files(run))
+                .sort_by("position")
+                .to_pylist()
+            )
+        else:
+            comp_dir, tail_files = layout.data_layout(view)
+            rows = (
+                self._assemble_fact_frames(comp_dir, tail_files)
+                .filter((F.col("position") > cursor) & (F.col("position") <= head))
+                .orderBy(F.col("position").asc())
+                .toLocalIterator()
+            )
+        batch: list[Fact] = []
+        for row in rows:
+            batch.append(row_to_fact(row))
+            if len(batch) >= batch_size:
+                yield batch
+                batch = []
+        if batch:
+            yield batch
 
     def replay(
         self,
@@ -1097,79 +1165,42 @@ class FactStore:
         """Bounded replay: drain from ``start`` up to the head pinned at
         open time, then complete (FactReplayer.kt:21-62). Facts appended
         while draining are excluded (AbstractFactStoreTest.kt:900-915):
-        cursor + head resolve against ONE snapshot before iteration, the
-        analog of the single FDB read transaction (FdbFactStreamer.kt:60-84).
+        cursor, head and the log view the facts are read from resolve
+        once, before iteration — the analog of the single FDB read
+        transaction (FdbFactStreamer.kt:60-84). The facts come from
+        ``_read_ordered``: a range of live row commits is read with
+        pyarrow and runs no Spark job; a range reaching into the
+        compacted snapshot or a bulk commit is one ordered Spark read.
 
         Returns StoreNotFound / FactIdNotFound, or an iterator of
         position-ordered Fact batches (Flow<List<Fact>> analog).
         """
-        start = start if start is not None else ReplayStart.Beginning()
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return StoreNotFound(store_name)
-        layout = self._layout(meta.id)
-
-        # One consistent resolution of cursor + head.
-        head = layout.head_position()
-        after_pos = -1
-        if isinstance(start, ReplayStart.After):
-            pos = layout.position_of_fact(start.fact_id)
-            if pos is None:
-                return FactIdNotFound(start.fact_id)
-            after_pos = pos
-
-        def batches() -> Iterator[list[Fact]]:
-            if head < 0 or after_pos >= head:
-                return  # empty store / empty delta -> complete immediately
-            df = (
-                self.facts_df(store_name, max_position=head)
-                .filter(F.col("position") > after_pos)
-                .orderBy(F.col("position").asc())
-            )
-            buf: list[Fact] = []
-            for row in df.toLocalIterator():
-                buf.append(row_to_fact(row))
-                if len(buf) >= batch_size:
-                    yield buf
-                    buf = []
-            if buf:
-                yield buf
-
-        return batches()
-
-    # ------------------------------------------------------------------
-    # Subscribe (FactSubscriber) — catch-up + live tail
-    # ------------------------------------------------------------------
+        opened = self._open_cursor(store_name, start)
+        if not isinstance(opened, tuple):
+            return opened
+        layout, cursor = opened
+        view = layout.log_view()
+        return self._read_ordered(layout, view, cursor, view.head, batch_size)
 
     def subscribe_stream(self, store_name: str, start=None):
         """Structured-Streaming subscription: a streaming DataFrame over
         the store's data directory (micro-batch polling replaces the FDB
         watch, FdbFactStreamer.kt:186-190). Start semantics
-        (FactSubscriber.kt:18-59):
+        (FactSubscriber.kt:18-59), resolved by the same ``_open_cursor``
+        as replay and subscribe:
 
         - Beginning -> everything, then live tail
         - End       -> only facts appended after subscribe time; the
-                       offset is captured HERE, not at first trigger
-                       (SURVEY.md §7.4 hard-part 2)
+                       offset (the published head) is captured HERE,
+                       not at first trigger (SURVEY.md §7.4 hard-part 2)
         - After(id) -> position > pos(id)
 
         Returns StoreNotFound / FactIdNotFound or the streaming DataFrame.
         """
-        start = start if start is not None else StartPosition.Beginning()
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return StoreNotFound(store_name)
-        layout = self._layout(meta.id)
-
-        after_pos = -1
-        if isinstance(start, StartPosition.End):
-            after_pos = layout.head_position()
-        elif isinstance(start, StartPosition.After):
-            pos = layout.position_of_fact(start.fact_id)
-            if pos is None:
-                return FactIdNotFound(start.fact_id)
-            after_pos = pos
-
+        opened = self._open_cursor(store_name, start)
+        if not isinstance(opened, tuple):
+            return opened
+        layout, after_pos = opened
         # The stream reads the `stream/` hardlink mirror, not data/:
         # only committed per-commit files ever appear there (no
         # crash-orphans), and compaction — which rewrites data/ under
@@ -1199,7 +1230,12 @@ class FactStore:
         existing facts from ``start`` then follow the tail forever,
         yielding position-ordered batches. Poll-based like the memory
         backend (MemoryFactStore.kt:212-234, 100 ms); the Structured
-        Streaming variant above is the scale path.
+        Streaming variant above is the scale path. Each poll takes one
+        log view and hands the range from the cursor to the view's
+        published head to ``_read_ordered``, the reader replay uses: a
+        tail of row commits is one pyarrow read over the new commits'
+        files, and a catch-up that reaches into the compacted snapshot
+        is one ordered Spark read, streamed batch by batch.
 
         ``watch=True`` (opt-in): between polls, stat the commit log's
         change token every ``watch_interval`` seconds and recompute the
@@ -1217,24 +1253,10 @@ class FactStore:
         (the write raises BrokenPipeError) instead of leaking a
         thread + a poll loop forever on a quiet store. Embedded
         consumers that skip the option never see empty batches."""
-        start = start if start is not None else StartPosition.Beginning()
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return StoreNotFound(store_name)
-        layout = self._layout(meta.id)
-
-        after_pos = -1
-        if isinstance(start, StartPosition.End):
-            # published head: an IN-FLIGHT bulk (range reserved, data
-            # unpublished) commits after subscribe time, so its facts
-            # are post-open — pinning at the raw head would exclude
-            # them forever
-            after_pos = layout.published_head_position()
-        elif isinstance(start, StartPosition.After):
-            pos = layout.position_of_fact(start.fact_id)
-            if pos is None:
-                return FactIdNotFound(start.fact_id)
-            after_pos = pos
+        opened = self._open_cursor(store_name, start)
+        if not isinstance(opened, tuple):
+            return opened
+        layout, after_pos = opened
 
         def gen() -> Iterator[list[Fact]]:
             cursor = after_pos
@@ -1254,23 +1276,10 @@ class FactStore:
                 view = layout.log_view()
                 head = layout.published_head_position(view)
                 if head > cursor:
-                    # commit-log prune: a tail poll opens only the
-                    # files of commits past the cursor — without it
-                    # every poll re-opened EVERY store file's footer
-                    # (O(store lifetime) per poll; under write load,
-                    # where each append adds a file, this was the
-                    # dominant term of delivery lag)
-                    table = layout.read_arrow(
-                        filter=(pa_ds.field("position") > cursor)
-                        & (pa_ds.field("position") <= head),
-                        files=layout.data_files_after_position(cursor, view),
-                    ).sort_by("position")
-                    rows = table.to_pylist()
-                    for i in range(0, len(rows), batch_size):
-                        batch = [row_to_fact(r) for r in rows[i : i + batch_size]]
-                        cursor = batch[-1].position
+                    for batch in self._read_ordered(layout, view, cursor, head, batch_size):
                         last_emit = time.monotonic()
                         yield batch
+                    cursor = head  # the view's whole (cursor, head] is delivered
                 else:
                     if (
                         keepalive_every is not None

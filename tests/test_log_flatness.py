@@ -1,7 +1,9 @@
 """Flatness of the flock hot path, in counts rather than seconds: one
 DCB append plus one subscriber poll (published_head_position and
 data_files_after_position) must fold or scan the same number of commit
-records at 100 and at 3,000 commits. Spark-free."""
+records at 100 and at 3,000 commits, and a subscriber poll that sees
+one new commit must read that commit's one file, with one
+``read_arrow`` call, at either length. Spark-free."""
 
 import json
 import os
@@ -87,3 +89,35 @@ def test_flock_hot_path_folds_the_same_records_at_any_log_length(tmp_path, monke
     short = _hot_path_visits(str(tmp_path / "short"), 100, monkeypatch)
     long = _hot_path_visits(str(tmp_path / "long"), 3000, monkeypatch)
     assert short == long, (short, long)
+
+
+def _tail_poll_reads(root, n):
+    """The ``read_arrow`` calls of one subscriber poll that sees one new
+    commit, on a log of ``n`` commits."""
+    from factstore_spark.model import StartPosition
+
+    fs = FactStore(None, root)
+    fs.create("s")
+    layout = fs._layout(fs.find_by_name("s").id)
+    _synthesize_log(layout, n)
+    gen = fs.subscribe("s", StartPosition.End(), poll_interval=0.01)
+    fs.append("s", FactInput(type="NEW", subject="s"))
+    calls = []
+    real_read = layout.read_arrow
+
+    def counting_read(*args, **kwargs):
+        calls.append(kwargs.get("files"))
+        return real_read(*args, **kwargs)
+
+    layout.read_arrow = counting_read
+    batch = next(gen)
+    gen.close()
+    assert [f.type for f in batch] == ["NEW"]
+    return calls
+
+
+def test_subscriber_tail_poll_reads_one_file_at_any_log_length(tmp_path):
+    for n in (100, 3000):
+        calls = _tail_poll_reads(str(tmp_path / f"n{n}"), n)
+        assert len(calls) == 1 and len(calls[0]) == 1, (n, calls)
+        assert calls[0][0].endswith(f"commit-{n:010d}.parquet"), (n, calls)

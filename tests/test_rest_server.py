@@ -298,3 +298,48 @@ def test_sse_subscribe_watch_param(server, fs):
         line = resp.readline().decode()
         fact = json.loads(line[len("data: "):])
         assert fact["type"] == "W0"
+
+
+def test_direction_is_case_insensitive_and_bad_values_are_400(server):
+    """``direction`` accepts forward/backward in any case; any other
+    value is a 400, not a silent forward read."""
+    req("POST", f"{server}/v1/stores", {"name": "dir"})
+    for t in ("A", "B"):
+        req(
+            "POST",
+            f"{server}/v1/stores/dir/facts",
+            {"facts": [{"type": t, "subject": "S", "payload": {"data": b64("p")}}]},
+        )
+    for q, want in (("BACKWARD", "BA"), ("Backward", "BA"), ("FORWARD", "AB"), ("forward", "AB")):
+        code, facts = req("GET", f"{server}/v1/stores/dir/subjects/S/facts?direction={q}")
+        assert code == 200 and "".join(f["type"] for f in facts) == want, q
+    for query in ("subjects/S/facts?", "facts?tag=k=v&", "facts?"):
+        code, body = req("GET", f"{server}/v1/stores/dir/{query}direction=sideways")
+        assert code == 400 and "direction" in body["error"], query
+
+
+def test_sse_start_is_case_insensitive_and_bad_values_are_400(server):
+    """``start=END`` pins the end like ``start=end`` (it used to stream
+    the whole store); a start that is neither beginning nor end is a
+    400 before any event is sent."""
+    req("POST", f"{server}/v1/stores", {"name": "sst"})
+
+    def append(t):
+        req(
+            "POST",
+            f"{server}/v1/stores/sst/facts",
+            {"facts": [{"type": t, "subject": "S", "payload": {"data": b64("p")}}]},
+        )
+
+    append("OLD")
+    r = urllib.request.Request(f"{server}/v1/stores/sst/facts/subscribe?start=END")
+    with urllib.request.urlopen(r, timeout=30) as resp:
+        assert resp.status == 200
+        append("NEW")
+        line = resp.readline().decode()
+        assert json.loads(line[len("data: "):])["type"] == "NEW"
+    r = urllib.request.Request(f"{server}/v1/stores/sst/facts/subscribe?start=Beginning")
+    with urllib.request.urlopen(r, timeout=30) as resp:
+        assert json.loads(resp.readline().decode()[len("data: "):])["type"] == "OLD"
+    code, body = req("GET", f"{server}/v1/stores/sst/facts/subscribe?start=latest")
+    assert code == 400 and "start" in body["error"]

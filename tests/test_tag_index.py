@@ -1,6 +1,7 @@
 """Derived tag index: indexed tag queries must agree with the scan-path
 finder on randomized corpora, go stale safely, and refresh."""
 
+import os
 import random
 
 from factstore_spark import FactInput, TagOnlyQueryItem, TagQuery, TagTypeItem
@@ -328,3 +329,38 @@ def test_find_by_tags_past_the_driver_cap_semi_joins_in_spark(fs):
     df = fs.find_by_tags_df(STORE, tags, limit=4, direction=back)
     assert "LeftSemi" in df._jdf.queryExecution().executedPlan().toString()
     assert [f.id for f in fs.find_by_tags(STORE, tags, limit=4, direction=back).facts] == want
+
+
+def test_meta_rewrite_that_dies_mid_write_keeps_the_previous_value(fs, monkeypatch):
+    """``tag_index_meta.json`` is replaced atomically: a refresh whose
+    meta dump dies half-written leaves the previous ``built_through``
+    readable. An in-place rewrite would leave a torn file, read as -1
+    ("no index"), which sends the DCB condition to a full scan."""
+    import json
+    import types
+
+    import pytest
+
+    from factstore_spark.storage import tag_index as tag_index_mod
+    from factstore_spark.storage.tag_index import TagIndex
+
+    seed_random(fs, random.Random(3), n=20)
+    assert fs.build_tag_index(STORE)["built"]
+    tidx = TagIndex(fs._layout(fs.find_by_name(STORE).id))
+    before = tidx.built_through()
+    assert before >= 0
+    fs.append(STORE, FactInput(type="T1", subject="S0", tags={"k1": "a"}))
+
+    def torn_dump(obj, f):
+        f.write(json.dumps(obj)[:5])
+        raise OSError("disk full")
+
+    # only this module's json: the index write itself must still work
+    monkeypatch.setattr(
+        tag_index_mod, "json", types.SimpleNamespace(dump=torn_dump, load=json.load)
+    )
+    with pytest.raises(OSError):
+        fs.refresh_tag_index(STORE)
+    monkeypatch.undo()
+    assert tidx.built_through() == before
+    assert not [n for n in os.listdir(tidx.layout.store_dir) if n.endswith(".tmp")]
