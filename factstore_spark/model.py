@@ -226,13 +226,20 @@ def batch_matches_tag_query(batch, query: TagQuery) -> bool:
     with pyarrow.compute + numpy over the whole batch at once (no
     Python row loop; this runs under the commit lock, where the DCB
     condition check must not serialize a per-row interpreter scan)."""
+    return bool(tag_query_mask(batch, query).any())
+
+
+def tag_query_mask(batch, query: TagQuery) -> "np.ndarray":
+    """Per row of ``batch`` (see ``batch_matches_tag_query``): does the
+    fact match the tag query? A bool numpy array."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = batch.num_rows
+    any_match = np.zeros(n, dtype=bool)
     if n == 0:
-        return False
+        return any_match
     types = batch.column("type")
     tags = batch.column("tags")
     # Flatten map entries once: entry i belongs to row row_ids[i].
@@ -254,7 +261,6 @@ def batch_matches_tag_query(batch, query: TagQuery) -> bool:
         out[row_ids[: len(m)][m]] = True
         return out
 
-    any_match = np.zeros(n, dtype=bool)
     for item in query.items:
         item_mask = np.ones(n, dtype=bool)
         for k, v in item.tags.items():
@@ -265,9 +271,7 @@ def batch_matches_tag_query(batch, query: TagQuery) -> bool:
             tm = pc.is_in(types, value_set=pa.array(list(item.types), type=pa.string()))
             item_mask &= np.asarray(tm.to_numpy(zero_copy_only=False), dtype=object) == True  # noqa: E712
         any_match |= item_mask
-        if any_match.any():
-            return True
-    return bool(any_match.any())
+    return any_match
 
 
 # --------------------------------------------------------------------------

@@ -9,7 +9,9 @@ multi-tag AND (FdbFactFinder.kt:132-159) disappears.
 
 from __future__ import annotations
 
+from datetime import date, timedelta, timezone
 from functools import reduce
+from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -57,26 +59,52 @@ def time_range_predicate(time_range: TimeRange, col: str = "appended_at") -> Col
     return pred
 
 
-def compacted_date_bounds(time_range: TimeRange, col: str = "fact_date") -> Column:
-    """Partition-pruning bounds for the compacted hive layout
-    (partitioned by ``fact_date`` = date(appended_at)). Widened by TWO
-    days on each side so a session-timezone difference between the
-    compacting and the querying cluster can never prune a partition
-    that holds in-range facts — the extreme legal zones span 26 hours
-    (UTC-12 vs UTC+14), so one day of slack is not enough at the edges.
-    The exact half-open ``appended_at`` predicate still decides
-    membership; the bounds only govern which partitions are read."""
-    from datetime import timedelta
+def time_range_arrow_filter(time_range: TimeRange):
+    """``time_range_predicate`` as a pyarrow dataset filter (None when
+    unbounded), for the finders' driver reads. A naive bound is local
+    time, as a Spark timestamp literal reads it."""
+    import pyarrow as pa
+    import pyarrow.dataset as pa_ds
 
-    pred = F.lit(True)
+    def at(ts):
+        return pa.scalar(ts.astimezone(timezone.utc), pa.timestamp("us", tz="UTC"))
+
+    col, flt = pa_ds.field("appended_at"), None
     if time_range.start is not None:
-        pred = pred & (
-            F.col(col) >= F.lit((time_range.start - timedelta(days=2)).date())
-        )
+        flt = col >= at(time_range.start)
     if time_range.end is not None:
-        pred = pred & (
-            F.col(col) <= F.lit((time_range.end + timedelta(days=2)).date())
-        )
+        lt = col < at(time_range.end)
+        flt = lt if flt is None else flt & lt
+    return flt
+
+
+def compacted_date_range(time_range: TimeRange) -> tuple[Optional[date], Optional[date]]:
+    """The inclusive ``fact_date`` bounds (None = unbounded) of the
+    compacted hive layout (partitioned by ``fact_date`` =
+    date(appended_at)) that can hold facts of ``time_range``. Widened
+    by TWO days on each side so a session-timezone difference between
+    the compacting and the querying cluster can never prune a
+    partition that holds in-range facts — the extreme legal zones span
+    26 hours (UTC-12 vs UTC+14), so one day of slack is not enough at
+    the edges. The exact half-open ``appended_at`` predicate still
+    decides membership; the bounds only govern which partitions are
+    read, by Spark (``compacted_date_bounds``) or on the driver."""
+    lo = hi = None
+    if time_range.start is not None:
+        lo = (time_range.start - timedelta(days=2)).date()
+    if time_range.end is not None:
+        hi = (time_range.end + timedelta(days=2)).date()
+    return lo, hi
+
+
+def compacted_date_bounds(time_range: TimeRange, col: str = "fact_date") -> Column:
+    """``compacted_date_range`` as a partition-pruning predicate."""
+    lo, hi = compacted_date_range(time_range)
+    pred = F.lit(True)
+    if lo is not None:
+        pred = pred & (F.col(col) >= F.lit(lo))
+    if hi is not None:
+        pred = pred & (F.col(col) <= F.lit(hi))
     return pred
 
 

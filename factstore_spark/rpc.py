@@ -402,7 +402,7 @@ class FactStoreRpcService:
     # -- streaming ---------------------------------------------------------
 
     def _SubscribeFacts(self, req: dict) -> Iterator[dict]:
-        if "fromEnd" in req:
+        if req.get("fromEnd"):
             start = StartPosition.End()
         elif "afterFactId" in req:
             start = StartPosition.After(req["afterFactId"])

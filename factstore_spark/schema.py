@@ -13,7 +13,7 @@ monotonic per store and dense within a commit.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
 from pyspark.sql.types import (
@@ -91,6 +91,48 @@ FACT_ARROW_SCHEMA = pa.schema(
 def facts_to_arrow(rows: list[dict]) -> pa.Table:
     """Build an Arrow table from fact dicts (append write path)."""
     return pa.Table.from_pylist(rows, schema=FACT_ARROW_SCHEMA)
+
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def _map_dicts(arr: pa.MapArray) -> list[dict[str, str]]:
+    """One dict per row of a map column ({} for a null map), built from
+    the flat key and value children: ``to_pylist`` on the map itself
+    costs several times more."""
+    off = arr.offsets.to_numpy()
+    base = int(off[0])
+    keys = arr.keys.slice(base, int(off[-1]) - base).to_pylist()
+    vals = arr.items.slice(base, int(off[-1]) - base).to_pylist()
+    off = (off - base).tolist()
+    return [dict(zip(keys[a:b], vals[a:b])) for a, b in zip(off, off[1:])]
+
+
+def arrow_to_facts(table: pa.Table) -> list[Fact]:
+    """The facts of an Arrow table of the fact envelope, in row order:
+    what ``row_to_fact`` gives for each row of ``table.to_pylist()``,
+    converted a column at a time (``appended_at`` through its int64
+    microseconds), which is several times faster on nested columns."""
+    if table.num_rows == 0:
+        return []
+    cols = {n: table.column(n).combine_chunks() for n in FACT_COLUMNS}
+    micros = cols["appended_at"].cast(pa.timestamp("us", tz="UTC")).cast(pa.int64())
+    payload = cols["payload"]
+    data, fmt, ref = (payload.field(n).to_pylist() for n in ("data", "format", "schema_ref"))
+    present = payload.is_valid().to_pylist()
+    return [
+        Fact(
+            id=i, type=t, subject=s, position=p,
+            appended_at=_EPOCH + timedelta(microseconds=us),
+            payload=FactPayload(bytes(d or b""), f, r) if ok else FactPayload(),
+            metadata=m, tags=g,
+        )
+        for i, t, s, p, us, d, f, r, ok, m, g in zip(
+            cols["id"].to_pylist(), cols["type"].to_pylist(), cols["subject"].to_pylist(),
+            cols["position"].to_pylist(), micros.to_pylist(), data, fmt, ref, present,
+            _map_dicts(cols["metadata"]), _map_dicts(cols["tags"]),
+        )
+    ]
 
 
 def _as_map(value) -> dict[str, str]:

@@ -26,18 +26,21 @@ Design for 100 TB:
   No UDF, no driver data path — the sidecar parquet is written by the
   same cluster that scanned the data.
 - **Probes never read pruned data pages.** A lookup hashes the probe
-  keys with the identical Spark expressions (same engine, same seeds —
-  build/probe asymmetry is impossible by construction) and keeps files
-  where ALL k bits of SOME key are set. Only those files are then
-  scanned, with the exact ``IN`` filter on top — Bloom false positives
-  cost a wasted file read, never a wrong row; false negatives cannot
-  occur. A driver-held key LIST (``bloom_candidate_files``, its
-  ``_multi`` batch, ``pruned_lookup``) runs no Spark job: the driver
-  JVM evaluates the ``xxhash64`` projection of the key literals, and
-  Python tests the k bits against the sidecar's bitsets, read once
-  per sidecar version with pyarrow and cached on the driver. A key
-  FRAME (``pruned_semi_join``) is probed by a broadcast join against
-  the sidecar instead, on the executors.
+  keys as the build did and keeps files where ALL k bits of SOME key
+  are set. Only those files are then scanned, with the exact ``IN``
+  filter on top — Bloom false positives cost a wasted file read,
+  never a wrong row; false negatives cannot occur while the probe
+  hash equals the build's. A driver-held key LIST
+  (``bloom_candidate_files``, its ``_multi`` batch, ``pruned_lookup``)
+  runs no Spark job and, for string, int and bigint keys, makes no
+  JVM call: ``xxh64`` is a Python port of Spark's ``xxhash64`` (seed 42,
+  chained across the key parts), pinned to Spark by a frozen
+  known-answer test and a live parity test, and Python tests the k
+  bits against the sidecar's bitsets, read once per sidecar version
+  with pyarrow and cached on the driver. Other key types are hashed
+  by the driver JVM with the build's own expressions. A key FRAME
+  (``pruned_semi_join``) is probed by a broadcast join against the
+  sidecar instead, on the executors.
 - **The index is derived state, never a correctness dependency** (the
   tag-index discipline, store.py find_by_tags_df): the manifest pins
   the exact data-file inventory (name + size) it was built from, and a
@@ -54,6 +57,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import uuid
 from dataclasses import dataclass
 from functools import reduce
@@ -66,8 +70,8 @@ from pyspark.sql import functions as F
 from .cas import cas_swap_manifest, read_versioned_manifest
 
 # Second xxhash64 stream for double hashing: same column value, extra
-# literal column => an independent 64-bit hash from the same JVM
-# function on both the build and probe sides.
+# literal column => an independent 64-bit hash (the probe side chains
+# the same string through ``xxh64``).
 _H2_SALT = "fsbloom-h2"
 
 _POINTER = "manifest.json"
@@ -208,24 +212,114 @@ def _usable_keys(manifest: dict, keys: list) -> list[tuple]:
     return list(dict.fromkeys(rows))
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_SPARK_SEED = 42  # xxhash64's seed, chained: each column seeds the next
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int: little-endian
+    lanes, the algorithm Spark's ``XXH64.hashUnsafeBytes`` (and, on 4
+    and 8 bytes, ``hashInt``/``hashLong``) implements."""
+    n, i, seed = len(data), 0, seed & _M64
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        lanes = struct.unpack_from(f"<{n // 32 * 4}Q", data)
+        for j in range(0, len(lanes), 4):
+            v = [_round(a, lane) for a, lane in zip(v, lanes[j:j + 4])]
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+        i = n // 32 * 32
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    for (lane,) in struct.iter_unpack("<Q", data[i:i + (n - i) // 8 * 8]):
+        h = (_rotl(h ^ _round(0, lane), 27) * _P1 + _P4) & _M64
+    i += (n - i) // 8 * 8
+    if n - i >= 4:
+        (lane,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+# key type -> (struct format, lo, hi) of the Python ints Spark hashes as
+# that type: int through hashInt, bigint through hashLong
+_INT_ENCODINGS = {"int": ("<i", -(2**31), 2**31), "bigint": ("<q", -(2**63), 2**63)}
+
+
+def _spark_bytes(value, key_type: str) -> bytes | None:
+    """The bytes Spark's xxhash64 hashes for ``value`` typed as
+    ``key_type`` (a string as UTF-8, an int or bigint as its
+    little-endian two's complement), or None for any other type or a
+    value that is not already of that type — the Python port never
+    guesses a cast."""
+    if key_type == "string" and isinstance(value, str):
+        try:
+            return value.encode("utf-8")
+        except UnicodeEncodeError:  # a lone surrogate: the JVM encodes it
+            return None
+    enc = _INT_ENCODINGS.get(key_type)
+    if enc and isinstance(value, int) and not isinstance(value, bool):
+        fmt, lo, hi = enc
+        return struct.pack(fmt, value) if lo <= value < hi else None
+    return None
+
+
+def _signed(h: int) -> int:
+    return h - (1 << 64) if h >> 63 else h
+
+
 def _driver_hashes(
-    spark: SparkSession, key_types: list[str], keys: list[tuple]
+    spark: SparkSession | None, key_types: list[str], keys: list[tuple]
 ) -> np.ndarray:
-    """(n, 2) int64 array: the (h1, h2) pair of each key tuple, from the
-    build's own ``_hashes`` expressions over the key literals cast to
-    the manifest's key types. The driver JVM evaluates the analyzed
-    one-row projection with the interpreter — no job, no codegen — so
-    probe hashes are Spark's hashes by construction (a Python XXH64
-    that drifted from Spark's would turn into false negatives)."""
-    hashes = [
-        h
-        for k in keys
-        for h in _hashes(*[F.lit(p).cast(t) for p, t in zip(k, key_types)])
-    ]
-    proj = spark.range(1).select(F.to_json(F.array(*hashes)))._jdf
-    value = proj.queryExecution().analyzed().projectList().apply(0)
-    flat = json.loads(value.child().eval(None).toString())
-    return np.array(flat, dtype=np.int64).reshape(-1, 2)
+    """(n, 2) int64 array: the (h1, h2) pair ``_hashes`` gives each key
+    tuple cast to the manifest's key types — computed in Python with
+    ``xxh64`` (seed 42, chained across the key parts, then the
+    ``_H2_SALT`` string for h2), so a probe makes no JVM call. Parity
+    with the executed Spark expression is pinned by tests (a port that
+    drifted would turn into false negatives). A key part the port does
+    not encode (another type, or a value that needs a cast) is hashed
+    by the driver JVM instead: the analyzed one-row projection of the
+    same expressions, evaluated with no job."""
+    salt = _H2_SALT.encode()
+    out, jvm = [], []
+    for k in keys:
+        parts = [_spark_bytes(p, t) for p, t in zip(k, key_types)]
+        if any(b is None for b in parts):
+            jvm.append(len(out))
+            out.append(None)
+            continue
+        h = _SPARK_SEED
+        for b in parts:
+            h = xxh64(b, h)
+        out.append((_signed(h), _signed(xxh64(salt, h))))
+    if jvm:
+        hashes = [
+            h
+            for j in jvm
+            for h in _hashes(*[F.lit(p).cast(t) for p, t in zip(keys[j], key_types)])
+        ]
+        proj = spark.range(1).select(F.to_json(F.array(*hashes)))._jdf
+        value = proj.queryExecution().analyzed().projectList().apply(0)
+        flat = json.loads(value.child().eval(None).toString())
+        for n, j in enumerate(jvm):
+            out[j] = (flat[2 * n], flat[2 * n + 1])
+    return np.array(out, dtype=np.int64).reshape(-1, 2)
 
 
 def _position(h1: F.Column, h2: F.Column, i: F.Column, m: F.Column) -> F.Column:
@@ -454,6 +548,13 @@ class BloomProbe:
 #   bits/key. A point lookup then tests bits in Python with no job.
 _SIDECAR_CACHE: dict[str, tuple[str, DataFrame]] = {}
 _BITSET_CACHE: dict[str, tuple[str, list[tuple[str, int, np.ndarray]]]] = {}
+# - _FOOTER_CACHE: per store data dir, the footer stats of its current
+#   compacted snapshot (keyed by the snapshot dir's name, which is never
+#   rewritten once a commit-log line names it — a newer compaction
+#   replaces the entry): [(relpath, num_rows, position min, position
+#   max)], ~100 B per file. The driver reads of the finders bound and
+#   cap their file sets with it (store.py).
+_FOOTER_CACHE: dict[str, tuple[str, list[tuple[str, int, int, int]]]] = {}
 
 
 def release_sidecar_cache(index_dir: str | None = None) -> int:
@@ -467,7 +568,7 @@ def release_sidecar_cache(index_dir: str | None = None) -> int:
     root = None if index_dir is None else os.path.abspath(index_dir)
     gone = {
         p
-        for p in [*_SIDECAR_CACHE, *_BITSET_CACHE]
+        for p in [*_SIDECAR_CACHE, *_BITSET_CACHE, *_FOOTER_CACHE]
         if root is None or p == root or p.startswith(root + os.sep)
     }
     for p in gone:
@@ -475,7 +576,37 @@ def release_sidecar_cache(index_dir: str | None = None) -> int:
         if hit is not None:
             hit[1].unpersist()
         _BITSET_CACHE.pop(p, None)
+        _FOOTER_CACHE.pop(p, None)
     return len(gone)
+
+
+def snapshot_file_stats(snapshot_dir: str) -> list[tuple[str, int, int, int]]:
+    """[(relpath, num_rows, position min, position max)] of every
+    parquet file under a compacted snapshot dir, from the footers (a
+    file without position stats spans every position), cached per
+    snapshot (``_FOOTER_CACHE``) and released with the sidecars."""
+    import pyarrow.parquet as pq
+
+    snapshot_dir = os.path.abspath(snapshot_dir)
+    key, token = os.path.split(snapshot_dir)
+    hit = _FOOTER_CACHE.get(key)
+    if hit is not None and hit[0] == token:
+        return hit[1]
+    out = []
+    for rel in sorted(_inventory(snapshot_dir)):
+        md = pq.read_metadata(os.path.join(snapshot_dir, rel))
+        lo, hi = -(2**63), 2**63 - 1
+        stats = [
+            rg.column(j).statistics
+            for rg in map(md.row_group, range(md.num_row_groups))
+            for j in range(rg.num_columns)
+            if rg.column(j).path_in_schema == "position"
+        ]
+        if stats and all(st is not None and st.has_min_max for st in stats):
+            lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+        out.append((rel, md.num_rows, lo, hi))
+    _FOOTER_CACHE[key] = (token, out)
+    return out
 
 
 def _sidecar_df(
@@ -587,7 +718,10 @@ def bloom_candidate_files(
     mismatched index returns every file as a candidate with
     ``stale=True`` — callers degrade to the full scan, never to a
     wrong answer. Snapshot-pinned callers pass the same ``files`` map
-    they built with. Runs on the driver, with no Spark job."""
+    they built with. Runs on the driver, with no Spark job; ``spark``
+    is used only to hash a key the Python port does not encode
+    (``_driver_hashes``), so string, int and bigint keys probe with
+    ``spark=None``."""
     return bloom_candidate_files_multi(
         spark, index_dir, data_dir, key_cols, {"_": keys}, files=files
     )["_"]

@@ -78,6 +78,7 @@ from ..schema import FACT_ARROW_SCHEMA, POSITION_STRIDE
 COMMITS_FILE = "commits.jsonl"
 DATA_DIR = "data"
 STREAM_DIR = "stream"
+ID_INDEX_DIR = "ididx"  # Bloom sidecar over the compacted snapshot's ids
 LOCK_FILE = "_commit.lock"
 
 
@@ -613,6 +614,7 @@ class StoreLayout:
 
         self.store_dir = store_dir
         self.data_dir = os.path.join(store_dir, DATA_DIR)
+        self.id_index_dir = os.path.join(store_dir, ID_INDEX_DIR)
         self.stream_dir = os.path.join(store_dir, STREAM_DIR)
         # Parsed log: (inode, bytes parsed through, records, n, view).
         # The log is append-only between checkpoints, so growth since
@@ -1112,7 +1114,7 @@ class StoreLayout:
 
         return HeadsIndex(self).lookup(subject)
 
-    # -- local reads (engine-internal; queries go through Spark) ------------
+    # -- local reads (pyarrow, no Spark) ------------------------------------
 
     def data_layout(self, snapshot=None) -> tuple[Optional[str], list[str]]:
         """(compacted_dir, tail_files): the latest compacted snapshot
@@ -1121,9 +1123,12 @@ class StoreLayout:
         prune dates) plus the per-commit parquet files of the live
         commits past it."""
         view = self._view(snapshot)
+        return self.snapshot_dir(view), self._resolve_files(None, view.live)
+
+    def snapshot_dir(self, view: LogView) -> Optional[str]:
+        """``view``'s compacted snapshot directory, or None."""
         ct = view.compacted_through
-        comp_dir = self._compacted_dir(ct) if ct >= 0 else None
-        return comp_dir, self._resolve_files(None, view.live)
+        return self._compacted_dir(ct) if ct >= 0 else None
 
     def data_files(self, snapshot=None) -> list[str]:
         view = self._view(snapshot)
@@ -1332,11 +1337,11 @@ class StoreLayout:
         filter: Optional[pa_ds.Expression] = None,
         files: Optional[list[str]] = None,
     ) -> pa.Table:
-        """Engine-internal reads (condition evaluation, cursor
-        resolution, the ordered reader's runs of row commits) — small,
-        latency-sensitive reads that would waste a Spark job. The
-        finders go through DataFrames. ``files`` restricts the read to
-        a pre-pruned subset (e.g. the ``commit_files`` of one run)."""
+        """Small, latency-sensitive reads that would waste a Spark job:
+        condition evaluation, cursor resolution, the ordered reader's
+        runs of row commits and the finders' index-bounded driver
+        reads. ``files`` restricts the read to a pre-pruned subset
+        (e.g. the ``commit_files`` of one run)."""
         files = self.data_files() if files is None else files
         if not files:
             return FACT_ARROW_SCHEMA.empty_table().select(columns) if columns else FACT_ARROW_SCHEMA.empty_table()
@@ -1403,10 +1408,38 @@ class StoreLayout:
             view.compaction_after(after_pos), view.live_after(after_pos)
         )
 
+    def id_candidates(self, fact_id: str, view: LogView) -> Optional[list[str]]:
+        """The files of ``view``'s compacted snapshot (relative to it)
+        that the id index admits for ``fact_id`` — the Bloom probe, in
+        Python, with no Spark session — or [] when there is no
+        snapshot. None when the snapshot's id index is absent or
+        stale. A live commit is never pruned by the index."""
+        snapshot = self.snapshot_dir(view)
+        if snapshot is None:
+            return []
+        if not os.path.isdir(self.id_index_dir):
+            return None
+        from . import bloomindex
+
+        probe = bloomindex.bloom_candidate_files(
+            None, self.id_index_dir, snapshot, "id", [fact_id]
+        )
+        return None if probe.stale else probe.candidate_files
+
     def position_of_fact(self, fact_id: str) -> Optional[int]:
-        """id -> position (FdbFactStore.kt:108-133's id index equivalent)."""
+        """id -> position (FdbFactStore.kt:108-133's id index
+        equivalent): reads the id index's candidate snapshot files plus
+        the live commits, or every data file when the index is absent
+        or stale."""
+        view = self.log_view()
+        cands = self.id_candidates(fact_id, view)
+        files = None
+        if cands is not None:
+            snapshot = self.snapshot_dir(view)
+            files = [os.path.join(snapshot, f) for f in cands]
+            files += self.commit_files(view.live)
         table = self.read_arrow(
-            columns=["position"], filter=pa_ds.field("id") == fact_id
+            columns=["position"], filter=pa_ds.field("id") == fact_id, files=files
         )
         if table.num_rows == 0:
             return None

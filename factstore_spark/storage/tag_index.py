@@ -14,9 +14,9 @@ subspaces and point-loads facts (FdbFactFinder.kt:108-203).
 
 Two readers resolve positions. The driver reader (pyarrow, no Spark
 job) opens only the queried keys' partitions: ``exists_after`` answers
-the DCB append condition, and ``resolve_positions`` gives
-``find_by_tags`` a bounded position list that it point-loads with one
-``position IN (...)`` fact read. The Spark reader
+the DCB append condition, and ``resolve_positions`` gives the tag
+finders a bounded position list that they read with one pyarrow
+``position IN (...)`` fact read (store.py). The Spark reader
 (``positions_for_query``) returns a position DataFrame that is
 semi-joined to the fact table, for tag queries and for position sets
 too large to hold on the driver.
@@ -208,21 +208,24 @@ class TagIndex:
             return None
 
     @staticmethod
-    def _item_positions(dataset, item, bound, max_rows=None) -> Optional[np.ndarray]:
-        """Sorted distinct positions of one query item within the
-        ``bound`` position predicate: AND across the item's tags
-        intersects per-tag sets, and a ``TagTypeItem``'s types filter
-        each scan. Only the mentioned keys' partitions are opened.
-        Distinct because a crash-retried refresh may legally repeat
-        index rows. None when one tag matches more than ``max_rows``
-        index rows: the read stops there, so the driver never holds
-        more."""
+    def _item_positions(dataset, item, bound, max_rows=None) -> tuple[Optional[np.ndarray], bool]:
+        """``(positions, exact)`` of one query item within the ``bound``
+        position predicate: sorted distinct positions, AND across the
+        item's tags intersecting per-tag sets, a ``TagTypeItem``'s types
+        filtering each scan. Only the mentioned keys' partitions are
+        opened. Distinct because a crash-retried refresh may legally
+        repeat index rows. A tag that matches more than ``max_rows``
+        index rows is left out of the intersection (its read stops
+        there, so the driver never holds more): the positions are then
+        a superset of the item's (``exact`` False) and the caller
+        applies the item's predicate to the facts. Positions are None
+        when every tag of the item is over the cap."""
         import pyarrow.dataset as pa_ds
 
         from ..model import TagOnlyQueryItem
 
-        acc = np.empty(0, dtype=np.int64)
-        for n, (k, v) in enumerate(item.tags.items()):
+        acc, exact = None, True
+        for k, v in item.tags.items():
             flt = (
                 (pa_ds.field("tag_key") == k)
                 & (pa_ds.field("tag_value") == v)
@@ -236,12 +239,13 @@ class TagIndex:
             else:
                 col = scan.head(max_rows + 1)["position"]
                 if len(col) > max_rows:
-                    return None
+                    exact = False
+                    continue
             s = np.unique(col.to_numpy())
-            acc = s if n == 0 else np.intersect1d(acc, s, assume_unique=True)
+            acc = s if acc is None else np.intersect1d(acc, s, assume_unique=True)
             if acc.size == 0:
-                break  # this AND-item cannot match
-        return acc
+                return acc, True  # this AND-item cannot match
+        return acc, exact
 
     def exists_after(self, query, after_pos: int) -> Optional[bool]:
         """Spark-free EXISTS check for the DCB append condition: does
@@ -261,21 +265,24 @@ class TagIndex:
             return None
         bound = pa_ds.field("position") > after_pos
         return any(
-            self._item_positions(dataset, item, bound).size
+            self._item_positions(dataset, item, bound)[0].size
             for item in query.items
         )
 
     def resolve_positions(
         self, query, max_position: int, max_rows: int
-    ) -> Optional[np.ndarray]:
-        """The tag query's position set on the driver, Spark-free: the
-        sorted distinct positions ``<= max_position`` (the head of the
-        commit snapshot that decided freshness) — OR across items
-        unions the per-item sets. The index is exact, so these are
-        exactly the matching facts' positions. None when the tree is
-        absent or swapped away mid-read, or when one tag matches more
-        than ``max_rows`` index rows (the caller resolves in Spark or
-        scans). Freshness is the CALLER's check."""
+    ) -> Optional[tuple[Optional[np.ndarray], bool]]:
+        """The tag query's position set on the driver, Spark-free:
+        ``(positions, exact)``, the sorted distinct positions ``<=
+        max_position`` (the head of the commit snapshot that decided
+        freshness) — OR across items unions the per-item sets. With
+        ``exact`` the index gives exactly the matching facts'
+        positions; without, some item left a tag over ``max_rows`` out
+        (``_item_positions``) and the set is a superset that the caller
+        filters with the query's predicate. Positions are None when
+        some item has no tag under ``max_rows`` (the caller resolves in
+        Spark or scans). None when the tree is absent or swapped away
+        mid-read. Freshness is the CALLER's check."""
         import pyarrow.dataset as pa_ds
 
         dataset = self._dataset()
@@ -283,15 +290,15 @@ class TagIndex:
             return None
         bound = pa_ds.field("position") <= max_position
         try:
-            sets = [
+            items = [
                 self._item_positions(dataset, item, bound, max_rows)
                 for item in query.items
             ]
         except OSError:
             return None
-        if any(s is None for s in sets):
-            return None
-        return reduce(np.union1d, sets)
+        if any(pos is None for pos, _ in items):
+            return None, False
+        return reduce(np.union1d, [pos for pos, _ in items]), all(ex for _, ex in items)
 
     def positions_for_query(self, spark: SparkSession, query) -> DataFrame:
         """Resolve the tag-query algebra to a position set using ONLY the

@@ -11,6 +11,12 @@ Design (SURVEY.md §7):
   hand-wires secondary-index scans (FdbFactFinder.kt). Each finder has a
   ``*_df`` variant returning the lazy DataFrame (the 100 TB path) and a
   materializing variant returning the reference's sealed result types.
+  Where an index bounds the files to read (id, tags, tag query) or the
+  date partitions do (time range), the materializing variant reads
+  those files on the driver with pyarrow — no Spark job, no py4j call,
+  as the reference answers from index keys — and takes the Spark plan
+  when the index is stale or absent or the files are over a row cap
+  (``_driver_facts``; each fallback is counted in ``spark_fallbacks``).
 - The append path is a commit protocol, not a DataFrame op: one
   attempt runs snapshot -> check-idempotency -> evaluate-condition ->
   assign ids/instant -> ``layout.append_commit`` (positions, parquet,
@@ -26,11 +32,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 import uuid
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 from typing import Iterable, Iterator, Optional, Sequence, Union
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.dataset as pa_ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,14 +62,17 @@ from .model import (
     batch_matches_tag_query,
     fact_matches_tag_query,
     new_fact_id,
+    tag_query_mask,
     validate_limit,
     validate_store_name,
 )
 from .plans.predicates import (
     compacted_date_bounds,
+    compacted_date_range,
     ordered_limited,
     tag_query_predicate,
     tags_all_match,
+    time_range_arrow_filter,
     time_range_predicate,
 )
 from .results import (
@@ -84,11 +96,46 @@ from .results import (
     StoreNotFound,
     StoreRemoved,
 )
-from .schema import FACT_COLUMNS, FACT_SCHEMA, POSITION_STRIDE, row_to_fact
+from .schema import FACT_COLUMNS, FACT_SCHEMA, POSITION_STRIDE, arrow_to_facts, row_to_fact
+from .storage import bloomindex
 from .storage.catalog import Catalog
 from .storage.layout import LogView, StoreLayout, utcnow_us
 
 DEFAULT_BATCH_SIZE = 10_000  # FdbFactStreamer.kt:22
+
+
+def _dated_within(relpath: str, lo, hi) -> bool:
+    """Can the snapshot file ``relpath`` (``fact_date=YYYY-MM-DD/...``)
+    hold facts dated within the inclusive bounds ``lo``..``hi`` (None =
+    unbounded)? A path without a readable date can."""
+    try:
+        d = date.fromisoformat(relpath.split(os.sep, 1)[0].removeprefix("fact_date="))
+    except ValueError:
+        return True
+    return (lo is None or d >= lo) and (hi is None or d <= hi)
+
+
+class SparkFallbacks:
+    """How many finder reads went to the Spark path instead of the
+    driver read, by reason: the index was ``stale`` or ``absent``, the
+    tag-index tree was in its rebuild ``swap`` window, the files to
+    open held more rows than the ``cap``, or a tag-query item had
+    ``no_tag_under_cap``. Thread-safe: the REST server reads from many
+    threads."""
+
+    REASONS = ("stale", "absent", "swap", "cap", "no_tag_under_cap")
+
+    def __init__(self) -> None:
+        self._mu = threading.Lock()
+        self._counts = dict.fromkeys(self.REASONS, 0)
+
+    def add(self, reason: str) -> None:
+        with self._mu:
+            self._counts[reason] += 1
+
+    def counts(self) -> dict[str, int]:
+        with self._mu:
+            return dict(self._counts)
 
 
 def _fresh_or_valid_key(idempotency_key: Optional[str]) -> str:
@@ -305,6 +352,7 @@ class FactStore:
         # Optimistic-claim conflicts retried by this handle (soak
         # observability: retries/commit = this / commits appended).
         self.append_conflict_retries = 0
+        self.spark_fallbacks = SparkFallbacks()
 
     # ------------------------------------------------------------------
     # Store management (StoreFactory / StoreFinder / StoreRemover)
@@ -728,39 +776,102 @@ class FactStore:
         snapshot file and there is no tail, so the id is absent without
         a Spark job."""
         layout = self._layout(meta.id)
-        idx_dir = self._id_index_dir(layout)
-        comp_dir, tail_files = layout.data_layout()
+        view = layout.log_view()
+        comp_dir, tail_files = layout.data_layout(view)
+        cands = layout.id_candidates(fact_id, view)
         comp_paths = None
-        if comp_dir is not None and os.path.isdir(idx_dir):
-            from .storage.bloomindex import bloom_candidate_files
-
-            probe = bloom_candidate_files(
-                self.spark, idx_dir, comp_dir, "id", [fact_id]
-            )
-            if not probe.stale:
-                if not probe.candidate_files and not tail_files:
-                    return None
-                comp_paths = [
-                    os.path.join(comp_dir, f) for f in probe.candidate_files
-                ]
+        if comp_dir is not None and cands is not None:
+            if not cands and not tail_files:
+                return None
+            comp_paths = [os.path.join(comp_dir, f) for f in cands]
         df = self._assemble_fact_frames(comp_dir, tail_files, comp_paths=comp_paths)
         return df.filter(F.col("id") == fact_id)
 
+    def _fact_by_id(self, meta, fact_id: str) -> Optional[Fact]:
+        """The fact with ``fact_id``: a driver read of the id index's
+        candidate snapshot files plus the live commits, filtered on
+        ``id``; when the index is absent or stale (or the files are
+        over the row cap), the Spark lookup of ``find_by_id_df``."""
+        layout = self._layout(meta.id)
+        view = layout.log_view()
+        cands = layout.id_candidates(fact_id, view)
+        found = None
+        if cands is None:
+            self.spark_fallbacks.add(
+                "stale" if os.path.isdir(layout.id_index_dir) else "absent"
+            )
+        else:
+            cands = set(cands)
+            found = self._driver_facts(
+                layout, view, self._snapshot_files(layout, view, lambda f: f[0] in cands),
+                view.live, pa_ds.field("id") == fact_id, limit=1,
+            )
+        if found is None:
+            df = self._id_lookup_df(meta, fact_id)
+            rows = [] if df is None else df.limit(1).collect()
+            return row_to_fact(rows[0]) if rows else None
+        return found.facts[0] if found.facts else None
+
     def find_by_id(self, store_name: str, fact_id: str) -> FindByIdResult:
+        """FdbFactFinder.kt:19-32, read as ``_fact_by_id`` does."""
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return StoreNotFound(store_name)
-        df = self._id_lookup_df(meta, fact_id)
-        rows = [] if df is None else df.limit(1).collect()
-        return FactFound(row_to_fact(rows[0])) if rows else FactNotFound(fact_id)
+        fact = self._fact_by_id(meta, fact_id)
+        return FactNotFound(fact_id) if fact is None else FactFound(fact)
 
     def exists_by_id(self, store_name: str, fact_id: str) -> ExistsByIdResult:
-        """FdbFactFinder.kt:34-47."""
+        """FdbFactFinder.kt:34-47, read as ``_fact_by_id`` does."""
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return StoreNotFound(store_name)
-        df = self._id_lookup_df(meta, fact_id)
-        return Exists() if df is not None and df.limit(1).count() > 0 else DoesNotExist()
+        return DoesNotExist() if self._fact_by_id(meta, fact_id) is None else Exists()
+
+    # -- driver reads ---------------------------------------------------
+
+    @staticmethod
+    def _snapshot_files(layout: StoreLayout, view: LogView, keep) -> list[tuple[str, int, int, int]]:
+        """Footer stats (bloomindex.snapshot_file_stats) of the files of
+        ``view``'s compacted snapshot that ``keep(stats)`` admits."""
+        snapshot = layout.snapshot_dir(view)
+        if snapshot is None:
+            return []
+        return [f for f in bloomindex.snapshot_file_stats(snapshot) if keep(f)]
+
+    def _driver_facts(
+        self,
+        layout: StoreLayout,
+        view: LogView,
+        snap: list[tuple[str, int, int, int]],
+        commits: list,
+        flt,
+        direction: ReadDirection = ReadDirection.FORWARD,
+        limit: Optional[int] = None,
+        keep=None,
+    ) -> Optional[FactsFound]:
+        """The finders' driver read: the facts of the snapshot files
+        ``snap`` and the live ``commits`` of ``view`` that pass the
+        pyarrow filter ``flt`` (and the row mask ``keep(batch)``, if
+        given), in ``direction``'s position order, cut to ``limit`` —
+        one ``read_arrow``, sorted and limited in Arrow, with no Spark
+        job and no py4j call. None, counted, when those files hold more
+        than DRIVER_READ_MAX_ROWS rows (footer and commit-record
+        counts): the caller takes the Spark path."""
+        if sum(f[1] for f in snap) + sum(c.rows for c in commits) > self.DRIVER_READ_MAX_ROWS:
+            self.spark_fallbacks.add("cap")
+            return None
+        snapshot = layout.snapshot_dir(view)
+        files = [os.path.join(snapshot, f[0]) for f in snap] + layout.commit_files(commits)
+        table = layout.read_arrow(filter=flt, files=files)
+        if keep is not None:
+            table = table.filter(
+                pa.array(np.concatenate([np.zeros(0, bool)] + [keep(b) for b in table.to_batches()]))
+            )
+        order = "ascending" if direction == ReadDirection.FORWARD else "descending"
+        table = table.sort_by([("position", order)])
+        if limit is not None:
+            table = table.slice(0, limit)
+        return FactsFound(tuple(arrow_to_facts(table)))
 
     # -- find_in_time_range (FdbFactFinder.kt:49-79) --------------------
 
@@ -782,6 +893,24 @@ class FactStore:
         return ordered_limited(df.filter(time_range_predicate(time_range)), limit, direction)
 
     def find_in_time_range(self, store_name, time_range, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
+        """A driver read of the compacted snapshot's ``fact_date``
+        partitions that can hold the range (``compacted_date_range``,
+        the bounds the Spark plan prunes with) plus the live commits,
+        with the exact half-open ``appended_at`` filter; over the row
+        cap, ``find_in_time_range_df`` in Spark."""
+        validate_limit(limit)
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return StoreNotFound(store_name)
+        layout = self._layout(meta.id)
+        view = layout.log_view()
+        lo, hi = compacted_date_range(time_range)
+        snap = self._snapshot_files(layout, view, lambda f: _dated_within(f[0], lo, hi))
+        found = self._driver_facts(
+            layout, view, snap, view.live, time_range_arrow_filter(time_range), direction, limit
+        )
+        if found is not None:
+            return found
         return self._materialize(self.find_in_time_range_df(store_name, time_range, limit, direction), store_name)
 
     # -- find_by_subject (FdbFactFinder.kt:81-106) ----------------------
@@ -810,6 +939,14 @@ class FactStore:
     # against the index — the same bounded-driver-probe rule the dedup
     # operators use.
     TAG_INDEX_PUSHDOWN_CAP = 10_000
+    # The finders read on the driver (``_driver_facts``: pyarrow, no
+    # Spark job, no py4j call) when their index bounds the files to
+    # open to at most this many rows, by footer and commit-record
+    # counts; past it they take the Spark path. The ordered reader
+    # collects a snapshot range of at most this many rows as one Arrow
+    # table. Bounds the Arrow rows a read holds on the driver, ~0.2 KB
+    # each on the events shape.
+    DRIVER_READ_MAX_ROWS = 200_000
     # Literal-list bound for the compiled ``isin`` predicate. Between
     # this and PUSHDOWN_CAP the scan still gets a position min/max
     # RANGE filter (pushed to parquet row-group stats — the part of
@@ -850,7 +987,7 @@ class FactStore:
         view = layout.log_view()
         head_pos = view.head
         fresh = view.last is not None and tidx.built_through() >= view.last_seq
-        pos = (
+        resolved = (
             tidx.resolve_positions(
                 TagQuery([TagOnlyQueryItem(dict(tags))]),
                 head_pos,
@@ -859,6 +996,8 @@ class FactStore:
             if fresh
             else None  # stale index: scan path below
         )
+        # an inexact list (a tag over the cap) takes the semi join below
+        pos = resolved[0] if resolved is not None and resolved[1] else None
         if pos is not None:
             if limit is not None:
                 # the index is exact, so the first/last ``limit``
@@ -929,7 +1068,66 @@ class FactStore:
         return ordered_limited(df.filter(tags_all_match(tags)), limit, direction)
 
     def find_by_tags(self, store_name, tags, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
+        """A driver read bounded by the fresh tag index
+        (``_driver_by_tags``); otherwise ``find_by_tags_df`` in Spark."""
+        if not tags:
+            raise ValueError("find_by_tags requires at least one tag")
+        validate_limit(limit)
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return StoreNotFound(store_name)
+        query = TagQuery([TagOnlyQueryItem(dict(tags))])
+        found = self._driver_by_tags(self._layout(meta.id), query, limit, direction)
+        if found is not None:
+            return found
         return self._materialize(self.find_by_tags_df(store_name, tags, limit, direction), store_name)
+
+    def _driver_by_tags(
+        self, layout: StoreLayout, query: TagQuery, limit=None, direction=ReadDirection.FORWARD
+    ) -> Optional[FactsFound]:
+        """The tag finders' driver read. The fresh tag index resolves the
+        query's positions under the head of one log view
+        (``TagIndex.resolve_positions``); they bound the files to read —
+        snapshot files by their footer position min/max, live row
+        commits by the ``[seq * stride, max_position]`` range each owns
+        (a bulk commit is always read) — and the facts are read by
+        position. An exact position list is cut to ``limit`` first;
+        when an AND item left an over-cap tag out, the positions are a
+        superset, and the query's predicate filters the facts before
+        direction and limit apply. None, counted, when the index is
+        absent, stale or mid-swap, an item has no tag under
+        TAG_INDEX_PUSHDOWN_CAP, or the files are over the row cap."""
+        from .storage.tag_index import TagIndex
+
+        tidx = TagIndex(layout)
+        view = layout.log_view()
+        if view.last is None:
+            return FactsFound(())
+        built = tidx.built_through()
+        if built < view.last_seq:
+            self.spark_fallbacks.add("absent" if built < 0 else "stale")
+            return None
+        resolved = tidx.resolve_positions(query, view.head, self.TAG_INDEX_PUSHDOWN_CAP)
+        if resolved is None or resolved[0] is None:
+            self.spark_fallbacks.add("swap" if resolved is None else "no_tag_under_cap")
+            return None
+        pos, exact = resolved
+        if exact and limit is not None:
+            pos = pos[:limit] if direction == ReadDirection.FORWARD else pos[-limit:]
+
+        def holds(lo: int, hi: int) -> bool:
+            i = np.searchsorted(pos, lo)
+            return bool(i < len(pos) and pos[i] <= hi)
+
+        snap = self._snapshot_files(layout, view, lambda f: holds(f[2], f[3]))
+        commits = [
+            c for c in view.live
+            if holds(-1 if c.bulk else c.seq * POSITION_STRIDE, c.max_position)
+        ]
+        return self._driver_facts(
+            layout, view, snap, commits, pa_ds.field("position").isin(pa.array(pos)),
+            direction, limit, None if exact else (lambda batch: tag_query_mask(batch, query)),
+        )
 
     # -- find_by_tag_query (FdbFactFinder.kt:169-255) -------------------
 
@@ -942,7 +1140,17 @@ class FactStore:
         return df.filter(tag_query_predicate(query)).orderBy(F.col("position").asc())
 
     def find_by_tag_query(self, store_name: str, query: TagQuery) -> FindResult:
-        return self._materialize(self.find_by_tag_query_df(store_name, query), store_name)
+        """A driver read bounded by the fresh tag index
+        (``_driver_by_tags``); otherwise
+        ``find_by_tag_query_indexed_df`` in Spark (the index semi join,
+        or the scan when the index is stale or absent)."""
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return StoreNotFound(store_name)
+        found = self._driver_by_tags(self._layout(meta.id), query)
+        if found is not None:
+            return found
+        return self._materialize(self.find_by_tag_query_indexed_df(store_name, query), store_name)
 
     def build_tag_index(self, store_name: str):
         """(Re)build the derived tag-index table (storage/tag_index.py)
@@ -958,7 +1166,7 @@ class FactStore:
 
     @staticmethod
     def _id_index_dir(layout) -> str:
-        return os.path.join(layout.store_dir, "ididx")
+        return layout.id_index_dir
 
     def build_id_index(self, store_name: str):
         """Build (or rebuild) the Bloom-sidecar id index over the
@@ -1075,9 +1283,8 @@ class FactStore:
         )
 
     def find_by_tag_query_indexed(self, store_name: str, query: TagQuery) -> FindResult:
-        return self._materialize(
-            self.find_by_tag_query_indexed_df(store_name, query), store_name
-        )
+        """The same finder as ``find_by_tag_query``."""
+        return self.find_by_tag_query(store_name, query)
 
     def _materialize(self, df: Optional[DataFrame], store_name: str) -> FindResult:
         if df is None:
@@ -1121,35 +1328,53 @@ class FactStore:
           each read with one ``layout.read_arrow`` and sorted — no
           Spark job.
         - The range reaches into the compacted snapshot (sorted by
-          subject, not position) or a bulk commit (any size): one Spark
-          ``orderBy`` over the view's data layout, streamed by
-          ``toLocalIterator``.
+          subject, not position) or a bulk commit (any size): Spark
+          reads it. When the snapshot files whose footer position range
+          meets the range, plus the live commits past the cursor, hold
+          at most DRIVER_READ_MAX_ROWS rows, one Spark job reads just
+          those files into one Arrow table, sorted on the driver;
+          otherwise one Spark ``orderBy`` over the view's data layout is
+          streamed by ``toLocalIterator``.
 
-        Driver memory is one batch plus one run (or one Spark
-        partition), however long the range."""
+        Driver memory is one batch plus one run, one Spark partition or
+        at most DRIVER_READ_MAX_ROWS rows, however long the range."""
         if head <= cursor:
             return
         runs = view.row_runs(cursor, head, batch_size)
         if runs is not None:
             in_range = (pa_ds.field("position") > cursor) & (pa_ds.field("position") <= head)
-            rows = (
-                row
+            facts = (
+                fact
                 for run in runs
-                for row in layout.read_arrow(filter=in_range, files=layout.commit_files(run))
-                .sort_by("position")
-                .to_pylist()
+                for fact in arrow_to_facts(
+                    layout.read_arrow(filter=in_range, files=layout.commit_files(run))
+                    .sort_by("position")
+                )
             )
         else:
-            comp_dir, tail_files = layout.data_layout(view)
-            rows = (
-                self._assemble_fact_frames(comp_dir, tail_files)
-                .filter((F.col("position") > cursor) & (F.col("position") <= head))
-                .orderBy(F.col("position").asc())
-                .toLocalIterator()
-            )
+            in_range = (F.col("position") > cursor) & (F.col("position") <= head)
+            snap = self._snapshot_files(layout, view, lambda f: f[3] > cursor and f[2] <= head)
+            commits = view.live_after(cursor)
+            snapshot = layout.snapshot_dir(view)
+            if sum(f[1] for f in snap) + sum(c.rows for c in commits) <= self.DRIVER_READ_MAX_ROWS:
+                frame = self._assemble_fact_frames(
+                    snapshot,
+                    layout.commit_files(commits),
+                    comp_paths=[os.path.join(snapshot, f[0]) for f in snap],
+                )
+                facts = iter(arrow_to_facts(frame.filter(in_range).toArrow().sort_by("position")))
+            else:
+                comp_dir, tail_files = layout.data_layout(view)
+                facts = (
+                    row_to_fact(row)
+                    for row in self._assemble_fact_frames(comp_dir, tail_files)
+                    .filter(in_range)
+                    .orderBy(F.col("position").asc())
+                    .toLocalIterator()
+                )
         batch: list[Fact] = []
-        for row in rows:
-            batch.append(row_to_fact(row))
+        for fact in facts:
+            batch.append(fact)
             if len(batch) >= batch_size:
                 yield batch
                 batch = []
