@@ -12,11 +12,14 @@ Design (SURVEY.md §7):
   ``*_df`` variant returning the lazy DataFrame (the 100 TB path) and a
   materializing variant returning the reference's sealed result types.
   Where an index bounds the files to read (id, tags, tag query) or the
-  date partitions do (time range), the materializing variant reads
-  those files on the driver with pyarrow — no Spark job, no py4j call,
-  as the reference answers from index keys — and takes the Spark plan
-  when the index is stale or absent or the files are over a row cap
-  (``_driver_facts``; each fallback is counted in ``spark_fallbacks``).
+  date partitions do (time range), a call resolves that bound once —
+  one log view, at most one index probe — and the row count alone
+  picks the engine: the driver reads those files with pyarrow (no
+  Spark job, no py4j call, as the reference answers from index keys)
+  up to a row cap, Spark reads the same files above it
+  (``_driver_facts``). A stale or absent index takes the Spark plan;
+  each fallback is counted in ``spark_fallbacks``. Replay and
+  subscribe bound a range of the compacted snapshot the same way.
 - The append path is a commit protocol, not a DataFrame op: one
   attempt runs snapshot -> check-idempotency -> evaluate-condition ->
   assign ids/instant -> ``layout.append_commit`` (positions, parquet,
@@ -36,7 +39,7 @@ import threading
 import time
 import uuid
 from datetime import date, datetime, timezone
-from typing import Iterable, Iterator, Optional, Sequence, Union
+from typing import Iterator, NamedTuple, Optional, Sequence, Union
 
 import numpy as np
 import pyarrow as pa
@@ -60,7 +63,6 @@ from .model import (
     TagQueryBased,
     TimeRange,
     batch_matches_tag_query,
-    fact_matches_tag_query,
     new_fact_id,
     tag_query_mask,
     validate_limit,
@@ -71,7 +73,6 @@ from .plans.predicates import (
     compacted_date_range,
     ordered_limited,
     tag_query_predicate,
-    tags_all_match,
     time_range_arrow_filter,
     time_range_predicate,
 )
@@ -136,6 +137,21 @@ class SparkFallbacks:
     def counts(self) -> dict[str, int]:
         with self._mu:
             return dict(self._counts)
+
+
+class _TagBound(NamedTuple):
+    """One resolution of a tag read (``FactStore._tag_bound``): the log
+    view, and either the ``reason`` the tag index cannot bound the read
+    (a SparkFallbacks reason) or the resolved positions ``pos``
+    (``exact``, or a superset) with the footer stats ``snap`` of the
+    snapshot files and the live ``commits`` that can hold them."""
+
+    view: LogView
+    reason: Optional[str] = None
+    pos: Optional[np.ndarray] = None
+    exact: bool = True
+    snap: Optional[list] = None
+    commits: Optional[list] = None
 
 
 def _fresh_or_valid_key(idempotency_key: Optional[str]) -> str:
@@ -670,57 +686,52 @@ class FactStore:
         partitioned directory and applying the derived date bounds lets
         Spark skip whole date partitions before any file I/O — the
         created-at-index analog (FdbFactFinder.kt:49-79). The bounds
-        are widened by a day on each side (timezone robustness); the
-        caller still applies the exact ``appended_at`` predicate."""
+        are ``compacted_date_range``'s, widened past the range for
+        timezone robustness; the caller still applies the exact
+        ``appended_at`` predicate."""
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return None
         layout = self._layout(meta.id)
-        comp_dir, tail_files = layout.data_layout()
-        df = self._assemble_fact_frames(
-            comp_dir, tail_files, time_range=time_range
-        )
+        df = self._frame(layout, layout.log_view(), time_range=time_range)
         if max_position is not None:
             df = df.filter(F.col("position") <= max_position)
         return df
 
-    def _assemble_fact_frames(
+    def _frame(
         self,
-        comp_dir: Optional[str],
-        tail_files: list[str],
-        *,
-        comp_paths: Optional[list[str]] = None,
+        layout: StoreLayout,
+        view: LogView,
+        snap: Optional[list] = None,
+        commits: Optional[list] = None,
         time_range: Optional[TimeRange] = None,
     ) -> DataFrame:
-        """The ONE recipe that turns a (compacted snapshot, tail files)
-        layout into the fact DataFrame — shared by the full scan
-        (facts_df) and the id-index fast path (find_by_id_df), so the
-        two can never drift semantically. ``comp_paths`` substitutes a
-        pruned file subset for the snapshot directory (basePath keeps
-        the hive partition column derivable either way)."""
+        """The ONE recipe that turns files of log view ``view`` into the
+        fact DataFrame, so no two Spark reads can drift semantically:
+        the compacted snapshot files ``snap`` (footer stats, see
+        ``_snapshot_files``; None reads the snapshot directory, whose
+        ``fact_date`` partitions ``time_range`` prunes) plus the files
+        of ``commits`` (None: every live commit). basePath keeps the
+        hive partition column derivable either way."""
         from .schema import FACT_SCHEMA_PARTITIONED
 
+        snapshot = layout.snapshot_dir(view)
+        tail = layout.commit_files(view.live if commits is None else commits)
         frames = []
-        if comp_dir is not None and (comp_paths is None or comp_paths):
+        if snapshot is not None and (snap is None or snap):
             comp = (
                 self.spark.read.schema(FACT_SCHEMA_PARTITIONED)
-                .option("basePath", comp_dir)
-                .parquet(*(comp_paths if comp_paths is not None else [comp_dir]))
+                .option("basePath", snapshot)
+                .parquet(*([snapshot] if snap is None else [os.path.join(snapshot, f[0]) for f in snap]))
             )
             if time_range is not None:
                 comp = comp.filter(compacted_date_bounds(time_range))
             frames.append(comp.select(*FACT_COLUMNS))
-        if tail_files:
-            frames.append(
-                self.spark.read.schema(FACT_SCHEMA).parquet(*tail_files)
-            )
+        if tail:
+            frames.append(self.spark.read.schema(FACT_SCHEMA).parquet(*tail))
         if not frames:
             return self.spark.createDataFrame([], FACT_SCHEMA)
-        return (
-            frames[0]
-            if len(frames) == 1
-            else frames[0].unionByName(frames[1])
-        )
+        return frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
 
     def register_views(self, store_name: str, prefix: Optional[str] = None) -> Optional[list[str]]:
         """Expose the store to plain ``spark.sql`` as temp views:
@@ -757,58 +768,50 @@ class FactStore:
 
     # -- find_by_id (FdbFactFinder.kt:19-32) ----------------------------
 
+    def _id_bound(self, layout: StoreLayout, fact_id: str):
+        """The one resolution of an id read: ``(view, snap)``, one log
+        view and the footer stats of its snapshot files that the id
+        index's Bloom probe admits for ``fact_id`` (every live commit is
+        read too) — the id->position point-index analog
+        (FdbFactFinder.kt:19-32, FdbFactStore.kt:108-133). ``snap`` is
+        None when the index is absent or stale: the read takes the whole
+        snapshot, as the index is derived state, never a correctness
+        dependency."""
+        view = layout.log_view()
+        cands = layout.id_candidates(fact_id, view)
+        if cands is None:
+            return view, None
+        cands = set(cands)
+        return view, self._snapshot_files(layout, view, lambda f: f[0] in cands)
+
     def find_by_id_df(self, store_name: str, fact_id: str) -> Optional[DataFrame]:
-        """Point lookup by fact id. With a fresh id index (see
-        build_id_index) the compacted snapshot is pruned to the Bloom
-        sidecar's candidate files — the id->position point-index analog
-        (FdbFactFinder.kt:19-32, FdbFactStore.kt:108-133) — and only
-        the post-compaction tail commits are scanned in full. A stale
-        or absent index falls back to the whole-store scan: derived
-        state, never a correctness dependency (the tag-index rule)."""
+        """Point lookup by fact id: the files of ``_id_bound`` (see
+        build_id_index), filtered on ``id``."""
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return None
-        df = self._id_lookup_df(meta, fact_id)
-        return df if df is not None else self._assemble_fact_frames(None, [])
-
-    def _id_lookup_df(self, meta, fact_id: str) -> Optional[DataFrame]:
-        """find_by_id_df's frame; None when the fresh id index admits no
-        snapshot file and there is no tail, so the id is absent without
-        a Spark job."""
         layout = self._layout(meta.id)
-        view = layout.log_view()
-        comp_dir, tail_files = layout.data_layout(view)
-        cands = layout.id_candidates(fact_id, view)
-        comp_paths = None
-        if comp_dir is not None and cands is not None:
-            if not cands and not tail_files:
-                return None
-            comp_paths = [os.path.join(comp_dir, f) for f in cands]
-        df = self._assemble_fact_frames(comp_dir, tail_files, comp_paths=comp_paths)
-        return df.filter(F.col("id") == fact_id)
+        view, snap = self._id_bound(layout, fact_id)
+        return self._frame(layout, view, snap).filter(F.col("id") == fact_id)
 
     def _fact_by_id(self, meta, fact_id: str) -> Optional[Fact]:
-        """The fact with ``fact_id``: a driver read of the id index's
-        candidate snapshot files plus the live commits, filtered on
-        ``id``; when the index is absent or stale (or the files are
-        over the row cap), the Spark lookup of ``find_by_id_df``."""
+        """The fact with ``fact_id``: the files of ``_id_bound``,
+        filtered on ``id``, read on the driver (``_driver_facts``), or
+        in Spark when the index is absent or stale (counted) or the
+        files are over the row cap."""
         layout = self._layout(meta.id)
-        view = layout.log_view()
-        cands = layout.id_candidates(fact_id, view)
+        view, snap = self._id_bound(layout, fact_id)
         found = None
-        if cands is None:
+        if snap is None:
             self.spark_fallbacks.add(
                 "stale" if os.path.isdir(layout.id_index_dir) else "absent"
             )
         else:
-            cands = set(cands)
             found = self._driver_facts(
-                layout, view, self._snapshot_files(layout, view, lambda f: f[0] in cands),
-                view.live, pa_ds.field("id") == fact_id, limit=1,
+                layout, view, snap, view.live, pa_ds.field("id") == fact_id, limit=1
             )
         if found is None:
-            df = self._id_lookup_df(meta, fact_id)
-            rows = [] if df is None else df.limit(1).collect()
+            rows = self._frame(layout, view, snap).filter(F.col("id") == fact_id).limit(1).collect()
             return row_to_fact(rows[0]) if rows else None
         return found.facts[0] if found.facts else None
 
@@ -849,14 +852,15 @@ class FactStore:
         limit: Optional[int] = None,
         keep=None,
     ) -> Optional[FactsFound]:
-        """The finders' driver read: the facts of the snapshot files
+        """The driver read of a bound: the facts of the snapshot files
         ``snap`` and the live ``commits`` of ``view`` that pass the
         pyarrow filter ``flt`` (and the row mask ``keep(batch)``, if
         given), in ``direction``'s position order, cut to ``limit`` —
         one ``read_arrow``, sorted and limited in Arrow, with no Spark
-        job and no py4j call. None, counted, when those files hold more
-        than DRIVER_READ_MAX_ROWS rows (footer and commit-record
-        counts): the caller takes the Spark path."""
+        job and no py4j call. None, counted as ``cap``, when those files
+        hold more than DRIVER_READ_MAX_ROWS rows (footer and
+        commit-record counts): the caller reads the same files in
+        Spark (``_frame``)."""
         if sum(f[1] for f in snap) + sum(c.rows for c in commits) > self.DRIVER_READ_MAX_ROWS:
             self.spark_fallbacks.add("cap")
             return None
@@ -875,6 +879,15 @@ class FactStore:
 
     # -- find_in_time_range (FdbFactFinder.kt:49-79) --------------------
 
+    def _time_range_df(self, layout: StoreLayout, view: LogView, time_range, limit, direction) -> DataFrame:
+        """A time-range read in Spark over log view ``view``: the
+        compacted snapshot read as a partitioned directory, whose
+        derived fact_date bounds skip whole date partitions
+        (PartitionFilters) before the exact half-open appended_at
+        predicate runs, plus every live commit."""
+        df = self._frame(layout, view, time_range=time_range)
+        return ordered_limited(df.filter(time_range_predicate(time_range)), limit, direction)
+
     def find_in_time_range_df(
         self,
         store_name: str,
@@ -883,21 +896,18 @@ class FactStore:
         direction: ReadDirection = ReadDirection.FORWARD,
     ) -> Optional[DataFrame]:
         validate_limit(limit)
-        # time_range doubles as the partition-pruning hint: on a
-        # compacted store the derived fact_date bounds skip whole date
-        # partitions (PartitionFilters) before the exact half-open
-        # appended_at predicate runs.
-        df = self.facts_df(store_name, time_range=time_range)
-        if df is None:
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
             return None
-        return ordered_limited(df.filter(time_range_predicate(time_range)), limit, direction)
+        layout = self._layout(meta.id)
+        return self._time_range_df(layout, layout.log_view(), time_range, limit, direction)
 
     def find_in_time_range(self, store_name, time_range, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
         """A driver read of the compacted snapshot's ``fact_date``
         partitions that can hold the range (``compacted_date_range``,
         the bounds the Spark plan prunes with) plus the live commits,
         with the exact half-open ``appended_at`` filter; over the row
-        cap, ``find_in_time_range_df`` in Spark."""
+        cap, ``_time_range_df`` over the same log view."""
         validate_limit(limit)
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
@@ -911,7 +921,7 @@ class FactStore:
         )
         if found is not None:
             return found
-        return self._materialize(self.find_in_time_range_df(store_name, time_range, limit, direction), store_name)
+        return self._materialize(self._time_range_df(layout, view, time_range, limit, direction), store_name)
 
     # -- find_by_subject (FdbFactFinder.kt:81-106) ----------------------
 
@@ -934,17 +944,16 @@ class FactStore:
     # -- find_by_tags: AND semantics (FdbFactFinder.kt:108-167) ---------
 
     # The driver reads at most this many index rows per queried tag;
-    # past it the indexed find_by_tags switches from a driver-held
-    # position list (point-load analog) to a distributed semi join
-    # against the index — the same bounded-driver-probe rule the dedup
-    # operators use.
+    # past it a tag is left out of its AND item, and an item with no
+    # tag under it resolves through a distributed semi join against the
+    # index — the same bounded-driver-probe rule the dedup operators
+    # use.
     TAG_INDEX_PUSHDOWN_CAP = 10_000
-    # The finders read on the driver (``_driver_facts``: pyarrow, no
-    # Spark job, no py4j call) when their index bounds the files to
-    # open to at most this many rows, by footer and commit-record
-    # counts; past it they take the Spark path. The ordered reader
-    # collects a snapshot range of at most this many rows as one Arrow
-    # table. Bounds the Arrow rows a read holds on the driver, ~0.2 KB
+    # An index-bounded read (finders and the ordered reader's snapshot
+    # ranges) runs on the driver (``_driver_facts``: pyarrow, no Spark
+    # job, no py4j call) when its files hold at most this many rows, by
+    # footer and commit-record counts; past it Spark reads the same
+    # files. Bounds the Arrow rows a read holds on the driver, ~0.2 KB
     # each on the events shape.
     DRIVER_READ_MAX_ROWS = 200_000
     # Literal-list bound for the compiled ``isin`` predicate. Between
@@ -955,162 +964,34 @@ class FactStore:
     # expression is ever compiled.
     TAG_INDEX_ISIN_CAP = 1_000
 
-    def find_by_tags_df(
-        self,
-        store_name: str,
-        tags: dict[str, str],
-        limit: Optional[int] = None,
-        direction: ReadDirection = ReadDirection.FORWARD,
-    ) -> Optional[DataFrame]:
-        """AND-of-tags finder. When the derived tag index covers the
-        current head it resolves positions on the driver from the
-        per-key index partitions (touching only the queried keys, no
-        Spark job) and point-loads the facts — positions are pushed
-        into the fact scan as an ``isin`` filter when few (parquet
-        row-group min/max skips the rest of the table), else
-        semi-joined. Stale/absent index falls back to the full scan:
-        the index is derived state, never a correctness dependency
-        (reference tag subspaces: FdbFactStoreContext.kt:25-57,
-        FdbFactFinder.kt:108-167)."""
-        if not tags:
-            raise ValueError("find_by_tags requires at least one tag")
-        validate_limit(limit)
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return None
-        from .storage.tag_index import TagIndex
-
-        layout = self._layout(meta.id)
-        tidx = TagIndex(layout)
-        # One log view decides freshness AND bounds the positions and
-        # the fact side (same pattern as find_by_tag_query_indexed_df).
-        view = layout.log_view()
-        head_pos = view.head
-        fresh = view.last is not None and tidx.built_through() >= view.last_seq
-        resolved = (
-            tidx.resolve_positions(
-                TagQuery([TagOnlyQueryItem(dict(tags))]),
-                head_pos,
-                max_rows=self.TAG_INDEX_PUSHDOWN_CAP,
-            )
-            if fresh
-            else None  # stale index: scan path below
-        )
-        # an inexact list (a tag over the cap) takes the semi join below
-        pos = resolved[0] if resolved is not None and resolved[1] else None
-        if pos is not None:
-            if limit is not None:
-                # the index is exact, so the first/last ``limit``
-                # positions are exactly the answer's
-                pos = pos[:limit] if direction == ReadDirection.FORWARD else pos[-limit:]
-            facts = self.facts_df(store_name, max_position=head_pos)
-            pos = pos.tolist()
-            if not pos:
-                matched = facts.filter(F.lit(False))
-            else:
-                rng = (F.col("position") >= pos[0]) & (F.col("position") <= pos[-1])
-                if len(pos) <= self.TAG_INDEX_ISIN_CAP:
-                    matched = facts.filter(rng & F.col("position").isin(pos))
-                else:
-                    # range prunes row groups at the scan; the semi
-                    # join supplies exactness without compiling a
-                    # thousands-literal predicate
-                    listed = self.spark.createDataFrame(
-                        [(p,) for p in pos], "position long"
-                    )
-                    matched = facts.filter(rng).join(
-                        F.broadcast(listed), "position", "left_semi"
-                    )
-            return ordered_limited(matched, limit, direction)
-        # A fresh index whose tag matches more than PUSHDOWN_CAP rows:
-        # semi join against the index in Spark (None = the rebuild-swap
-        # window, scan path below).
-        indexed = tidx.positions_for_tags(self.spark, tags) if fresh else None
-        if indexed is not None:
-            facts = self.facts_df(store_name, max_position=head_pos)
-            matched = facts.join(indexed, "position", "left_semi")
-            return ordered_limited(matched, limit, direction)
-        # No (fresh) tag index: before the full scan, consult any
-        # tag-value Bloom sidecar built for one of the queried keys —
-        # it prunes the COMPACTED snapshot to candidate files for that
-        # key's probed VALUE (the exact AND-of-tags filter still runs
-        # on top, and the post-compaction tail is always scanned), so
-        # a single-tag point probe on an unindexed store stops paying
-        # a whole-snapshot read. Stale/absent sidecars skip silently:
-        # derived state, never a correctness dependency.
-        df = None
-        comp_dir, tail_files = layout.data_layout()
-        if comp_dir is not None:
-            from .storage.bloomindex import bloom_candidate_files
-
-            for k, v in tags.items():
-                idx_dir = self._tag_bloom_dir(layout, k)
-                if not os.path.isdir(idx_dir):
-                    continue
-                probe = bloom_candidate_files(
-                    self.spark, idx_dir, comp_dir, self._tag_key_spec(k), [v]
-                )
-                if probe.stale:
-                    continue
-                df = self._assemble_fact_frames(
-                    comp_dir,
-                    tail_files,
-                    comp_paths=[
-                        os.path.join(comp_dir, f)
-                        for f in probe.candidate_files
-                    ],
-                )
-                break
-        if df is None:
-            df = self.facts_df(store_name)
-        if df is None:
-            return None
-        return ordered_limited(df.filter(tags_all_match(tags)), limit, direction)
-
-    def find_by_tags(self, store_name, tags, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
-        """A driver read bounded by the fresh tag index
-        (``_driver_by_tags``); otherwise ``find_by_tags_df`` in Spark."""
-        if not tags:
-            raise ValueError("find_by_tags requires at least one tag")
-        validate_limit(limit)
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return StoreNotFound(store_name)
-        query = TagQuery([TagOnlyQueryItem(dict(tags))])
-        found = self._driver_by_tags(self._layout(meta.id), query, limit, direction)
-        if found is not None:
-            return found
-        return self._materialize(self.find_by_tags_df(store_name, tags, limit, direction), store_name)
-
-    def _driver_by_tags(
+    def _tag_bound(
         self, layout: StoreLayout, query: TagQuery, limit=None, direction=ReadDirection.FORWARD
-    ) -> Optional[FactsFound]:
-        """The tag finders' driver read. The fresh tag index resolves the
-        query's positions under the head of one log view
-        (``TagIndex.resolve_positions``); they bound the files to read —
-        snapshot files by their footer position min/max, live row
-        commits by the ``[seq * stride, max_position]`` range each owns
-        (a bulk commit is always read) — and the facts are read by
-        position. An exact position list is cut to ``limit`` first;
-        when an AND item left an over-cap tag out, the positions are a
-        superset, and the query's predicate filters the facts before
-        direction and limit apply. None, counted, when the index is
-        absent, stale or mid-swap, an item has no tag under
-        TAG_INDEX_PUSHDOWN_CAP, or the files are over the row cap."""
+    ) -> _TagBound:
+        """The one resolution of a tag read (reference tag subspaces:
+        FdbFactStoreContext.kt:25-57, FdbFactFinder.kt:108-255): one log
+        view, then, when the derived tag index covers its last commit,
+        one ``TagIndex.resolve_positions`` under its head — read from
+        the queried keys' index partitions on the driver, no Spark job.
+        The positions bound the files to read: snapshot files by their
+        footer position min/max, live row commits by the ``[seq *
+        stride, max_position]`` range each owns (a bulk commit is always
+        read). An exact list is cut to ``limit`` first; when an AND item
+        left an over-cap tag out, the positions are a superset that the
+        query's predicate filters. Otherwise the bound carries the
+        reason the index cannot bound the read: ``absent``, ``stale``,
+        ``swap`` (the rebuild's window) or ``no_tag_under_cap``."""
         from .storage.tag_index import TagIndex
 
         tidx = TagIndex(layout)
         view = layout.log_view()
         if view.last is None:
-            return FactsFound(())
+            return _TagBound(view, None, np.zeros(0, np.int64), True, [], [])
         built = tidx.built_through()
         if built < view.last_seq:
-            self.spark_fallbacks.add("absent" if built < 0 else "stale")
-            return None
+            return _TagBound(view, "absent" if built < 0 else "stale")
         resolved = tidx.resolve_positions(query, view.head, self.TAG_INDEX_PUSHDOWN_CAP)
         if resolved is None or resolved[0] is None:
-            self.spark_fallbacks.add("swap" if resolved is None else "no_tag_under_cap")
-            return None
+            return _TagBound(view, "swap" if resolved is None else "no_tag_under_cap")
         pos, exact = resolved
         if exact and limit is not None:
             pos = pos[:limit] if direction == ReadDirection.FORWARD else pos[-limit:]
@@ -1124,10 +1005,108 @@ class FactStore:
             c for c in view.live
             if holds(-1 if c.bulk else c.seq * POSITION_STRIDE, c.max_position)
         ]
-        return self._driver_facts(
-            layout, view, snap, commits, pa_ds.field("position").isin(pa.array(pos)),
-            direction, limit, None if exact else (lambda batch: tag_query_mask(batch, query)),
-        )
+        return _TagBound(view, None, pos, exact, snap, commits)
+
+    def _tags_df(
+        self, layout: StoreLayout, query: TagQuery, b: _TagBound, limit=None, direction=ReadDirection.FORWARD
+    ) -> DataFrame:
+        """A tag read in Spark over the bound ``b``. Resolved positions
+        filter the bound's files: an ``isin`` when few (parquet
+        row-group min/max skips the rest), else a position range plus a
+        semi join against the list, so no thousands-literal predicate is
+        compiled; a superset is then filtered by the query. With no tag
+        under the cap, the fresh index's Spark position set
+        (``positions_for_query``) is semi-joined to the view's facts up
+        to its head. Otherwise (index stale, absent or mid-swap) the
+        view's facts are scanned with the query's predicate; a one-item
+        query first prunes the snapshot to the candidate files of a
+        fresh tag-value Bloom sidecar built for one of its keys
+        (``build_tag_bloom_index``)."""
+        if b.reason is None:
+            df = self._frame(layout, b.view, b.snap, b.commits)
+            pos = b.pos.tolist()
+            if not pos:
+                df = df.filter(F.lit(False))
+            else:
+                rng = (F.col("position") >= pos[0]) & (F.col("position") <= pos[-1])
+                if len(pos) <= self.TAG_INDEX_ISIN_CAP:
+                    df = df.filter(rng & F.col("position").isin(pos))
+                else:
+                    listed = self.spark.createDataFrame([(p,) for p in pos], "position long")
+                    df = df.filter(rng).join(F.broadcast(listed), "position", "left_semi")
+            return ordered_limited(df if b.exact else df.filter(tag_query_predicate(query)), limit, direction)
+        from .storage.bloomindex import bloom_candidate_files
+        from .storage.tag_index import TagIndex
+
+        indexed = None
+        if b.reason == "no_tag_under_cap":
+            indexed = TagIndex(layout).positions_for_query(self.spark, query)
+        if indexed is not None:
+            df = self._frame(layout, b.view).filter(F.col("position") <= b.view.head)
+            return ordered_limited(df.join(indexed, "position", "left_semi"), limit, direction)
+        snapshot, snap = layout.snapshot_dir(b.view), None
+        one_item = query.items[0].tags if snapshot and len(query.items) == 1 else {}
+        for k, v in one_item.items():
+            idx_dir = self._tag_bloom_dir(layout, k)
+            if not os.path.isdir(idx_dir):
+                continue
+            probe = bloom_candidate_files(self.spark, idx_dir, snapshot, self._tag_key_spec(k), [v])
+            if not probe.stale:
+                cands = set(probe.candidate_files)
+                snap = self._snapshot_files(layout, b.view, lambda f: f[0] in cands)
+                break
+        df = self._frame(layout, b.view, snap).filter(tag_query_predicate(query))
+        return ordered_limited(df, limit, direction)
+
+    def _find_tags(self, store_name: str, query: TagQuery, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
+        """The tag finders' read of ``_tag_bound``: on the driver
+        (``_driver_facts``) when the index bounds it and its files are
+        under the row cap, else ``_tags_df`` over the same bound in
+        Spark; each fallback is counted."""
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return StoreNotFound(store_name)
+        layout = self._layout(meta.id)
+        b = self._tag_bound(layout, query, limit, direction)
+        if b.reason is not None:
+            self.spark_fallbacks.add(b.reason)
+        else:
+            found = self._driver_facts(
+                layout, b.view, b.snap, b.commits, pa_ds.field("position").isin(pa.array(b.pos)),
+                direction, limit, None if b.exact else (lambda batch: tag_query_mask(batch, query)),
+            )
+            if found is not None:
+                return found
+        return self._materialize(self._tags_df(layout, query, b, limit, direction), store_name)
+
+    def find_by_tags_df(
+        self,
+        store_name: str,
+        tags: dict[str, str],
+        limit: Optional[int] = None,
+        direction: ReadDirection = ReadDirection.FORWARD,
+    ) -> Optional[DataFrame]:
+        """AND-of-tags finder as a lazy DataFrame: when the derived tag
+        index covers the head, the positions it resolves on the driver
+        bound the files and filter the facts; otherwise the index semi
+        join or the scan (``_tags_df`` over ``_tag_bound``). The index
+        is derived state, never a correctness dependency."""
+        if not tags:
+            raise ValueError("find_by_tags requires at least one tag")
+        validate_limit(limit)
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return None
+        layout = self._layout(meta.id)
+        query = TagQuery([TagOnlyQueryItem(dict(tags))])
+        return self._tags_df(layout, query, self._tag_bound(layout, query, limit, direction), limit, direction)
+
+    def find_by_tags(self, store_name, tags, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
+        """AND-of-tags finder, read as ``_find_tags`` does."""
+        if not tags:
+            raise ValueError("find_by_tags requires at least one tag")
+        validate_limit(limit)
+        return self._find_tags(store_name, TagQuery([TagOnlyQueryItem(dict(tags))]), limit, direction)
 
     # -- find_by_tag_query (FdbFactFinder.kt:169-255) -------------------
 
@@ -1140,17 +1119,8 @@ class FactStore:
         return df.filter(tag_query_predicate(query)).orderBy(F.col("position").asc())
 
     def find_by_tag_query(self, store_name: str, query: TagQuery) -> FindResult:
-        """A driver read bounded by the fresh tag index
-        (``_driver_by_tags``); otherwise
-        ``find_by_tag_query_indexed_df`` in Spark (the index semi join,
-        or the scan when the index is stale or absent)."""
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return StoreNotFound(store_name)
-        found = self._driver_by_tags(self._layout(meta.id), query)
-        if found is not None:
-            return found
-        return self._materialize(self.find_by_tag_query_indexed_df(store_name, query), store_name)
+        """Tag query, read as ``_find_tags`` does."""
+        return self._find_tags(store_name, query)
 
     def build_tag_index(self, store_name: str):
         """(Re)build the derived tag-index table (storage/tag_index.py)
@@ -1253,34 +1223,14 @@ class FactStore:
     def find_by_tag_query_indexed_df(
         self, store_name: str, query: TagQuery
     ) -> Optional[DataFrame]:
-        """Tag query resolved through the derived index: positions from
-        the per-key index partitions, semi-joined back to the fact
-        table. Falls back to the scan path when the index is stale or
-        absent — the index is derived state, never a correctness
-        dependency."""
+        """Tag query as a lazy DataFrame, resolved through the derived
+        index as ``find_by_tags_df`` is (``_tags_df`` over
+        ``_tag_bound``), in global position order."""
         meta = self.catalog.find_by_name(store_name)
         if meta is None:
             return None
-        from .storage.tag_index import TagIndex
-
         layout = self._layout(meta.id)
-        tidx = TagIndex(layout)
-        # Resolve freshness against ONE log view (not a separate
-        # is_fresh() probe — a commit landing between the probe and the
-        # join would return fresh-but-incomplete results). The fact side
-        # is then capped at that snapshot's head position so index and
-        # fact table agree even if more commits land mid-query.
-        view = layout.log_view()
-        if view.last is None or tidx.built_through() < view.last_seq:
-            return self.find_by_tag_query_df(store_name, query)
-        head_pos = view.head
-        positions = tidx.positions_for_query(self.spark, query)
-        if positions is None:  # rebuild-swap window: scan-path fallback
-            return self.find_by_tag_query_df(store_name, query)
-        facts = self.facts_df(store_name, max_position=head_pos)
-        return facts.join(positions, "position", "left_semi").orderBy(
-            F.col("position").asc()
-        )
+        return self._tags_df(layout, query, self._tag_bound(layout, query))
 
     def find_by_tag_query_indexed(self, store_name: str, query: TagQuery) -> FindResult:
         """The same finder as ``find_by_tag_query``."""
@@ -1325,24 +1275,24 @@ class FactStore:
 
         - Live row commits only: runs of consecutive commits of at most
           ``batch_size`` rows (a bigger commit is a run of its own),
-          each read with one ``layout.read_arrow`` and sorted — no
-          Spark job.
+          each read with one ``layout.read_arrow`` and sorted.
         - The range reaches into the compacted snapshot (sorted by
-          subject, not position) or a bulk commit (any size): Spark
-          reads it. When the snapshot files whose footer position range
-          meets the range, plus the live commits past the cursor, hold
-          at most DRIVER_READ_MAX_ROWS rows, one Spark job reads just
-          those files into one Arrow table, sorted on the driver;
-          otherwise one Spark ``orderBy`` over the view's data layout is
+          subject, not position) or a bulk commit (any size): it is
+          bounded like a finder's read — the snapshot files whose footer
+          position range meets it, plus the live commits past the
+          cursor — and read by ``_driver_facts`` in one ``read_arrow``
+          when those hold at most DRIVER_READ_MAX_ROWS rows; over that
+          cap (counted), one Spark ``orderBy`` over the same files is
           streamed by ``toLocalIterator``.
 
-        Driver memory is one batch plus one run, one Spark partition or
-        at most DRIVER_READ_MAX_ROWS rows, however long the range."""
+        No Spark job below the cap. Driver memory is one batch plus one
+        run, at most DRIVER_READ_MAX_ROWS rows, or one Spark partition,
+        however long the range."""
         if head <= cursor:
             return
         runs = view.row_runs(cursor, head, batch_size)
+        in_range = (pa_ds.field("position") > cursor) & (pa_ds.field("position") <= head)
         if runs is not None:
-            in_range = (pa_ds.field("position") > cursor) & (pa_ds.field("position") <= head)
             facts = (
                 fact
                 for run in runs
@@ -1352,26 +1302,16 @@ class FactStore:
                 )
             )
         else:
-            in_range = (F.col("position") > cursor) & (F.col("position") <= head)
             snap = self._snapshot_files(layout, view, lambda f: f[3] > cursor and f[2] <= head)
             commits = view.live_after(cursor)
-            snapshot = layout.snapshot_dir(view)
-            if sum(f[1] for f in snap) + sum(c.rows for c in commits) <= self.DRIVER_READ_MAX_ROWS:
-                frame = self._assemble_fact_frames(
-                    snapshot,
-                    layout.commit_files(commits),
-                    comp_paths=[os.path.join(snapshot, f[0]) for f in snap],
-                )
-                facts = iter(arrow_to_facts(frame.filter(in_range).toArrow().sort_by("position")))
-            else:
-                comp_dir, tail_files = layout.data_layout(view)
-                facts = (
-                    row_to_fact(row)
-                    for row in self._assemble_fact_frames(comp_dir, tail_files)
-                    .filter(in_range)
-                    .orderBy(F.col("position").asc())
-                    .toLocalIterator()
-                )
+            found = self._driver_facts(layout, view, snap, commits, in_range)
+            facts = iter(found.facts) if found is not None else (
+                row_to_fact(row)
+                for row in self._frame(layout, view, snap, commits)
+                .filter((F.col("position") > cursor) & (F.col("position") <= head))
+                .orderBy(F.col("position").asc())
+                .toLocalIterator()
+            )
         batch: list[Fact] = []
         for fact in facts:
             batch.append(fact)
@@ -1393,9 +1333,9 @@ class FactStore:
         cursor, head and the log view the facts are read from resolve
         once, before iteration — the analog of the single FDB read
         transaction (FdbFactStreamer.kt:60-84). The facts come from
-        ``_read_ordered``: a range of live row commits is read with
-        pyarrow and runs no Spark job; a range reaching into the
-        compacted snapshot or a bulk commit is one ordered Spark read.
+        ``_read_ordered``: with pyarrow and no Spark job, unless a range
+        reaching into the compacted snapshot or a bulk commit holds more
+        than DRIVER_READ_MAX_ROWS rows.
 
         Returns StoreNotFound / FactIdNotFound, or an iterator of
         position-ordered Fact batches (Flow<List<Fact>> analog).
@@ -1460,7 +1400,8 @@ class FactStore:
         published head to ``_read_ordered``, the reader replay uses: a
         tail of row commits is one pyarrow read over the new commits'
         files, and a catch-up that reaches into the compacted snapshot
-        is one ordered Spark read, streamed batch by batch.
+        is one pyarrow read of its footer-bounded files (one ordered
+        Spark read, streamed batch by batch, over the row cap).
 
         ``watch=True`` (opt-in): between polls, stat the commit log's
         change token every ``watch_interval`` seconds and recompute the

@@ -271,9 +271,9 @@ def test_position_of_fact_reads_the_id_index_candidates(spark, fs, monkeypatch):
     assert reads == [None]  # no index: every data file
 
 
-def test_snapshot_replay_is_one_spark_job_in_position_order(spark, bench):
+def test_snapshot_replay_runs_no_spark_job_in_position_order(spark, bench):
     """A replay whose range reaches into the compacted snapshot reads
-    the footer-bounded files with one Spark job (``toArrow``) and
+    the footer-bounded files on the driver, with no Spark job, and
     delivers the ordered scan's facts in position order."""
     from factstore_spark.model import ReplayStart
 
@@ -283,9 +283,87 @@ def test_snapshot_replay_is_one_spark_job_in_position_order(spark, bench):
     batches, jobs, _ = _costs(
         spark, lambda: list(fs.replay(STORE, ReplayStart.After("seed-90"), batch_size=7))
     )
-    assert jobs == 1
+    assert jobs == 0
     assert [len(b) for b in batches][:-1] == [7] * (len(batches) - 1)
     assert tuple(f for b in batches for f in b) == tuple(f for f in want if f.position > after.position)
+
+
+def test_snapshot_replay_over_the_row_cap_is_a_counted_spark_read(bench):
+    """Over DRIVER_READ_MAX_ROWS, a replay into the compacted snapshot
+    reads the same bounded files in Spark: the ordered scan's facts, in
+    position order, and one more ``cap`` fallback."""
+    from factstore_spark.model import ReplayStart
+
+    fs, _ = bench
+    want = _facts(fs, fs.facts_df(STORE).orderBy("position"))
+    after = next(f for f in want if f.id == "seed-60")
+    before = fs.spark_fallbacks.counts()["cap"]
+    fs.DRIVER_READ_MAX_ROWS = 5
+    try:
+        got = [f for b in fs.replay(STORE, ReplayStart.After("seed-60"), batch_size=7) for f in b]
+    finally:
+        del fs.DRIVER_READ_MAX_ROWS
+    assert tuple(got) == tuple(f for f in want if f.position > after.position)
+    assert [f.position for f in got] == sorted({f.position for f in got})
+    assert fs.spark_fallbacks.counts()["cap"] == before + 1
+
+
+def test_each_finder_call_resolves_its_bound_once(bench, monkeypatch):
+    """A finder call takes one log view, makes at most one id-index
+    probe and at most one tag-index resolution, whether it ends on the
+    driver or in a forced Spark fallback (``cap`` for every finder,
+    ``no_tag_under_cap`` for the tag finders) — and the fallback
+    answers as the driver read did."""
+    from factstore_spark.storage.tag_index import TagIndex
+
+    fs, _ = bench
+    layout = fs._layout(fs.find_by_name(STORE).id)
+    calls = {}
+    # the layout's own class: the optimistic layout overrides log_view
+    for owner, name in ((type(layout), "log_view"), (type(layout), "id_candidates"),
+                        (TagIndex, "resolve_positions")):
+        def counting(*args, _real=getattr(owner, name), _name=name, **kwargs):
+            calls[_name] = calls.get(_name, 0) + 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, counting)
+
+    def once(fn, reason=None):
+        before = fs.spark_fallbacks.counts()
+        calls.clear()
+        out = fn()
+        assert calls.get("log_view") == 1 and max(calls.values()) == 1, calls
+        if reason is not None:
+            assert fs.spark_fallbacks.counts()[reason] == before[reason] + 1
+        return out
+
+    query = TagQuery([TagOnlyQueryItem({"user": "1", "all": "x"}), TagOnlyQueryItem({"user": "3"})])
+    reads = {
+        "id": lambda: fs.find_by_id(STORE, "seed-7"),
+        "exists": lambda: fs.exists_by_id(STORE, "seed-7"),
+        "tags": lambda: fs.find_by_tags(STORE, {"user": "1"}, 5, BACK),
+        "query": lambda: fs.find_by_tag_query(STORE, query),
+        "time": lambda: fs.find_in_time_range(STORE, TimeRange(), 9, BACK),
+    }
+    on_driver = {k: once(fn) for k, fn in reads.items()}
+    for fn in (
+        lambda: fs.find_by_id_df(STORE, "seed-7"),
+        lambda: fs.find_by_tags_df(STORE, {"user": "1"}, 5, BACK),
+        lambda: fs.find_by_tag_query_indexed_df(STORE, query),
+        lambda: fs.find_in_time_range_df(STORE, TimeRange(), 9, BACK),
+    ):
+        once(fn)
+    fs.DRIVER_READ_MAX_ROWS = 2
+    try:
+        for k, fn in reads.items():
+            assert once(fn, "cap") == on_driver[k], k
+    finally:
+        del fs.DRIVER_READ_MAX_ROWS
+    over = {"all": "x"}  # every fact: over the module's per-tag cap
+    want = fs.find_in_time_range(STORE, TimeRange()).facts
+    assert once(lambda: fs.find_by_tags(STORE, over), "no_tag_under_cap").facts == want
+    got = once(lambda: fs.find_by_tag_query(STORE, TagQuery([TagOnlyQueryItem(over)])), "no_tag_under_cap")
+    assert got.facts == want
 
 
 def test_arrow_to_facts_equals_row_to_fact_per_row():

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from factstore_spark import FactInput, ReplayStart, StartPosition
 from factstore_spark.schema import FACT_ARROW_SCHEMA, POSITION_STRIDE, row_to_fact
+from factstore_spark.storage import bloomindex
 from factstore_spark.storage.layout import CommitRecord, StoreLayout, fold_log, utcnow_us
 from factstore_spark.store import FactStore
 
@@ -189,10 +190,10 @@ def test_row_commit_replay_runs_no_spark_job_and_matches_the_ordered_scan(fs, sp
     assert [len(b) for b in batches] == [4, 4, 4, 3]
 
 
-# -- compacted snapshot: one ordered Spark read --------------------------------
+# -- compacted snapshot: one read of its footer-bounded files -----------------
 
 
-def test_compacted_catchup_is_ordered_and_never_arrow_reads_the_snapshot(fs, monkeypatch):
+def test_compacted_catchup_is_ordered_and_one_arrow_read_of_bounded_files(fs, monkeypatch):
     fs.create(STORE)
     for i in range(10):
         fs.append(STORE, [fi(f"P{i}.{j}", subject=f"S{(i * 7 + j) % 4}") for j in range(3)])
@@ -202,12 +203,25 @@ def test_compacted_catchup_is_ordered_and_never_arrow_reads_the_snapshot(fs, mon
     calls = _record_reads(monkeypatch)
     gen = fs.subscribe(STORE, StartPosition.Beginning(), batch_size=4, poll_interval=0.01)
     batches = _drain(gen, 32)
+    catchup = list(calls)
     assert [len(b) for b in batches] == [4] * 8
     facts = [f for b in batches for f in b]
     positions = [f.position for f in facts]
     assert positions == sorted(set(positions))
     assert set(positions) == {f.position for b in fs.replay(STORE) for f in b}
-    assert calls == []  # the whole catch-up was the Spark branch
+    # the whole catch-up was one read: the snapshot files whose footer
+    # position range meets it, plus the tail commits
+    layout = _layout(fs)
+    view = layout.log_view()
+    snapshot = layout.snapshot_dir(view)
+    bounded = [
+        os.path.join(snapshot, rel)
+        for rel, _rows, lo, hi in bloomindex.snapshot_file_stats(snapshot)
+        if hi > -1 and lo <= view.head
+    ]
+    assert len(bounded) >= 1 and len(view.live) == 2
+    assert catchup == [bounded + layout.commit_files(view.live)]
+    calls.clear()
     # past the snapshot, the tail is back on pyarrow reads of row commits
     fs.append(STORE, [fi("R0"), fi("R1")])
     more = _drain(gen, 2)
