@@ -13,8 +13,9 @@ touched partitions), not O(store history):
 - partitioned by ``date(appended_at)`` -> partition pruning for
   time-range finders;
 - sorted by ``(subject, position)`` within partitions -> parquet
-  row-group min/max stats make subject lookups skip row groups (the
-  Z-order-lite stand-in for the reference's subject index);
+  row-group min/max stats make subject lookups skip row groups, in the
+  Spark plan and in ``find_by_subject``'s pyarrow driver read alike
+  (the Z-order-lite stand-in for the reference's subject index);
 - ``position`` values are PRESERVED, so cursors, replay bounds and
   ordering semantics are untouched;
 - the swap is transactional: the new directory is written alongside,

@@ -11,8 +11,9 @@ Design (SURVEY.md §7):
   hand-wires secondary-index scans (FdbFactFinder.kt). Each finder has a
   ``*_df`` variant returning the lazy DataFrame (the 100 TB path) and a
   materializing variant returning the reference's sealed result types.
-  Where an index bounds the files to read (id, tags, tag query) or the
-  date partitions do (time range), a call resolves that bound once —
+  Where an index bounds the files to read (id, tags, tag query), the
+  date partitions do (time range) or the commits' subject fingerprints
+  do (subject), a call resolves that bound once —
   one log view, at most one index probe — and the row count alone
   picks the engine: the driver reads those files with pyarrow (no
   Spark job, no py4j call, as the reference answers from index keys)
@@ -100,7 +101,7 @@ from .results import (
 from .schema import FACT_COLUMNS, FACT_SCHEMA, POSITION_STRIDE, arrow_to_facts, row_to_fact
 from .storage import bloomindex
 from .storage.catalog import Catalog
-from .storage.layout import LogView, StoreLayout, utcnow_us
+from .storage.layout import LogView, StoreLayout, subject_fingerprint, utcnow_us
 
 DEFAULT_BATCH_SIZE = 10_000  # FdbFactStreamer.kt:22
 
@@ -925,6 +926,24 @@ class FactStore:
 
     # -- find_by_subject (FdbFactFinder.kt:81-106) ----------------------
 
+    def _subject_bound(self, layout: StoreLayout, subject: str):
+        """The one resolution of a subject read: ``(view, snap,
+        commits)``, one log view, the footer stats of every file of its
+        compacted snapshot (sorted by subject, so the subject filter can
+        skip row groups) and the live commits whose ``subj_fps`` can
+        hold ``subject`` — a commit with no summary (None) is always
+        read, as in ``HeadsIndex.lookup``."""
+        view = layout.log_view()
+        fp = subject_fingerprint(subject)
+        commits = [c for c in view.live if c.subj_fps is None or fp in c.subj_fps]
+        return view, self._snapshot_files(layout, view, lambda f: True), commits
+
+    def _subject_df(self, layout: StoreLayout, bound, subject: str, limit, direction) -> DataFrame:
+        """A subject read in Spark over the files of ``bound``."""
+        view, snap, commits = bound
+        df = self._frame(layout, view, snap, commits).filter(F.col("subject") == subject)
+        return ordered_limited(df, limit, direction)
+
     def find_by_subject_df(
         self,
         store_name: str,
@@ -933,13 +952,29 @@ class FactStore:
         direction: ReadDirection = ReadDirection.FORWARD,
     ) -> Optional[DataFrame]:
         validate_limit(limit)
-        df = self.facts_df(store_name)
-        if df is None:
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
             return None
-        return ordered_limited(df.filter(F.col("subject") == subject), limit, direction)
+        layout = self._layout(meta.id)
+        return self._subject_df(layout, self._subject_bound(layout, subject), subject, limit, direction)
 
     def find_by_subject(self, store_name, subject, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
-        return self._materialize(self.find_by_subject_df(store_name, subject, limit, direction), store_name)
+        """A driver read of ``_subject_bound`` with the exact subject
+        filter — the limited, directed subject-index range scan's analog;
+        over the row cap, ``_subject_df`` over the same bound."""
+        validate_limit(limit)
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
+            return StoreNotFound(store_name)
+        layout = self._layout(meta.id)
+        bound = self._subject_bound(layout, subject)
+        view, snap, commits = bound
+        found = self._driver_facts(
+            layout, view, snap, commits, pa_ds.field("subject") == subject, direction, limit
+        )
+        if found is not None:
+            return found
+        return self._materialize(self._subject_df(layout, bound, subject, limit, direction), store_name)
 
     # -- find_by_tags: AND semantics (FdbFactFinder.kt:108-167) ---------
 

@@ -1,10 +1,10 @@
 """Index-bounded finders read on the driver: ``find_by_id``,
-``exists_by_id``, ``find_by_tags``, ``find_by_tag_query`` and
-``find_in_time_range`` answer with one pyarrow read — no Spark job and
-no py4j call — and equal their ``*_df`` Spark results, on both commit
-backends, over a compacted snapshot plus a post-compaction tail. A read
-the indexes cannot bound takes the Spark path, and each such fallback is
-counted by reason."""
+``exists_by_id``, ``find_by_tags``, ``find_by_tag_query``,
+``find_in_time_range`` and ``find_by_subject`` answer with one pyarrow
+read — no Spark job and no py4j call — and equal their ``*_df`` Spark
+results, on both commit backends, over a compacted snapshot plus a
+post-compaction tail. A read the indexes cannot bound takes the Spark
+path, and each such fallback is counted by reason."""
 
 import shutil
 import tempfile
@@ -112,11 +112,11 @@ def _on_driver(spark, fn):
 
 
 def test_the_cost_counters_see_a_spark_read(spark, bench):
-    """find_by_subject has no index to bound it: its one job and its
-    py4j calls register, so the zeros below are not vacuous."""
+    """A ``*_df`` plan collected in Spark: its job and its py4j calls
+    register, so the zeros below are not vacuous."""
     fs, _ = bench
-    got, jobs, py4j = _costs(spark, lambda: fs.find_by_subject(STORE, "user:1", 3))
-    assert len(got.facts) == 3 and jobs >= 1 and py4j > 0
+    got, jobs, py4j = _costs(spark, lambda: fs.find_by_subject_df(STORE, "user:1", 3).collect())
+    assert len(got) == 3 and jobs >= 1 and py4j > 0
 
 
 def _facts(fs, df):
@@ -188,6 +188,91 @@ def test_time_range_directions_boundaries_and_the_tail(spark, bench):
     assert [f.id for f in exact] == [f.id for f in seeded[10:40]]
     straddle = fs.find_in_time_range(STORE, TimeRange(seeded[100].appended_at, None)).facts
     assert {f.id for f in straddle} >= set(tail)
+
+
+SUBJECTS = "driver-subjects"
+
+
+@pytest.fixture(scope="module")
+def subjects(spark, bench):
+    """A second store of the ``bench`` FactStore: the seed compacted,
+    then two tail commits, so ``user:1`` is in the snapshot and the
+    tail and ``order/0-1`` (the DCB append subject shape) only in the
+    tail."""
+    fs, _ = bench
+    fs.create(SUBJECTS)
+    fs.append_dataframe(SUBJECTS, _seed_frame(spark))
+    fs.compact(SUBJECTS)
+    for subs in (("user:1", "order/0-1", "user:3"), ("order/0-1", "user:1")):
+        fs.append(SUBJECTS, [FactInput(type="click", subject=s) for s in subs])
+    layout = fs._layout(fs.find_by_name(SUBJECTS).id)
+    assert layout.data_layout()[0] is not None and len(layout.data_layout()[1]) == 2
+    return fs
+
+
+@pytest.mark.parametrize("limit", [None, 2, 30])
+@pytest.mark.parametrize("direction", [ReadDirection.FORWARD, BACK])
+def test_by_subject_both_directions_with_and_without_limit(spark, subjects, limit, direction):
+    fs = subjects
+    sizes = {"user:1": 26, "order/0-1": 2, "user:404": 0}
+    for subject, n in sizes.items():
+        got = _on_driver(spark, lambda: fs.find_by_subject(SUBJECTS, subject, limit, direction))
+        want = _facts(fs, fs.find_by_subject_df(SUBJECTS, subject, limit, direction))
+        assert got.facts == want, subject
+        assert len(got.facts) == min(limit or n, n), subject
+
+
+@pytest.mark.parametrize("backend", ["flock", "optimistic"])
+def test_subject_read_opens_only_commits_that_can_hold_it(spark, store_root, monkeypatch, backend):
+    """The subject bound prunes live commits by ``subj_fps``: a row
+    commit without the subject is not opened, one with no summary (over
+    MAX_SUBJ_FPS subjects) is. On the optimistic backend a bulk publishes
+    after a row commit that claimed its seq while the bulk's range was
+    reserved, so seq order and position order differ: the read still
+    answers in position order."""
+    from factstore_spark.storage.layout import subject_fingerprint
+
+    fs = FactStore(spark, store_root, commit_backend=backend)
+    fs.create(STORE)
+    fs.append(STORE, [FactInput(type="t", subject=s) for s in ("a", "b")])
+    fs.append(STORE, [FactInput(type="t", subject=f"n{i}") for i in range(70)])
+    layout = fs._layout(fs.find_by_name(STORE).id)
+    if backend == "optimistic":
+        real = type(layout).reserve_position_range
+
+        def reserve_then_append(self, rel_hi, appended_at):
+            monkeypatch.setattr(type(layout), "reserve_position_range", real)
+            out = real(self, rel_hi, appended_at)
+            fs.append(STORE, FactInput(type="t", subject="user:1"))  # claims the next seq
+            return out
+
+        monkeypatch.setattr(type(layout), "reserve_position_range", reserve_then_append)
+    fs.append_dataframe(STORE, _seed_frame(spark))
+    fs.append(STORE, FactInput(type="t", subject="user:1"))
+    live = layout.log_view().live
+    fp = subject_fingerprint("user:1")
+    skipped, summaryless = live[0], live[1]
+    assert fp not in skipped.subj_fps and summaryless.subj_fps is None
+    reads = []
+    real_read = StoreLayout.read_arrow
+
+    def recording(self, *args, **kwargs):
+        reads.append(kwargs.get("files"))
+        return real_read(self, *args, **kwargs)
+
+    monkeypatch.setattr(StoreLayout, "read_arrow", recording)
+    got = _on_driver(spark, lambda: fs.find_by_subject(STORE, "user:1"))
+    assert len(reads) == 1
+    opened = set(reads[0])
+    assert not opened & set(layout.commit_files([skipped]))
+    assert set(layout.commit_files([summaryless])) <= opened
+    assert got.facts == _facts(fs, fs.find_by_subject_df(STORE, "user:1"))
+    assert len(got.facts) == 24 + (2 if backend == "optimistic" else 1)
+    assert [f.position for f in got.facts] == sorted(f.position for f in got.facts)
+    if backend == "optimistic":
+        bulk = next(c for c in live if c.bulk)
+        raced = next(c for c in live if not c.bulk and c.seq < bulk.seq and c.rows == 1)
+        assert raced.max_position > bulk.max_position  # position order != seq order
 
 
 def test_every_fallback_reason_is_counted_and_answers_right(spark, fs):
@@ -344,6 +429,7 @@ def test_each_finder_call_resolves_its_bound_once(bench, monkeypatch):
         "tags": lambda: fs.find_by_tags(STORE, {"user": "1"}, 5, BACK),
         "query": lambda: fs.find_by_tag_query(STORE, query),
         "time": lambda: fs.find_in_time_range(STORE, TimeRange(), 9, BACK),
+        "subject": lambda: fs.find_by_subject(STORE, "user:1", 5, BACK),
     }
     on_driver = {k: once(fn) for k, fn in reads.items()}
     for fn in (
@@ -351,6 +437,7 @@ def test_each_finder_call_resolves_its_bound_once(bench, monkeypatch):
         lambda: fs.find_by_tags_df(STORE, {"user": "1"}, 5, BACK),
         lambda: fs.find_by_tag_query_indexed_df(STORE, query),
         lambda: fs.find_in_time_range_df(STORE, TimeRange(), 9, BACK),
+        lambda: fs.find_by_subject_df(STORE, "user:1", 5, BACK),
     ):
         once(fn)
     fs.DRIVER_READ_MAX_ROWS = 2

@@ -4,6 +4,7 @@
 import base64
 import json
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -186,6 +187,29 @@ def test_limit_zero_and_negative_mean_unbounded(server):
         assert code == 200 and len(facts) == 3, q
     code, facts = req("GET", f"{server}/v1/stores/lim/subjects/S/facts?limit=2")
     assert code == 200 and len(facts) == 2
+
+
+def test_subject_with_a_slash_or_non_ascii_over_http(server):
+    """A subject is one percent-encoded path segment: ``order/0-1`` (the
+    DCB append subject shape) as ``order%2F0-1``, and a non-ASCII one as
+    its UTF-8 escapes."""
+    req("POST", f"{server}/v1/stores", {"name": "subj"})
+    ids = {}
+    for subject in ("order/0-1", "order/0-10", "kunde:Jürgen/東京"):
+        code, res = req(
+            "POST",
+            f"{server}/v1/stores/subj/facts",
+            {"facts": [{"type": f"T{i}", "subject": subject, "payload": {"data": b64("p")}} for i in range(3)]},
+        )
+        assert code == 200
+        ids[subject] = res["factIds"]
+    code, facts = req("GET", f"{server}/v1/stores/subj/subjects/order%2F0-1/facts?limit=2&direction=backward")
+    assert code == 200 and [f["id"] for f in facts] == ids["order/0-1"][::-1][:2]
+    assert {f["subject"] for f in facts} == {"order/0-1"}
+    quoted = urllib.parse.quote("kunde:Jürgen/東京", safe="")
+    code, facts = req("GET", f"{server}/v1/stores/subj/subjects/{quoted}/facts")
+    assert code == 200 and [f["id"] for f in facts] == ids["kunde:Jürgen/東京"]
+    assert {f["subject"] for f in facts} == {"kunde:Jürgen/東京"}
 
 
 def test_tag_and_time_filters_cannot_combine(server):
