@@ -277,6 +277,19 @@ def _parse_direction(qs) -> ReadDirection:
     return ReadDirection.FORWARD
 
 
+def _parse_tags(qs) -> dict[str, str]:
+    """The ``tag=key=value`` parameters as one AND of tags. A key given
+    twice is a 400: keeping only its last value would drop a condition
+    (and an AND of two values of one key matches nothing)."""
+    tags: dict[str, str] = {}
+    for t in qs.get("tag", []):
+        k, _, v = t.partition("=")
+        if k in tags:
+            raise ValueError(f"tag key {k!r} is repeated")
+        tags[k] = v
+    return tags
+
+
 def _parse_limit(qs):
     """limit <= 0 means unbounded at the HTTP layer — QueryResource.kt:108
     (`if (this != null && this > 0) Limit.of(this) else Limit.None`)."""
@@ -498,7 +511,7 @@ class FactStoreHandler(BaseHTTPRequestHandler):
             self._facts_response(res)
             return
         if len(parts) == 4 and parts[:2] == ["v1", "stores"] and parts[3] == "facts":
-            tags = dict(t.split("=", 1) if "=" in t else (t, "") for t in qs.get("tag", []))
+            tags = _parse_tags(qs)
             if tags:
                 if qs.get("from") or qs.get("to"):
                     # The finder surface has no combined tags+time

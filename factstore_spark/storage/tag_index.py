@@ -17,9 +17,11 @@ job) opens only the queried keys' partitions: ``exists_after`` answers
 the DCB append condition, and ``resolve_positions`` gives the tag
 finders a bounded position list that they read with one pyarrow
 ``position IN (...)`` fact read (store.py). The Spark reader
-(``positions_for_query``) returns a position DataFrame that is
-semi-joined to the fact table, for tag queries and for position sets
-too large to hold on the driver.
+(``positions_for_query``) returns the same position set as a
+DataFrame for a caller to join; the store does not use it: a tag read
+the driver reader cannot bound (an item with no tag under its cap) is
+one scan of the facts with the query's predicate, which reads no more
+files than a semi join of the index's positions to every fact file.
 
 The index is DERIVED state: rebuilt from committed data (idempotent,
 crash-safe — if it is missing or stale, readers fall back to the scan

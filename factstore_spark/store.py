@@ -405,8 +405,8 @@ class FactStore:
         if os.path.isdir(store_dir):
             from .storage.bloomindex import release_sidecar_cache
 
-            # drop every cached sidecar of the store (id index and
-            # tag-value indexes) before its dir vanishes
+            # drop every cached Bloom sidecar under the store's dir
+            # (frames and driver bitsets) before the dir vanishes
             release_sidecar_cache(store_dir)
             shutil.rmtree(store_dir)
         return StoreRemoved(name)
@@ -979,10 +979,9 @@ class FactStore:
     # -- find_by_tags: AND semantics (FdbFactFinder.kt:108-167) ---------
 
     # The driver reads at most this many index rows per queried tag;
-    # past it a tag is left out of its AND item, and an item with no
-    # tag under it resolves through a distributed semi join against the
-    # index — the same bounded-driver-probe rule the dedup operators
-    # use.
+    # past it a tag is left out of its AND item, and a query with an
+    # item that has no tag under it is read by a scan of the view —
+    # the same bounded-driver-probe rule the dedup operators use.
     TAG_INDEX_PUSHDOWN_CAP = 10_000
     # An index-bounded read (finders and the ordered reader's snapshot
     # ranges) runs on the driver (``_driver_facts``: pyarrow, no Spark
@@ -1049,49 +1048,24 @@ class FactStore:
         filter the bound's files: an ``isin`` when few (parquet
         row-group min/max skips the rest), else a position range plus a
         semi join against the list, so no thousands-literal predicate is
-        compiled; a superset is then filtered by the query. With no tag
-        under the cap, the fresh index's Spark position set
-        (``positions_for_query``) is semi-joined to the view's facts up
-        to its head. Otherwise (index stale, absent or mid-swap) the
-        view's facts are scanned with the query's predicate; a one-item
-        query first prunes the snapshot to the candidate files of a
-        fresh tag-value Bloom sidecar built for one of its keys
-        (``build_tag_bloom_index``)."""
-        if b.reason is None:
-            df = self._frame(layout, b.view, b.snap, b.commits)
-            pos = b.pos.tolist()
-            if not pos:
-                df = df.filter(F.lit(False))
+        compiled; a superset is then filtered by the query. When the
+        index cannot bound the read (``b.reason``), the view's facts are
+        scanned once with the query's predicate."""
+        if b.reason is not None:
+            df = self._frame(layout, b.view).filter(tag_query_predicate(query))
+            return ordered_limited(df, limit, direction)
+        df = self._frame(layout, b.view, b.snap, b.commits)
+        pos = b.pos.tolist()
+        if not pos:
+            df = df.filter(F.lit(False))
+        else:
+            rng = (F.col("position") >= pos[0]) & (F.col("position") <= pos[-1])
+            if len(pos) <= self.TAG_INDEX_ISIN_CAP:
+                df = df.filter(rng & F.col("position").isin(pos))
             else:
-                rng = (F.col("position") >= pos[0]) & (F.col("position") <= pos[-1])
-                if len(pos) <= self.TAG_INDEX_ISIN_CAP:
-                    df = df.filter(rng & F.col("position").isin(pos))
-                else:
-                    listed = self.spark.createDataFrame([(p,) for p in pos], "position long")
-                    df = df.filter(rng).join(F.broadcast(listed), "position", "left_semi")
-            return ordered_limited(df if b.exact else df.filter(tag_query_predicate(query)), limit, direction)
-        from .storage.bloomindex import bloom_candidate_files
-        from .storage.tag_index import TagIndex
-
-        indexed = None
-        if b.reason == "no_tag_under_cap":
-            indexed = TagIndex(layout).positions_for_query(self.spark, query)
-        if indexed is not None:
-            df = self._frame(layout, b.view).filter(F.col("position") <= b.view.head)
-            return ordered_limited(df.join(indexed, "position", "left_semi"), limit, direction)
-        snapshot, snap = layout.snapshot_dir(b.view), None
-        one_item = query.items[0].tags if snapshot and len(query.items) == 1 else {}
-        for k, v in one_item.items():
-            idx_dir = self._tag_bloom_dir(layout, k)
-            if not os.path.isdir(idx_dir):
-                continue
-            probe = bloom_candidate_files(self.spark, idx_dir, snapshot, self._tag_key_spec(k), [v])
-            if not probe.stale:
-                cands = set(probe.candidate_files)
-                snap = self._snapshot_files(layout, b.view, lambda f: f[0] in cands)
-                break
-        df = self._frame(layout, b.view, snap).filter(tag_query_predicate(query))
-        return ordered_limited(df, limit, direction)
+                listed = self.spark.createDataFrame([(p,) for p in pos], "position long")
+                df = df.filter(rng).join(F.broadcast(listed), "position", "left_semi")
+        return ordered_limited(df if b.exact else df.filter(tag_query_predicate(query)), limit, direction)
 
     def _find_tags(self, store_name: str, query: TagQuery, limit=None, direction=ReadDirection.FORWARD) -> FindResult:
         """The tag finders' read of ``_tag_bound``: on the driver
@@ -1123,8 +1097,8 @@ class FactStore:
     ) -> Optional[DataFrame]:
         """AND-of-tags finder as a lazy DataFrame: when the derived tag
         index covers the head, the positions it resolves on the driver
-        bound the files and filter the facts; otherwise the index semi
-        join or the scan (``_tags_df`` over ``_tag_bound``). The index
+        bound the files and filter the facts; otherwise a scan of the
+        view (``_tags_df`` over ``_tag_bound``). The index
         is derived state, never a correctness dependency."""
         if not tags:
             raise ValueError("find_by_tags requires at least one tag")
@@ -1146,12 +1120,14 @@ class FactStore:
     # -- find_by_tag_query (FdbFactFinder.kt:169-255) -------------------
 
     def find_by_tag_query_df(self, store_name: str, query: TagQuery) -> Optional[DataFrame]:
-        """OR-of-AND algebra in one scan; global position order; no
-        limit/direction by spec (FindByTagQueryRequest.kt:3-6)."""
-        df = self.facts_df(store_name)
-        if df is None:
+        """OR-of-AND tag query as a lazy DataFrame (``_tags_df`` over
+        ``_tag_bound``), in global position order; no limit/direction by
+        spec (FindByTagQueryRequest.kt:3-6)."""
+        meta = self.catalog.find_by_name(store_name)
+        if meta is None:
             return None
-        return df.filter(tag_query_predicate(query)).orderBy(F.col("position").asc())
+        layout = self._layout(meta.id)
+        return self._tags_df(layout, query, self._tag_bound(layout, query))
 
     def find_by_tag_query(self, store_name: str, query: TagQuery) -> FindResult:
         """Tag query, read as ``_find_tags`` does."""
@@ -1198,52 +1174,6 @@ class FactStore:
         stats["built"] = True
         return stats
 
-    @staticmethod
-    def _tag_bloom_dir(layout, tag_key: str) -> str:
-        # hex-encoded key: any tag key becomes a safe dir name
-        return os.path.join(
-            layout.store_dir, f"tagbloom-{tag_key.encode('utf-8').hex()}"
-        )
-
-    @staticmethod
-    def _tag_key_spec(tag_key: str) -> str:
-        if "'" in tag_key or "\\" in tag_key:
-            raise ValueError(
-                f"tag key {tag_key!r} cannot carry quotes/backslashes "
-                "into an index expression"
-            )
-        return f"tags['{tag_key}']"
-
-    def build_tag_bloom_index(self, store_name: str, tag_key: str):
-        """Build (or rebuild) a Bloom sidecar over the DERIVED column
-        ``tags['<tag_key>']`` of the compacted snapshot — the point-
-        probe fast path for a single high-cardinality tag VALUE on a
-        store with NO tag index (or one whose rebuild lags): a
-        find_by_tags probe on that key then opens only the candidate
-        files, like findById does through the id sidecar. Unlike the
-        tag index (every key, positions, refresh protocol) this is one
-        cheap per-file bitset for one chosen key — the
-        "index the one key the workload probes" knob. Returns stats,
-        ``{"built": False, ...}`` before the first compaction, or
-        StoreNotFound."""
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return StoreNotFound(store_name)
-        from .storage.bloomindex import build_bloom_index
-
-        layout = self._layout(meta.id)
-        comp_dir, _tail = layout.data_layout()
-        if comp_dir is None:
-            return {"built": False, "reason": "no compacted snapshot"}
-        stats = build_bloom_index(
-            self.spark,
-            comp_dir,
-            self._tag_key_spec(tag_key),
-            self._tag_bloom_dir(layout, tag_key),
-        )
-        stats["built"] = True
-        return stats
-
     def refresh_tag_index(self, store_name: str):
         """Incrementally extend the tag index to the current head
         (appends only commits > built_through; see TagIndex.refresh).
@@ -1254,22 +1184,6 @@ class FactStore:
         from .storage.tag_index import TagIndex
 
         return TagIndex(self._layout(meta.id)).refresh(self.spark)
-
-    def find_by_tag_query_indexed_df(
-        self, store_name: str, query: TagQuery
-    ) -> Optional[DataFrame]:
-        """Tag query as a lazy DataFrame, resolved through the derived
-        index as ``find_by_tags_df`` is (``_tags_df`` over
-        ``_tag_bound``), in global position order."""
-        meta = self.catalog.find_by_name(store_name)
-        if meta is None:
-            return None
-        layout = self._layout(meta.id)
-        return self._tags_df(layout, query, self._tag_bound(layout, query))
-
-    def find_by_tag_query_indexed(self, store_name: str, query: TagQuery) -> FindResult:
-        """The same finder as ``find_by_tag_query``."""
-        return self.find_by_tag_query(store_name, query)
 
     def _materialize(self, df: Optional[DataFrame], store_name: str) -> FindResult:
         if df is None:

@@ -845,55 +845,6 @@ def test_derived_key_semi_join_matches_filter(spark, store_root):
     assert sorted(r.pos for r in got.collect()) == want
 
 
-def test_store_tag_bloom_fast_path(fs, spark):
-    """build_tag_bloom_index + find_by_tags on an UNINDEXED store: the
-    tag-value sidecar prunes the compacted snapshot and results equal
-    the scan path, including post-compaction tail appends and
-    staleness degradation after a re-compaction."""
-    from factstore_spark.model import FactInput
-
-    fs.create("tb")
-    for i in range(60):
-        fs.append(
-            "tb",
-            FactInput(
-                type="T", subject=f"s{i}",
-                tags={"bkt": f"b{i % 20}", "env": "prod"},
-            ),
-        )
-    fs.compact("tb")
-    st = fs.build_tag_bloom_index("tb", "bkt")
-    assert st["built"] is True
-    # fast path (no tag index built): results equal the filter answer
-    got = fs.find_by_tags("tb", {"bkt": "b7"})
-    assert sorted(f.subject for f in got.facts) == ["s27", "s47", "s7"]
-    # AND-semantics still exact through the pruned path
-    got = fs.find_by_tags("tb", {"bkt": "b7", "env": "prod"})
-    assert len(got.facts) == 3
-    got = fs.find_by_tags("tb", {"bkt": "b7", "env": "dev"})
-    assert list(got.facts) == []
-    # tail appends after the index build are still found
-    fs.append("tb", FactInput(type="T", subject="late", tags={"bkt": "b7"}))
-    got = fs.find_by_tags("tb", {"bkt": "b7"})
-    assert sorted(f.subject for f in got.facts) == ["late", "s27", "s47", "s7"]
-    # re-compaction stales the sidecar -> silent degradation, exact
-    fs.compact("tb")
-    got = fs.find_by_tags("tb", {"bkt": "b7"})
-    assert sorted(f.subject for f in got.facts) == ["late", "s27", "s47", "s7"]
-
-
-def test_store_tag_bloom_rejects_quoted_key(fs):
-    import pytest as _pytest
-
-    fs.create("tbq")
-    from factstore_spark.model import FactInput
-
-    fs.append("tbq", FactInput(type="T", subject="x", tags={"k": "v"}))
-    fs.compact("tbq")
-    with _pytest.raises(ValueError, match="quotes"):
-        fs.build_tag_bloom_index("tbq", "bad'key")
-
-
 # --- r14 batched probe (bloom_candidate_files_multi / merge_probes) ---
 
 
@@ -1130,20 +1081,20 @@ def test_indexed_point_reads_run_one_job(fs, spark):
 
 
 def test_remove_releases_every_cached_sidecar_of_the_store(fs, spark):
-    """Removing a store drops the cached sidecars of all its indexes —
-    the id index and the tag-value indexes, frames and driver bitsets."""
+    """Removing a store drops the cached sidecars of every index under
+    its dir — the id index and a derived-key index, frames and driver
+    bitsets."""
     from factstore_spark.storage import bloomindex
 
     ids = _seed(fs, 20)
     fs.compact(STORE)
     fs.build_id_index(STORE)
-    assert fs.build_tag_bloom_index(STORE, "p")["built"]
     meta = fs.catalog.find_by_name(STORE)
     layout = fs._layout(meta.id)
     comp_dir, _ = layout.data_layout()
-    tag_idx = fs._tag_bloom_dir(layout, "p")
-    # no tag index: find_by_tags probes the tag-value sidecar
-    assert len(fs.find_by_tags(STORE, {"p": "1"}).facts) == 10
+    tag_idx = os.path.join(layout.store_dir, "tagbloom-p")
+    bloomindex.build_bloom_index(spark, comp_dir, "tags['p']", tag_idx)
+    assert bloomindex.bloom_candidate_files(spark, tag_idx, comp_dir, "tags['p']", ["1"]).candidate_files
     assert isinstance(fs.find_by_id(STORE, ids[3]), FactFound)
     keys = spark.createDataFrame([("1",)], "v string")
     assert bloomindex.pruned_semi_join(

@@ -179,7 +179,7 @@ def test_maintain_runs_full_cycle(fs, spark):
     assert len(StoreLayout(layout.store_dir).read_commits()) == 1  # folded
     assert TagIndex(layout).is_fresh()  # indexed paths live
     assert [f.id for f in fs.find_by_tags(STORE, {"env": "dev"}).facts] == before_tags
-    assert [f.id for f in fs.find_by_tag_query_indexed(STORE, q).facts] == before_q
+    assert [f.id for f in fs.find_by_tag_query(STORE, q).facts] == before_q
     # idempotency and appends still intact after the full cycle
     assert isinstance(
         fs.append(STORE, FactInput(type="X", subject="s0"),

@@ -160,7 +160,7 @@ def test_tag_query_with_an_over_cap_tag_in_an_and_item(spark, bench):
     for q in queries:
         got = _on_driver(spark, lambda: fs.find_by_tag_query(STORE, q))
         assert got.facts == _facts(fs, fs.find_by_tag_query_df(STORE, q)), q
-        assert fs.find_by_tag_query_indexed(STORE, q).facts == got.facts
+        assert fs.find_by_tag_query(STORE, q).facts == got.facts
         nonempty += bool(got.facts)
     assert nonempty == len(queries)
 
@@ -435,7 +435,7 @@ def test_each_finder_call_resolves_its_bound_once(bench, monkeypatch):
     for fn in (
         lambda: fs.find_by_id_df(STORE, "seed-7"),
         lambda: fs.find_by_tags_df(STORE, {"user": "1"}, 5, BACK),
-        lambda: fs.find_by_tag_query_indexed_df(STORE, query),
+        lambda: fs.find_by_tag_query_df(STORE, query),
         lambda: fs.find_in_time_range_df(STORE, TimeRange(), 9, BACK),
         lambda: fs.find_by_subject_df(STORE, "user:1", 5, BACK),
     ):

@@ -8,7 +8,7 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from factstore_spark import FactInput, ReadDirection
+from factstore_spark import FactInput, ReadDirection, TagOnlyQueryItem, TagQuery
 from factstore_spark.queries import REGISTRY
 
 # Single source for the testdata path (was hardcoded at ~15 call sites).
@@ -140,13 +140,16 @@ def test_indexed_find_by_tags_avoids_full_fact_scan(fs):
     )
     assert fs.compact(STORE)["compacted"]
     assert fs.build_tag_index(STORE)["built"]
-    df = fs.find_by_tags_df(STORE, {"env": "dev"})
-    plan = plan_of(df)
-    # positions resolved from the index were pushed into the fact scan
-    pushed = plan.split("PushedFilters", 1)[1][:400]
-    assert "position" in pushed
-    # the tags-map scan predicate is gone: no map lookup in the plan
-    assert "tags[" not in plan
+    for df in (
+        fs.find_by_tags_df(STORE, {"env": "dev"}),
+        fs.find_by_tag_query_df(STORE, TagQuery([TagOnlyQueryItem({"env": "dev"})])),
+    ):
+        plan = plan_of(df)
+        # positions resolved from the index were pushed into the fact scan
+        pushed = plan.split("PushedFilters", 1)[1][:400]
+        assert "position" in pushed
+        # the tags-map scan predicate is gone: no map lookup in the plan
+        assert "tags[" not in plan
     # results identical to the (pre-index-capture) scan semantics
     got = [(f.type, f.subject) for f in fs.find_by_tags(STORE, {"env": "dev"}).facts]
     assert len(got) == 15

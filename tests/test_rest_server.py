@@ -221,6 +221,23 @@ def test_tag_and_time_filters_cannot_combine(server):
     assert code == 400 and "combined" in err["error"]
 
 
+def test_repeated_tag_key_is_a_400_not_a_dropped_condition(server):
+    """``tag=user=1&tag=user=2`` names one key twice: answering with
+    either value's facts would drop the other condition."""
+    req("POST", f"{server}/v1/stores", {"name": "rep"})
+    for user in ("1", "2"):
+        code, _ = req(
+            "POST",
+            f"{server}/v1/stores/rep/facts",
+            {"facts": [{"type": "T", "subject": "S", "payload": {"data": b64("p")}, "tags": {"user": user}}]},
+        )
+        assert code == 200
+    code, err = req("GET", f"{server}/v1/stores/rep/facts?tag=user=1&tag=user=2")
+    assert code == 400 and "'user'" in err["error"]
+    code, facts = req("GET", f"{server}/v1/stores/rep/facts?tag=user=2")
+    assert code == 200 and [f["tags"] for f in facts] == [{"user": "2"}]
+
+
 def test_naive_from_to_read_as_utc(server):
     """A bare from/to stamp is UTC: the same facts as its Z form (the
     RPC transport parses instants with the same helper)."""

@@ -212,5 +212,5 @@ def test_compaction_and_tag_index_maintenance_path(fs, spark, sf_dir):
     assert after_scan == before
 
     fs.build_tag_index("maint-store")
-    after_idx = [f.id for f in fs.find_by_tag_query_indexed("maint-store", q).facts]
+    after_idx = [f.id for f in fs.find_by_tag_query("maint-store", q).facts]
     assert after_idx == before

@@ -154,7 +154,7 @@ def test_indexed_query_falls_back_when_index_tree_vanishes(spark, tmp_path):
     shutil.rmtree(tidx.index_dir)  # meta still says fresh
     got = fs.find_by_tags("s", {"k": "v"})
     assert len(got.facts) == 1
-    got2 = fs.find_by_tag_query_indexed("s", TagQuery([TagOnlyQueryItem({"k": "v"})]))
+    got2 = fs.find_by_tag_query("s", TagQuery([TagOnlyQueryItem({"k": "v"})]))
     assert len(got2.facts) == 1
 
 
@@ -211,7 +211,7 @@ def test_indexed_finders_see_commits_landed_during_compaction(spark, tmp_path):
 
     from factstore_spark.model import TagOnlyQueryItem, TagQuery
 
-    got2 = fs.find_by_tag_query_indexed("s", TagQuery([TagOnlyQueryItem({"k": "v"})]))
+    got2 = fs.find_by_tag_query("s", TagQuery([TagOnlyQueryItem({"k": "v"})]))
     assert {f.subject for f in got2.facts} == {"a", "b"}
 
 

@@ -3,6 +3,7 @@ finder on randomized corpora, go stale safely, and refresh."""
 
 import os
 import random
+import re
 
 from factstore_spark import FactInput, TagOnlyQueryItem, TagQuery, TagTypeItem
 
@@ -45,7 +46,7 @@ def test_indexed_tag_query_matches_scan_path(fs):
     nonempty = 0
     for q in queries_under_test():
         scan = fs.find_by_tag_query(STORE, q)
-        indexed = fs.find_by_tag_query_indexed(STORE, q)
+        indexed = fs.find_by_tag_query(STORE, q)
         assert [f.id for f in indexed.facts] == [f.id for f in scan.facts], q
         nonempty += bool(scan.facts)
     # [] == [] across all four queries proves nothing — the fixed seed
@@ -62,7 +63,7 @@ def test_stale_index_falls_back_to_scan(fs):
     new_id = res.fact_ids[0]
     q = TagQuery([TagOnlyQueryItem({"k1": "a"})])
     scan = fs.find_by_tag_query(STORE, q)
-    indexed = fs.find_by_tag_query_indexed(STORE, q)
+    indexed = fs.find_by_tag_query(STORE, q)
     # The staleness-inducing fact must be VISIBLE in both paths — a
     # shared stale snapshot would otherwise make indexed == scan hold
     # with both wrong.
@@ -70,7 +71,7 @@ def test_stale_index_falls_back_to_scan(fs):
     assert [f.id for f in indexed.facts] == [f.id for f in scan.facts]
     # Rebuild restores the indexed path.
     fs.build_tag_index(STORE)
-    indexed2 = fs.find_by_tag_query_indexed(STORE, q)
+    indexed2 = fs.find_by_tag_query(STORE, q)
     assert [f.id for f in indexed2.facts] == [f.id for f in scan.facts]
 
 
@@ -96,7 +97,7 @@ def test_incremental_refresh_covers_new_commits(fs):
 
     for q in queries_under_test() + [TagQuery([TagOnlyQueryItem({"k9": "z"})])]:
         scan = [f.id for f in fs.find_by_tag_query(STORE, q).facts]
-        idx = [f.id for f in fs.find_by_tag_query_indexed(STORE, q).facts]
+        idx = [f.id for f in fs.find_by_tag_query(STORE, q).facts]
         assert idx == scan
     # The k9 probe targets the refreshed increment specifically — it
     # must have found the 5 new facts, not compared empty to empty.
@@ -305,11 +306,12 @@ def test_numeric_looking_tag_keys_resolve_on_the_driver(fs):
     assert isinstance(res, AppendConditionViolated)
 
 
-def test_find_by_tags_past_the_driver_cap_semi_joins_in_spark(fs):
+def test_find_by_tags_past_the_driver_cap_scans_in_spark(fs):
     """A tag matching more index rows than TAG_INDEX_PUSHDOWN_CAP is
-    not read onto the driver past the cap: the finder semi-joins the
-    index's Spark position set instead, and still equals the scan path
-    with a limit and a direction."""
+    not read onto the driver past the cap: the finder is a counted
+    ``no_tag_under_cap`` fallback that scans the facts with the tags
+    predicate (no join against the index), and still equals the scan
+    path with a limit and a direction."""
     from factstore_spark.model import ReadDirection
 
     fs.create(STORE)
@@ -327,8 +329,89 @@ def test_find_by_tags_past_the_driver_cap_semi_joins_in_spark(fs):
     assert fs.build_tag_index(STORE)["built"]
     fs.TAG_INDEX_PUSHDOWN_CAP = 10  # 30 "hot" and 15 "odd" rows: both past it
     df = fs.find_by_tags_df(STORE, tags, limit=4, direction=back)
-    assert "LeftSemi" in df._jdf.queryExecution().executedPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # no join against the index; the scan filters on the tags map
+    # (rendered ``tags#<id>[hot]``)
+    assert "LeftSemi" not in plan and re.search(r"Filter .*tags#\d+\[hot\]", plan)
+    before = fs.spark_fallbacks.counts()["no_tag_under_cap"]
     assert [f.id for f in fs.find_by_tags(STORE, tags, limit=4, direction=back).facts] == want
+    assert fs.spark_fallbacks.counts()["no_tag_under_cap"] == before + 1
+
+
+def test_every_unbounded_tag_read_is_one_counted_predicate_scan(fs):
+    """``absent``, ``stale``, ``swap`` and ``no_tag_under_cap``: each
+    reason the index cannot bound a tag read sends ``find_by_tags`` and
+    ``find_by_tag_query`` to one scan of the log view filtered on the
+    tags map (no join against the index), counted under that reason,
+    with the facts of the fresh index."""
+    import shutil
+
+    from factstore_spark.storage.tag_index import TagIndex
+
+    seed_random(fs, random.Random(7))
+    tags = {"k1": "a", "k2": "b"}
+    q = TagQuery([TagOnlyQueryItem(tags), TagTypeItem({"T2"}, {"k3": "a"})])
+    finders = [
+        (lambda: fs.find_by_tags_df(STORE, tags), lambda: fs.find_by_tags(STORE, tags)),
+        (lambda: fs.find_by_tag_query_df(STORE, q), lambda: fs.find_by_tag_query(STORE, q)),
+    ]
+    tidx = TagIndex(fs._layout(fs.catalog.find_by_name(STORE).id))
+
+    def read(reason):
+        out = []
+        for to_df, find in finders:
+            df = to_df()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Join" not in plan and re.search(r"Filter .*tags#\d+\[k1\]", plan), reason
+            before = fs.spark_fallbacks.counts()
+            got = [f.id for f in find().facts]
+            before[reason] += 1
+            assert fs.spark_fallbacks.counts() == before, reason
+            assert [r.id for r in df.collect()] == got, reason
+            out.append(got)
+        return out
+
+    absent = read("absent")
+    assert fs.build_tag_index(STORE)["built"]
+    before = fs.spark_fallbacks.counts()
+    want = [[f.id for f in find().facts] for _, find in finders]
+    assert fs.spark_fallbacks.counts() == before  # the fresh index bounds both
+    assert all(want) and absent == want
+    fs.TAG_INDEX_PUSHDOWN_CAP = 1  # every tag of every item is past it
+    assert read("no_tag_under_cap") == want
+    del fs.TAG_INDEX_PUSHDOWN_CAP
+    res = fs.append(STORE, FactInput(type="T1", subject="late", tags=tags))
+    want = [ids + list(res.fact_ids) for ids in want]
+    assert read("stale") == want
+    assert fs.build_tag_index(STORE)["built"]
+    shutil.rmtree(tidx.index_dir)  # meta still says fresh
+    assert read("swap") == want
+
+
+def test_unindexed_compacted_store_scans_with_tail_and_recompaction(fs):
+    """With no tag index, ``find_by_tags`` over a compacted snapshot is
+    a counted ``absent`` scan: AND semantics hold, a tail appended
+    after the compaction is found, and a re-compaction changes no
+    answer."""
+    fs.create("tb")
+    fs.append(
+        "tb",
+        [
+            FactInput(type="T", subject=f"s{i}", tags={"bkt": f"b{i % 20}", "env": "prod"})
+            for i in range(60)
+        ],
+    )
+    assert fs.compact("tb")["compacted"]
+    before = fs.spark_fallbacks.counts()["absent"]
+    assert sorted(f.subject for f in fs.find_by_tags("tb", {"bkt": "b7"}).facts) == ["s27", "s47", "s7"]
+    assert len(fs.find_by_tags("tb", {"bkt": "b7", "env": "prod"}).facts) == 3
+    assert list(fs.find_by_tags("tb", {"bkt": "b7", "env": "dev"}).facts) == []
+    fs.append("tb", FactInput(type="T", subject="late", tags={"bkt": "b7"}))
+    want = ["late", "s27", "s47", "s7"]
+    assert sorted(f.subject for f in fs.find_by_tags("tb", {"bkt": "b7"}).facts) == want
+    assert fs.compact("tb")["compacted"]
+    assert sorted(f.subject for f in fs.find_by_tags("tb", {"bkt": "b7"}).facts) == want
+    assert fs.spark_fallbacks.counts()["absent"] == before + 5
 
 
 def test_meta_rewrite_that_dies_mid_write_keeps_the_previous_value(fs, monkeypatch):
